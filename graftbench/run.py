@@ -2,7 +2,7 @@
 """graft benchmark runner.
 
 Usage (from the repository root):
-    python3 graftbench/run.py --workload <ingest|serve|disk> --seed <n> \
+    python3 graftbench/run.py --workload <serve|disk> --seed <n> \
         --seconds <s> --trace <0|1>
 
 Builds the engine and the benchmark from source with sbt (once per source
@@ -76,7 +76,7 @@ def classpath():
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=["ingest", "serve", "disk"])
+    ap.add_argument("--workload", required=True, choices=["serve", "disk"])
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=int)
     ap.add_argument("--trace", required=True, choices=["0", "1"])

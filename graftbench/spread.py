@@ -3,7 +3,9 @@
 
 Usage (from the repository root):
     python3 graftbench/spread.py --workload serve --seeds 1,2,3,4,5 \
-        [--seconds 5] [--trace 0] [--out runs.jsonl]
+        [--seconds S] [--trace 0] [--out runs.jsonl]
+
+--seconds defaults to run_seconds of BENCHMARK.json.
 
 For every metric prints the median, first and third quartiles
 (statistics.quantiles, n=4) and the quartile spread as a share of the
@@ -22,7 +24,8 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True)
-    ap.add_argument("--seconds", type=int, default=5)
+    ap.add_argument("--seconds", type=int,
+                    default=json.load(open("BENCHMARK.json"))["run_seconds"])
     ap.add_argument("--trace", default="0")
     ap.add_argument("--out")
     a = ap.parse_args()

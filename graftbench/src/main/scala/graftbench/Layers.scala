@@ -14,9 +14,11 @@ object Layers {
 
   /** Probes every workload reports: analysis, the build's Spark work, the
     * codec, index bytes, the resident kernel and the stream's properties.
+    * `runs` gives the queries the workload runs for one request. Returns the
+    * kernel's mean time per request, in µs.
     */
   def common(r: Run, idxDir: String, idx: IndexHandle, mem: InMemoryIndex,
-      reqs: Seq[Req], build: (Double, SparkWork, Long)): Unit = {
+      reqs: Seq[Req], build: (Double, SparkWork, Long), runs: QuerySpec => Seq[QuerySpec]): Double = {
     analysis(r, reqs, idx)
     buildWork(r, build)
     val segs = r.tracer.span("index.read.segments_full") {
@@ -31,8 +33,8 @@ object Layers {
     r.put("index.files", Steps.files(idxDir).keys.count(_.endsWith(".parquet")).toDouble)
     r.put("query.resident_mb", mb(mem.loadedBytes))
     val df = InMemoryIndex.loadGlobalDf(r.spark, idx)
-    kernel(r, mem, reqs.take(Size.LayerRequests), df)
-    streamProps(r, mem, reqs.take(Size.StreamProps), df)
+    streamProps(r, mem, reqs.take(Size.StreamProps), df, runs)
+    kernel(r, mem, reqs.take(Size.StreamProps), df, runs)
   }
 
   def analysis(r: Run, reqs: Seq[Req], idx: IndexHandle): Unit = {
@@ -106,42 +108,64 @@ object Layers {
     r.put("index.codec.encode_postings_per_s", n / ((System.nanoTime() - t1) / 1e9))
   }
 
-  private def sumDf(q: QuerySpec, df: Map[(String, String), Long]): Long =
-    Bm25Query.queryTerms(q).map(t => df.getOrElse((q.lang, t._1), 0L)).sum
+  private def terms(q: QuerySpec): Seq[String] = Bm25Query.queryTerms(q).map(_._1)
 
-  /** Resident kernel (`searchPartial`) per query shape, its cost per
-    * posting of the query's terms, and page materialization
-    * (`search` minus `searchPartial`). Second of two passes.
+  /** Resident kernel (`searchPartial`) per request shape, its cost per
+    * posting of the query terms, and page materialization (`search` minus
+    * `searchPartial`); a request's time sums the queries it runs. Second of
+    * two passes. Returns the mean kernel µs per request.
     */
-  def kernel(r: Run, mem: InMemoryIndex, reqs: Seq[Req], df: Map[(String, String), Long]): Unit = {
+  def kernel(r: Run, mem: InMemoryIndex, reqs: Seq[Req], df: Map[(String, String), Long],
+      runs: QuerySpec => Seq[QuerySpec]): Double = {
     var times: Seq[(Req, Double, Double)] = Nil
     for (pass <- 0 until 2) {
       times = reqs.map { q =>
-        val t0 = System.nanoTime()
-        r.tracer.span("query.kernel", "", q.id.toLong) { mem.searchPartial(q.spec) }
-        val k = us(t0)
-        val t1 = System.nanoTime()
-        r.tracer.span("query.search", "", q.id.toLong) { mem.search(q.spec) }
-        (q, k, us(t1))
+        runs(q.spec).map { spec =>
+          val t0 = System.nanoTime()
+          r.tracer.span("query.kernel", "", q.id.toLong) { mem.searchPartial(spec) }
+          val k = us(t0)
+          val t1 = System.nanoTime()
+          r.tracer.span("query.search", "", q.id.toLong) { mem.search(spec) }
+          (k, us(t1))
+        }.foldLeft((q, 0.0, 0.0)) { case ((q, k, s), (k1, s1)) => (q, k + k1, s + s1) }
       }
     }
     Seq("and", "any", "phrase", "filtered").foreach { s =>
       val ks = times.filter(_._1.kernelShape == s).map(_._2)
       r.put(s"query.kernel_us.$s", if (ks.isEmpty) 0.0 else Stats.median(ks))
     }
-    val posts = times.map(t => sumDf(t._1.spec, df)).sum
+    val posts = times.map(t => runs(t._1.spec).map(sumDf(_, df)).sum).sum
     r.put("query.kernel_ns_per_posting", if (posts == 0) 0.0 else times.map(_._2).sum * 1e3 / posts)
     r.put("query.materialize_us", Stats.median(times.map(t => t._3 - t._2)))
+    times.map(_._2).sum / times.size
   }
 
-  /** Properties of the stream: zero-hit share, distinct analyzed terms (the
-    * df-cache working set) and mean Σdf per query. Exact counts.
+  private def sumDf(q: QuerySpec, df: Map[(String, String), Long]): Long =
+    terms(q).map(t => df.getOrElse((q.lang, t), 0L)).sum
+
+  /** Properties of the queries the workload runs (`runs` of each request):
+    * the share of requests with zero hits, distinct analyzed terms (the
+    * df-cache working set), mean Σdf per query, the posting lengths of the
+    * query terms in blocks of 128 (one entry per term of each query), and
+    * the share of ANY queries that reach `trackTotalHits` matches, past
+    * which WAND pruning engages. Exact counts.
     */
-  def streamProps(r: Run, mem: InMemoryIndex, reqs: Seq[Req], df: Map[(String, String), Long]): Unit = {
-    r.put("stream.zero_hit_share", reqs.count(q => mem.search(q.spec).totalHits == 0).toDouble / reqs.size)
-    r.put("stream.distinct_terms",
-      reqs.flatMap(q => Bm25Query.queryTerms(q.spec).map(t => (q.spec.lang, t._1))).distinct.size)
-    r.put("stream.sum_df_per_query", reqs.map(q => sumDf(q.spec, df)).sum.toDouble / reqs.size)
+  def streamProps(r: Run, mem: InMemoryIndex, reqs: Seq[Req], df: Map[(String, String), Long],
+      runs: QuerySpec => Seq[QuerySpec]): Unit = {
+    val specs = reqs.map(q => runs(q.spec))
+    r.put("stream.zero_hit_share",
+      specs.count(_.forall(mem.search(_).totalHits == 0)).toDouble / reqs.size)
+    r.put("stream.distinct_terms", specs.flatten.flatMap(q => terms(q).map((q.lang, _))).distinct.size)
+    r.put("stream.sum_df_per_query", specs.flatten.map(sumDf(_, df)).sum.toDouble / specs.flatten.size)
+    val blocks = specs.flatten.flatMap(q => terms(q).map { t =>
+      math.ceil(df.getOrElse((q.lang, t), 0L).toDouble / graft.index.Postings.BlockSize)
+    })
+    r.put("stream.term_blocks_p50", if (blocks.isEmpty) 0.0 else Stats.quantile(blocks, 0.5))
+    r.put("stream.term_blocks_p90", if (blocks.isEmpty) 0.0 else Stats.quantile(blocks, 0.9))
+    r.put("stream.term_blocks_max", if (blocks.isEmpty) 0.0 else blocks.max)
+    val any = specs.flatten.filter(q => q.mode == "any" && !q.phrase)
+    r.put("stream.any_capped_share", if (any.isEmpty) 0.0 else
+      any.count(q => mem.search(q).totalHits >= q.trackTotalHits).toDouble / any.size)
   }
 
   /** Update batches: medians per batch, and the reload's fingerprint read. */

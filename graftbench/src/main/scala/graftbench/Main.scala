@@ -52,6 +52,7 @@ object Metrics {
     "query.kernel_us.filtered" -> "us",
     "query.kernel_ns_per_posting" -> "ns",
     "query.materialize_us" -> "us",
+    "query.kernel_share" -> "ratio",
     "query.resident_mb" -> "MB",
     "query.p99_ms" -> "ms",
     "query.disk.df_ms" -> "ms",
@@ -67,31 +68,49 @@ object Metrics {
     "jvm.build_gc_s" -> "s",
     "stream.zero_hit_share" -> "ratio",
     "stream.distinct_terms" -> "count",
-    "stream.sum_df_per_query" -> "postings") ++
+    "stream.sum_df_per_query" -> "postings",
+    "stream.term_blocks_p50" -> "blocks",
+    "stream.term_blocks_p90" -> "blocks",
+    "stream.term_blocks_max" -> "blocks",
+    "stream.any_capped_share" -> "ratio") ++
     EndToEnd.map { case (n, _) => s"trace.overhead.$n" -> "ratio" }
 
   val Units: Map[String, String] = (EndToEnd ++ PerLayer).toMap
 }
 
-/** Sizes of one run. Small on purpose: a run must fit its share of the
-  * measuring budget on a 4-core host, Spark start and checks included.
+/** Sizes of one run. A run must fit its share of the measuring budget on a
+  * 4-core host, Spark start and checks included.
   */
 object Size {
-  val Docs = 2000L
-  /** serve and disk build one chunk; ingest builds several, its resume unit. */
+  /** hi holds half the docs, so a head term's postings span up to 16
+    * blocks of 128, and an ANY query over head terms passes the default
+    * trackTotalHits (1000 matches), past which WAND pruning engages. Larger
+    * corpora do not fit a run's share of the measuring budget.
+    */
+  val Docs = 4000L
   val Chunks = 1
-  val IngestChunks = 2
-  /** Untimed closed-loop seconds before the timed loop (JIT warm-up). */
-  val WarmupSeconds = 3
-  /** Pass 0 pays JIT warm-up; the median over passes keeps it out. */
-  val SetupPasses = 3
+  /** Set-up pass 0 runs over this slice of the corpus. It pays the JIT and
+    * Spark's first-job costs, which every later pass would otherwise carry
+    * unevenly, and is not counted.
+    */
+  val ColdDocs = 500L
+  /** Counted set-up passes over the whole corpus; setup_s is their median. */
+  val SetupPasses = 2
+  /** Warm-up rounds of identical work run until the last three agree
+    * within this share (JIT settled), or until [[WarmupMaxSeconds]] have
+    * passed.
+    */
+  val SteadyTolerance = 0.05
+  val WarmupMaxSeconds = 5
+  /** Requests of one disk warm-up round. */
+  val DiskWarmRequests = 10
   val ServeRequests = 300
   val StreamProps = 300
   val OracleSamples = 2
-  val Batches = 2
+  val Batches = 1
   val BatchDocs = 20
-  val WarmDocs = 400L
-  val LayerRequests = 200
+  /** Requests each layer probe replays. */
+  val LayerRequests = 100
 }
 
 /** State shared by one run: the session, its scratch dir, the seed, the
@@ -127,7 +146,7 @@ final class Run(val spark: SparkSession, val work: String, val seed: Long,
   def rm(name: String): Unit = graft.tools.CpuProbe.rmDir(dir(name))
 }
 
-/** Entry point: `--workload <ingest|serve|disk> --seed <n> --seconds <s>
+/** Entry point: `--workload <serve|disk> --seed <n> --seconds <s>
   * --trace <0|1> --work <dir> [--spans <file>]`. Prints a host-context line, then as the last
   * line the result object; exits 1 when a correctness check failed.
   */
@@ -141,7 +160,6 @@ object Main {
     val traced = opts("trace") == "1"
     val work = opts("work")
     val w: Workload = workload match {
-      case "ingest" => new Ingest
       case "serve"  => new Serve
       case "disk"   => new Disk
       case other    => sys.error(s"unknown workload $other")
@@ -192,9 +210,13 @@ object Main {
 
 /** A workload: set-up passes, a timed phase, checks, and layer probes. */
 trait Workload {
-  /** One set-up pass; only the pass with `keep` leaves its state in place. */
-  def setup(run: Run, pass: Int, keep: Boolean): Unit
-  /** The timed phase: fills the end-to-end metrics other than `setup_s`. */
+  /** One set-up pass over `docs` docs; only the pass with `keep` leaves its
+    * state in place.
+    */
+  def setup(run: Run, pass: Int, docs: Long, keep: Boolean): Unit
+  /** The timed phase: warms up until steady, then fills the end-to-end
+    * metrics other than `setup_s`.
+    */
   def timed(run: Run, into: scala.collection.mutable.Map[String, Double]): Unit
   /** Correctness checks beyond the per-operation ones of the timed phase. */
   def check(run: Run): Unit
@@ -213,26 +235,49 @@ object Harness {
     s
   }
 
-  def run(r: Run, w: Workload): Unit = {
-    val passes = (0 until Size.SetupPasses).map { p =>
-      step(s"setup pass $p") { w.setup(r, p, keep = p == Size.SetupPasses - 1) }
+  /** Runs warm-up rounds of identical work until the last three take times
+    * within [[Size.SteadyTolerance]] of each other, or the time cap passes.
+    */
+  def warm(name: String)(round: => Unit): Unit = {
+    val end = System.nanoTime() + Size.WarmupMaxSeconds * 1000000000L
+    val secs = scala.collection.mutable.ArrayBuffer[Double]()
+    def steady = secs.size >= 3 && secs.takeRight(3).max <= secs.takeRight(3).min * (1 + Size.SteadyTolerance)
+    while (!steady && System.nanoTime() < end) {
+      val t0 = System.nanoTime()
+      round
+      secs += (System.nanoTime() - t0) / 1e9
     }
-    val setup = Stats.median(passes)
-    val e2e = scala.collection.mutable.LinkedHashMap[String, Double]("setup_s" -> setup)
+    System.err.println(f"[graftbench] $name warm-up: ${secs.size} rounds, ${secs.sum}%.2f s, steady=$steady " +
+      secs.map(s => f"$s%.2f").mkString("(", " ", ")"))
+  }
+
+  def run(r: Run, w: Workload): Unit = {
+    step("setup pass 0 (cold, not counted)") { w.setup(r, 0, Size.ColdDocs, keep = false) }
+    val passes = (1 to Size.SetupPasses).map { p =>
+      step(s"setup pass $p") { w.setup(r, p, r.docs, keep = p == Size.SetupPasses) }
+    }
+    val e2e = scala.collection.mutable.LinkedHashMap[String, Double]("setup_s" -> Stats.median(passes))
     step("timed") { w.timed(r, e2e) }
     step("check") { w.check(r) }
     e2e.foreach { case (k, v) => r.put(k, v) }
     if (r.traced) {
-      // the same set-up and timed phase again with spans on; the ratio to
-      // the untraced figures is the tracing overhead
+      // one more set-up pass and timed phase with spans on, then the timed
+      // phase once more with spans off. The traced phase is compared with
+      // the mean of the untraced phases on either side of it, so warm-up
+      // still going on during the run cancels out of the tracing overhead.
       r.tracer.on = true
       val t0 = System.nanoTime()
-      r.tracer.span("setup") { w.setup(r, Size.SetupPasses, keep = false) }
+      r.tracer.span("setup") { w.setup(r, Size.SetupPasses + 1, r.docs, keep = false) }
       val tr = scala.collection.mutable.LinkedHashMap[String, Double](
         "setup_s" -> (System.nanoTime() - t0) / 1e9)
       w.timed(r, tr)
+      r.tracer.on = false
+      val after = scala.collection.mutable.LinkedHashMap[String, Double]()
+      w.timed(r, after)
+      r.tracer.on = true
       Metrics.EndToEnd.foreach { case (k, _) =>
-        r.put(s"trace.overhead.$k", if (e2e(k) == 0) 0.0 else tr(k) / e2e(k) - 1)
+        val base = if (after.contains(k)) (e2e(k) + after(k)) / 2 else e2e(k)
+        r.put(s"trace.overhead.$k", if (base == 0) 0.0 else tr(k) / base - 1)
       }
       w.layers(r)
       r.tracer.on = false

@@ -15,9 +15,9 @@ case class BatchStats(commit: Double, visible: Double, reload: Double, jobs: Dou
 
 /** Steps every workload shares. */
 object Steps {
-  def corpus(r: Run, name: String): String = {
+  def corpus(r: Run, name: String, docs: Long): String = {
     r.rm(name)
-    r.tracer.span("corpus.write", "setup") { Gen.writeCorpus(r.spark, r.seed, r.docs, r.dir(name)) }
+    r.tracer.span("corpus.write", "setup") { Gen.writeCorpus(r.spark, r.seed, docs, r.dir(name)) }
     r.dir(name)
   }
 
@@ -125,20 +125,36 @@ object Steps {
     into("query_p90_ms") = Stats.percentile(lat, 0.9).get
   }
 
-  /** Closed-loop HTTP clients over `bodies` (cycled) until `stop()`. Every
-    * response must be 200 and pass `ok`; returns (start ns, latency ms,
-    * response bytes) per request.
+  /** Rate and latency percentiles of a closed loop as medians over its
+    * one-second windows (a request belongs to the window it started in), so
+    * a burst of host contention within one window does not move them.
+    * `lat` holds (start ns, latency ms) per request.
+    */
+  def windowed(into: mutable.Map[String, Double], lat: Seq[(Long, Double)], t0: Long, seconds: Int): Unit = {
+    val byWindow = lat.groupBy { case (t, _) => ((t - t0) / 1000000000L).toInt }
+    val windows = (0 until seconds).map(w => byWindow.getOrElse(w, Nil).map(_._2))
+    val p90s = windows.flatMap(Stats.percentile(_, 0.9))
+    require(p90s.nonEmpty, "no one-second window has the 100 requests p90 needs")
+    into("query_qps") = Stats.median(windows.map(_.size.toDouble))
+    into("query_p50_ms") = Stats.median(windows.filter(_.nonEmpty).map(Stats.median))
+    into("query_p90_ms") = Stats.median(p90s)
+  }
+
+  /** Closed-loop HTTP clients over `bodies`, cycled: each client takes the
+    * next request number k until `stop(k)`. Every response must be 200 and
+    * pass `ok`; returns (start ns, latency ms, response bytes) per request.
     */
   def httpLoop(r: Run, port: Int, host: String, clients: Int, reqs: IndexedSeq[Req],
       bodies: IndexedSeq[String], inflight: ConcurrentHashMap[String, java.lang.Long],
-      stop: () => Boolean, ok: (Int, String) => Option[String]): Seq[(Long, Double, Int)] = {
+      stop: Int => Boolean, ok: (Int, String) => Option[String]): Seq[(Long, Double, Int)] = {
     val next = new AtomicInteger(0)
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, Int)]()
     val threads = (0 until clients).map { _ =>
       new Thread(() => {
         val http = new Http(host, port)
-        while (!stop()) {
-          val k = next.getAndIncrement() % reqs.size
+        var n = next.getAndIncrement()
+        while (!stop(n)) {
+          val k = n % reqs.size
           val id = r.requestIds.getAndIncrement()
           val key = TracedNode.key(reqs(k).spec.lang, reqs(k).spec.query)
           if (r.tracer.on) inflight.put(key, Long.box(id))
@@ -155,6 +171,7 @@ object Steps {
             if (code != 200) r.fail(s"http $code for request ${reqs(k).id}")
             else ok(k, body).foreach(r.fail)
           } catch { case e: Exception => r.fail(s"http request ${reqs(k).id}: $e") }
+          n = next.getAndIncrement()
         }
       })
     }
@@ -175,20 +192,21 @@ final class Serve extends Workload {
   private var node: ReloadingNode = _
   private var server: SearchHttpServer = _
   private val inflight = new ConcurrentHashMap[String, java.lang.Long]()
-  /** Build seconds of the warm set-up passes, untraced and traced. */
+  /** Build seconds of the counted set-up passes, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
+  /** The stream as the HTTP front runs it (see [[Gen.viaHttp]]). */
   private var reqs: IndexedSeq[Req] = _
   private var bodies: IndexedSeq[String] = _
-  private var expect: Array[Int] = _
+  private var expect: Array[String] = _
   private var lat: Seq[(Long, Double, Int)] = Nil
   private var gcPer1k = 0.0
 
-  def setup(r: Run, pass: Int, keep: Boolean): Unit = {
-    val corpus = Steps.corpus(r, s"corpus$pass")
+  def setup(r: Run, pass: Int, docs: Long, keep: Boolean): Unit = {
+    val corpus = Steps.corpus(r, s"corpus$pass", docs)
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
-    if (pass > 0) buildSecs(pass >= Size.SetupPasses) += b._1
+    if (pass > 0) buildSecs(r.tracer.on) += b._1
     val n = new ReloadingNode(dir, Steps.loader(r, dir), pollMs = Long.MaxValue)
     val s = r.tracer.span("server.start", "setup") { Steps.serve(n, r, inflight) }
     if (keep) {
@@ -199,36 +217,34 @@ final class Serve extends Workload {
     r.rm(s"corpus$pass")
   }
 
+  private def loop(r: Run, stop: Int => Boolean, ok: (Int, String) => Option[String]) =
+    Steps.httpLoop(r, server.boundPort, server.boundHostForUrl, math.max(1, r.nproc / 2), reqs,
+      bodies, inflight, stop, ok)
+
+  /** Every later response must equal the first one byte for byte. */
+  private def same(k: Int, body: String): Option[String] =
+    if (body == expect(k)) None else Some(s"response for request ${reqs(k).id} changed")
+
   def timed(r: Run, into: mutable.Map[String, Double]): Unit = {
     if (reqs == null) {
-      reqs = Gen.stream(r.seed, r.docs, Size.ServeRequests)
+      reqs = Gen.stream(r.seed, r.docs, Size.ServeRequests).map(Gen.viaHttp)
       bodies = reqs.map(q => Gen.httpBody(q.spec))
       // every distinct request once: the page must equal the node's own
       // answer; its body is then the expected body in the timed loop
-      val http = new Http(server.boundHostForUrl, server.boundPort)
-      expect = bodies.indices.map { k =>
-        r.attempted.incrementAndGet()
-        val (code, body) = http.search(bodies(k))
-        if (code != 200) r.fail(s"http $code for request ${reqs(k).id}")
-        else Check.httpVsNode(body, reqs(k).spec, node.current).foreach(r.fail)
-        body.hashCode
-      }.toArray
+      expect = new Array[String](reqs.size)
+      loop(r, _ >= reqs.size, (k, body) => {
+        expect(k) = body
+        Check.httpVsNode(body, reqs(k).spec, node.current)
+      })
     }
-    val clients = math.max(1, r.nproc / 2)
-    def loop(seconds: Double) = {
-      val deadline = System.nanoTime() + (seconds * 1e9).toLong
-      Steps.httpLoop(r, server.boundPort, server.boundHostForUrl, clients, reqs, bodies,
-        inflight, () => System.nanoTime() > deadline,
-        (k, body) => if (body.hashCode == expect(k)) None
-          else Some(s"response for request ${reqs(k).id} changed"))
-    }
-    loop(Size.WarmupSeconds)
+    // a round sends every request once
+    Harness.warm("serve") { loop(r, _ >= reqs.size, same) }
     val gc0 = Gc.ms()
     val t0 = System.nanoTime()
-    lat = loop(r.seconds)
-    val secs = (System.nanoTime() - t0) / 1e9
+    val deadline = t0 + r.seconds * 1000000000L
+    lat = loop(r, _ => System.nanoTime() > deadline, same)
     gcPer1k = (Gc.ms() - gc0) * 1000.0 / lat.size
-    Steps.latency(into, lat.map(_._2), secs)
+    Steps.windowed(into, lat.map(l => (l._1, l._2)), t0, r.seconds)
     into("build_docs_per_s") = r.docs / Stats.median(buildSecs(r.tracer.on).toSeq)
     into("index_bytes_per_text_byte") = Steps.dirBytes(idxDir) /
       Steps.textBytes(r, s"$idxDir/docstore").toDouble
@@ -247,8 +263,10 @@ final class Serve extends Workload {
   def layers(r: Run): Unit = {
     val mem = node.current
     val idx = IndexHandle.load(idxDir)
-    Layers.common(r, idxDir, idx, mem, reqs, lastBuild)
+    val kernelUs = Layers.common(r, idxDir, idx, mem, reqs, lastBuild, Gen.httpSpecs)
     Layers.latencyTail(r, lat.map(_._2))
+    // the loop cycles the stream, so its mean latency is the mean over reqs
+    r.put("query.kernel_share", kernelUs / (lat.map(_._2).sum / lat.size * 1e3))
     r.put("jvm.gc_ms_per_1k_queries", gcPer1k)
     r.put("api.response_kb", Stats.median(lat.map(_._3 / 1024.0)))
     Layers.apiOverhead(r)
@@ -269,7 +287,7 @@ final class Serve extends Workload {
   */
 final class Disk extends Workload {
   private var idxDir = ""
-  /** Build seconds of the warm set-up passes, untraced and traced. */
+  /** Build seconds of the counted set-up passes, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
   private var reqs: IndexedSeq[Req] = _
@@ -279,24 +297,26 @@ final class Disk extends Workload {
   private var jobsPerQuery = 0.0
   private var gcPer1k = 0.0
 
-  def setup(r: Run, pass: Int, keep: Boolean): Unit = {
-    val corpus = Steps.corpus(r, s"corpus$pass")
+  def setup(r: Run, pass: Int, docs: Long, keep: Boolean): Unit = {
+    val corpus = Steps.corpus(r, s"corpus$pass", docs)
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
     IndexHandle.load(dir) // what a disk-serving process opens at start
     if (keep) { idxDir = dir; lastBuild = b } else r.rm(s"index$pass")
-    if (pass > 0) buildSecs(pass >= Size.SetupPasses) += b._1
+    if (pass > 0) buildSecs(r.tracer.on) += b._1
     r.rm(s"corpus$pass")
   }
 
   def timed(r: Run, into: mutable.Map[String, Double]): Unit = {
     if (reqs == null) reqs = Gen.stream(r.seed, r.docs, 2000)
     if (mem == null) mem = InMemoryIndex.load(r.spark, IndexHandle.load(idxDir))
-    // JIT warm-up on its own handle, with requests of another seed
-    val warm = IndexHandle.load(idxDir)
-    val warmEnd = System.nanoTime() + (Size.WarmupSeconds * 1e9).toLong
-    Iterator.from(0).map(Gen.request(r.seed + 1, r.docs, _)).takeWhile(_ => System.nanoTime() < warmEnd)
-      .foreach(q => Bm25Query.search(r.spark, warm, q.spec))
+    // a round: another seed's requests on a fresh handle, so every round
+    // does the same work, df lookups included
+    val warmReqs = Gen.stream(r.seed + 1, r.docs, Size.DiskWarmRequests)
+    Harness.warm("disk") {
+      val h = IndexHandle.load(idxDir)
+      warmReqs.foreach(q => Bm25Query.search(r.spark, h, q.spec))
+    }
     // a fresh handle: its df cache starts empty, as on a new serving process
     val idx = IndexHandle.load(idxDir)
     val out = mutable.ArrayBuffer[(Req, SearchResult, Double)]()
@@ -343,7 +363,7 @@ final class Disk extends Workload {
 
   def layers(r: Run): Unit = {
     val idx = IndexHandle.load(idxDir)
-    Layers.common(r, idxDir, idx, mem, reqs.take(Size.StreamProps), lastBuild)
+    Layers.common(r, idxDir, idx, mem, reqs.take(Size.StreamProps), lastBuild, Seq(_))
     Layers.latencyTail(r, lat)
     Layers.reads(r, idxDir, idx, mem, reqs.take(Size.LayerRequests))
     Layers.diskDf(r, idxDir, reqs.take(Size.LayerRequests))
@@ -353,96 +373,4 @@ final class Disk extends Workload {
   }
 
   def close(): Unit = ()
-}
-
-/** `ingest`: one multi-chunk build, then seeded reindexDocs batches while
-  * one HTTP client reads through a ReloadingNode. The only workload that
-  * runs analysis, the posting encoder, the term exchange, the mutation
-  * rewrite and the reload.
-  */
-final class Ingest extends Workload {
-  private var corpusDir = ""
-  private var idxDir = ""
-  private var node: ReloadingNode = _
-  private var phase = 0
-  private var reqs: IndexedSeq[Req] = _
-  private val inflight = new ConcurrentHashMap[String, java.lang.Long]()
-  private var build: (Double, SparkWork, Long) = _
-  private var lat: Seq[Double] = Nil
-  private var gcPer1k = 0.0
-  private var respKb = 0.0
-  private var batches: Seq[BatchStats] = Nil
-
-  def setup(r: Run, pass: Int, keep: Boolean): Unit = {
-    val corpus = Steps.corpus(r, s"corpus$pass")
-    // JIT warm-up: a build over a slice of the corpus, and one reload
-    r.tracer.span("warmup", "setup") {
-      r.rm(s"warm$pass")
-      IndexBuild.build(r.spark, r.spark.read.parquet(corpus).where(s"docId < ${Size.WarmDocs}"),
-        r.dir(s"warm$pass"), numChunks = 1)
-      InMemoryIndex.load(r.spark, IndexHandle.load(r.dir(s"warm$pass")))
-      r.rm(s"warm$pass")
-    }
-    if (keep) corpusDir = corpus else r.rm(s"corpus$pass")
-  }
-
-  def timed(r: Run, into: mutable.Map[String, Double]): Unit = {
-    if (reqs == null) reqs = Gen.stream(r.seed, r.docs, Size.ServeRequests)
-    if (node != null) { node.stop(); r.rm(s"index-$phase") }
-    phase += 1
-    val name = s"index-$phase"
-    build = Steps.build(r, corpusDir, name, Size.IngestChunks)
-    r.attempted.incrementAndGet()
-    idxDir = r.dir(name)
-    into("build_docs_per_s") = r.docs / build._1
-    into("index_bytes_per_text_byte") = Steps.dirBytes(idxDir) / Steps.textBytes(r, corpusDir).toDouble
-    node = new ReloadingNode(idxDir, Steps.loader(r, idxDir), pollMs = Long.MaxValue)
-    val server = Steps.serve(node, r, inflight)
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val bodies = reqs.map(q => Gen.httpBody(q.spec))
-    var reads: Seq[(Long, Double, Int)] = Nil
-    val reader = new Thread(() => {
-      reads = Steps.httpLoop(r, server.boundPort, server.boundHostForUrl, 1, reqs, bodies, inflight,
-        () => done.get, (_, body) => scala.util.Try(Check.httpPages(body)).failed.toOption
-          .map(e => s"unparseable response: $e"))
-    })
-    val gc0 = Gc.ms()
-    reader.start()
-    val u0 = System.nanoTime()
-    try {
-      batches = (0 until Size.Batches).map(Steps.mutate(r, idxDir, node, _))
-    } finally {
-      done.set(true)
-      reader.join()
-      server.stop()
-    }
-    val u1 = System.nanoTime()
-    val during = reads.filter { case (t, _, _) => t >= u0 && t <= u1 }
-    gcPer1k = (Gc.ms() - gc0) * 1000.0 / math.max(1, during.size)
-    respKb = if (during.isEmpty) 0 else Stats.median(during.map(_._3 / 1024.0))
-    lat = during.map(_._2)
-    Steps.latency(into, lat, (u1 - u0) / 1e9)
-  }
-
-  def check(r: Run): Unit = {
-    val docstore = r.spark.read.parquet(s"$idxDir/docstore")
-    val mem = node.current
-    Steps.oracleSample(r, reqs, q => mem.search(q.spec).totalHits, 0x1A6EL).foreach { q =>
-      r.attempted.incrementAndGet()
-      Check.oracle(r.spark, docstore, q.spec, mem.search(q.spec)).foreach(r.fail)
-    }
-  }
-
-  def layers(r: Run): Unit = {
-    val mem = node.current
-    val idx = IndexHandle.load(idxDir)
-    Layers.common(r, idxDir, idx, mem, reqs, build)
-    Layers.latencyTail(r, lat)
-    Layers.mutations(r, idxDir, batches)
-    r.put("jvm.gc_ms_per_1k_queries", gcPer1k)
-    r.put("api.response_kb", respKb)
-    Layers.apiOverhead(r)
-  }
-
-  def close(): Unit = if (node != null) node.stop()
 }

@@ -18,6 +18,6 @@ class BenchmarkJsonSpec extends AnyFunSuite {
 
   test("BENCHMARK.json workloads are ones the harness runs") {
     val names = (json \ "workloads").children.map(w => (w \ "name").extract[String])
-    assert(names.nonEmpty && names.forall(Set("serve", "disk", "ingest")))
+    assert(names.nonEmpty && names.forall(Set("serve", "disk")))
   }
 }

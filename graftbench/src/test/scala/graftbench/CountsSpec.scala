@@ -22,15 +22,16 @@ class CountsSpec extends AnyFunSuite {
   private def counts(seed: Long, work: String): Map[String, Double] = {
     graft.tools.CpuProbe.rmDir(work)
     val r = new Run(spark, work, seed, 1, traced = true, s"$work/spans.jsonl", docs = 300)
-    val corpus = Steps.corpus(r, "corpus")
+    val corpus = Steps.corpus(r, "corpus", r.docs)
     val (_, build, _) = Steps.build(r, corpus, "index", 2)
     val idxDir = r.dir("index")
     val parquetBytes = Steps.files(idxDir).collect { case (p, n) if p.endsWith(".parquet") => n }.sum
     val node = new ReloadingNode(idxDir, Steps.loader(r, idxDir), pollMs = Long.MaxValue)
+    val built = node.current
+    Layers.streamProps(r, built, Gen.stream(seed, 300, 100),
+      InMemoryIndex.loadGlobalDf(spark, IndexHandle.load(idxDir)), Seq(_))
     val batch = Steps.mutate(r, idxDir, node, 0)
     val mem = node.current
-    Layers.streamProps(r, mem, Gen.stream(seed, 300, 100),
-      InMemoryIndex.loadGlobalDf(spark, IndexHandle.load(idxDir)))
     assert(r.failed.get == 0, r.problemLines.mkString("; "))
     Map("build.jobs" -> build.jobs.toDouble, "build.stages" -> build.stages.toDouble,
       "build.shuffle_write" -> build.shuffleWrite.toDouble,
@@ -47,5 +48,7 @@ class CountsSpec extends AnyFunSuite {
     val b = counts(5L, s"$base/b")
     assert(a == b)
     assert(a("build.jobs") > 0 && a("mutation.chunks") > 0 && a("stream.distinct_terms") > 0)
+    // every request is written from a corpus doc; only the misspelled ones miss
+    assert(a("stream.zero_hit_share") == Gen.stream(5L, 300, 100).count(_.typo) / 100.0)
   }
 }

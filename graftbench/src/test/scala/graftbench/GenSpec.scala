@@ -15,15 +15,28 @@ class GenSpec extends AnyFunSuite {
       assert(b.count(_.shape == "and") == 10 && b.count(_.shape == "any") == 6 &&
         b.count(_.shape == "phrase") == 4)
       assert(b.count(_.filtered) == 5 && b.count(_.spec.excludeWords.nonEmpty) == 2)
+      assert(b.count(_.typo) == 3)
       assert(b.map(_.spec.lang).groupBy(identity).map { case (l, v) => l -> v.size } ==
         Map("hi" -> 10, "gu" -> 8, "en" -> 2))
     }
+  }
+
+  test("a misspelled word is one transposition or one doubled letter away") {
+    assert(Gen.misspell("abcd") == "acbd")
+    assert(Gen.misspell("abbc") == "abbcc")
+    assert(Gen.misspell("a") == "aa")
   }
 
   test("phrase requests are windows of a corpus doc in the request's language") {
     Gen.stream(4L, 2000, 100).filter(_.shape == "phrase").foreach { q =>
       assert(q.spec.phrase && q.spec.query.split(" ").length >= 2)
     }
+  }
+
+  test("over HTTP an ANY request runs as AND and loses its year filter") {
+    val http = Gen.stream(3L, 2000, 100).map(Gen.viaHttp)
+    assert(http.forall(q => q.spec.mode == "all" && q.spec.yearRange.isEmpty && q.shape != "any"))
+    assert(http.map(_.spec.query) == Gen.stream(3L, 2000, 100).map(_.spec.query))
   }
 
   test("a batch is half new ids, half replacements spread over the chunks") {
