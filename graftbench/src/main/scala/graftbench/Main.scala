@@ -89,13 +89,10 @@ object Size {
     */
   val Docs = 4000L
   val Chunks = 1
-  /** Set-up pass 0 runs over this slice of the corpus. It pays the JIT and
-    * Spark's first-job costs, which every later pass would otherwise carry
-    * unevenly, and is not counted.
+  /** Set-up passes; setup_s is their median. Pass 0 also pays the JIT and
+    * Spark's first-job costs, which the median leaves out.
     */
-  val ColdDocs = 500L
-  /** Counted set-up passes over the whole corpus; setup_s is their median. */
-  val SetupPasses = 2
+  val SetupPasses = 3
   /** Warm-up rounds of identical work run until the last three agree
     * within this share (JIT settled), or until [[WarmupMaxSeconds]] have
     * passed.
@@ -210,10 +207,8 @@ object Main {
 
 /** A workload: set-up passes, a timed phase, checks, and layer probes. */
 trait Workload {
-  /** One set-up pass over `docs` docs; only the pass with `keep` leaves its
-    * state in place.
-    */
-  def setup(run: Run, pass: Int, docs: Long, keep: Boolean): Unit
+  /** One set-up pass; only the pass with `keep` leaves its state in place. */
+  def setup(run: Run, pass: Int, keep: Boolean): Unit
   /** The timed phase: warms up until steady, then fills the end-to-end
     * metrics other than `setup_s`.
     */
@@ -252,9 +247,8 @@ object Harness {
   }
 
   def run(r: Run, w: Workload): Unit = {
-    step("setup pass 0 (cold, not counted)") { w.setup(r, 0, Size.ColdDocs, keep = false) }
-    val passes = (1 to Size.SetupPasses).map { p =>
-      step(s"setup pass $p") { w.setup(r, p, r.docs, keep = p == Size.SetupPasses) }
+    val passes = (0 until Size.SetupPasses).map { p =>
+      step(s"setup pass $p") { w.setup(r, p, keep = p == Size.SetupPasses - 1) }
     }
     val e2e = scala.collection.mutable.LinkedHashMap[String, Double]("setup_s" -> Stats.median(passes))
     step("timed") { w.timed(r, e2e) }
@@ -267,7 +261,7 @@ object Harness {
       // still going on during the run cancels out of the tracing overhead.
       r.tracer.on = true
       val t0 = System.nanoTime()
-      r.tracer.span("setup") { w.setup(r, Size.SetupPasses + 1, r.docs, keep = false) }
+      r.tracer.span("setup") { w.setup(r, Size.SetupPasses, keep = false) }
       val tr = scala.collection.mutable.LinkedHashMap[String, Double](
         "setup_s" -> (System.nanoTime() - t0) / 1e9)
       w.timed(r, tr)

@@ -15,9 +15,9 @@ case class BatchStats(commit: Double, visible: Double, reload: Double, jobs: Dou
 
 /** Steps every workload shares. */
 object Steps {
-  def corpus(r: Run, name: String, docs: Long): String = {
+  def corpus(r: Run, name: String): String = {
     r.rm(name)
-    r.tracer.span("corpus.write", "setup") { Gen.writeCorpus(r.spark, r.seed, docs, r.dir(name)) }
+    r.tracer.span("corpus.write", "setup") { Gen.writeCorpus(r.spark, r.seed, r.docs, r.dir(name)) }
     r.dir(name)
   }
 
@@ -192,7 +192,7 @@ final class Serve extends Workload {
   private var node: ReloadingNode = _
   private var server: SearchHttpServer = _
   private val inflight = new ConcurrentHashMap[String, java.lang.Long]()
-  /** Build seconds of the counted set-up passes, untraced and traced. */
+  /** Build seconds of the set-up passes, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
   /** The stream as the HTTP front runs it (see [[Gen.viaHttp]]). */
@@ -202,11 +202,11 @@ final class Serve extends Workload {
   private var lat: Seq[(Long, Double, Int)] = Nil
   private var gcPer1k = 0.0
 
-  def setup(r: Run, pass: Int, docs: Long, keep: Boolean): Unit = {
-    val corpus = Steps.corpus(r, s"corpus$pass", docs)
+  def setup(r: Run, pass: Int, keep: Boolean): Unit = {
+    val corpus = Steps.corpus(r, s"corpus$pass")
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
-    if (pass > 0) buildSecs(r.tracer.on) += b._1
+    buildSecs(r.tracer.on) += b._1
     val n = new ReloadingNode(dir, Steps.loader(r, dir), pollMs = Long.MaxValue)
     val s = r.tracer.span("server.start", "setup") { Steps.serve(n, r, inflight) }
     if (keep) {
@@ -287,7 +287,7 @@ final class Serve extends Workload {
   */
 final class Disk extends Workload {
   private var idxDir = ""
-  /** Build seconds of the counted set-up passes, untraced and traced. */
+  /** Build seconds of the set-up passes, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
   private var reqs: IndexedSeq[Req] = _
@@ -297,13 +297,13 @@ final class Disk extends Workload {
   private var jobsPerQuery = 0.0
   private var gcPer1k = 0.0
 
-  def setup(r: Run, pass: Int, docs: Long, keep: Boolean): Unit = {
-    val corpus = Steps.corpus(r, s"corpus$pass", docs)
+  def setup(r: Run, pass: Int, keep: Boolean): Unit = {
+    val corpus = Steps.corpus(r, s"corpus$pass")
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
     IndexHandle.load(dir) // what a disk-serving process opens at start
     if (keep) { idxDir = dir; lastBuild = b } else r.rm(s"index$pass")
-    if (pass > 0) buildSecs(r.tracer.on) += b._1
+    buildSecs(r.tracer.on) += b._1
     r.rm(s"corpus$pass")
   }
 

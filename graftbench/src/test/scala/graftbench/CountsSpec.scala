@@ -22,7 +22,7 @@ class CountsSpec extends AnyFunSuite {
   private def counts(seed: Long, work: String): Map[String, Double] = {
     graft.tools.CpuProbe.rmDir(work)
     val r = new Run(spark, work, seed, 1, traced = true, s"$work/spans.jsonl", docs = 300)
-    val corpus = Steps.corpus(r, "corpus", r.docs)
+    val corpus = Steps.corpus(r, "corpus")
     val (_, build, _) = Steps.build(r, corpus, "index", 2)
     val idxDir = r.dir("index")
     val parquetBytes = Steps.files(idxDir).collect { case (p, n) if p.endsWith(".parquet") => n }.sum
