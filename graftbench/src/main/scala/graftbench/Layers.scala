@@ -62,7 +62,7 @@ object Layers {
     r.put("index.build.shuffle_read_mb", mb(w.shuffleRead))
     r.put("index.build.spill_mb", mb(w.spill))
     r.put("index.build.task_cpu_s", w.taskCpuNs / 1e9)
-    r.put("index.build.core_busy_share", w.taskRunMs / 1e3 / (secs * r.nproc))
+    r.put("index.build.core_busy_share", w.taskRunMs / 1e3 / (secs * r.sparkThreads))
     r.put("index.build.task_skew", w.skew)
     r.put("jvm.build_gc_s", gcMs / 1e3)
   }

@@ -13,7 +13,6 @@ object Metrics {
     "build_docs_per_s" -> "docs/s",
     "index_bytes_per_text_byte" -> "ratio",
     "query_qps" -> "req/s",
-    "query_p50_ms" -> "ms",
     "query_p90_ms" -> "ms")
 
   /** One layer each, from the traced run (`--trace 1`). A metric that a
@@ -54,6 +53,7 @@ object Metrics {
     "query.materialize_us" -> "us",
     "query.kernel_share" -> "ratio",
     "query.resident_mb" -> "MB",
+    "query.p50_ms" -> "ms",
     "query.p99_ms" -> "ms",
     "query.disk.df_ms" -> "ms",
     "query.disk.df_cache_hit_ratio" -> "ratio",
@@ -90,7 +90,9 @@ object Size {
   val Docs = 4000L
   val Chunks = 1
   /** Set-up passes; setup_s is their median. Pass 0 also pays the JIT and
-    * Spark's first-job costs, which the median leaves out.
+    * Spark's first-job costs, which the median leaves out; its state is the
+    * one served. build_docs_per_s takes the median of the builds after
+    * pass 0. The timed phase runs in as many slices, one after each pass.
     */
   val SetupPasses = 3
   /** Warm-up rounds of identical work run until the last three agree
@@ -100,7 +102,11 @@ object Size {
   val SteadyTolerance = 0.05
   val WarmupMaxSeconds = 5
   /** Requests of one disk warm-up round. */
-  val DiskWarmRequests = 10
+  val DiskWarmRequests = 5
+  /** Closed-loop HTTP clients of `serve`. One: with more, requests queue
+    * for the cores a shared host takes away, and latency measures the host.
+    */
+  val ServeClients = 1
   val ServeRequests = 300
   val StreamProps = 300
   val OracleSamples = 2
@@ -108,6 +114,11 @@ object Size {
   val BatchDocs = 20
   /** Requests each layer probe replays. */
   val LayerRequests = 100
+
+  /** Spark's task threads (`local[n]`): half the cores, so the tasks leave
+    * room for Spark's scheduling thread, the JIT and GC.
+    */
+  def sparkThreads: Int = math.max(1, Runtime.getRuntime.availableProcessors() / 2)
 }
 
 /** State shared by one run: the session, its scratch dir, the seed, the
@@ -116,9 +127,9 @@ object Size {
 final class Run(val spark: SparkSession, val work: String, val seed: Long,
     val seconds: Int, val traced: Boolean, val spansOut: String,
     val docs: Long = Size.Docs) {
+  val sparkThreads: Int = Size.sparkThreads
   val tracer = new Tracer
   val meter = new SparkMeter(spark.sparkContext)
-  val nproc: Int = Runtime.getRuntime.availableProcessors()
   val metrics = scala.collection.mutable.LinkedHashMap[String, Double]()
   val attempted = new AtomicLong
   val failed = new AtomicLong
@@ -163,8 +174,8 @@ object Main {
     }
     val hostBefore = Host.snapshot()
     val nproc = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder().master(s"local[$nproc]")
-      .config("spark.sql.shuffle.partitions", nproc.toString)
+    val spark = SparkSession.builder().master(s"local[${Size.sparkThreads}]")
+      .config("spark.sql.shuffle.partitions", Size.sparkThreads.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .config("spark.driver.maxResultSize", "0")
@@ -209,10 +220,19 @@ object Main {
 trait Workload {
   /** One set-up pass; only the pass with `keep` leaves its state in place. */
   def setup(run: Run, pass: Int, keep: Boolean): Unit
-  /** The timed phase: warms up until steady, then fills the end-to-end
-    * metrics other than `setup_s`.
+  /** Once, before the first timed slice: makes the inputs, checks each
+    * distinct operation once, and warms up until steady.
     */
-  def timed(run: Run, into: scala.collection.mutable.Map[String, Double]): Unit
+  def warm(run: Run): Unit
+  /** One slice of a timed phase, `seconds` long (the `last` one runs on
+    * until the percentiles have their samples). Samples add up until
+    * [[result]].
+    */
+  def slice(run: Run, seconds: Int, last: Boolean): Unit
+  /** Fills the end-to-end metrics other than `setup_s` from the slices
+    * since the last call.
+    */
+  def result(run: Run, into: scala.collection.mutable.Map[String, Double]): Unit
   /** Correctness checks beyond the per-operation ones of the timed phase. */
   def check(run: Run): Unit
   /** Per-layer probes, in the traced run only. */
@@ -246,28 +266,40 @@ object Harness {
       secs.map(s => f"$s%.2f").mkString("(", " ", ")"))
   }
 
+  /** `seconds` in `n` whole-second parts, the longer ones first. */
+  def split(seconds: Int, n: Int): Seq[Int] = (0 until n).map(k => seconds / n + (if (k < seconds % n) 1 else 0))
+
   def run(r: Run, w: Workload): Unit = {
-    val passes = (0 until Size.SetupPasses).map { p =>
-      step(s"setup pass $p") { w.setup(r, p, keep = p == Size.SetupPasses - 1) }
+    // pass 0's state is the one served; the timed phase runs in slices
+    // between the later passes, so set-up and queries both sample the
+    // host over the whole run
+    val passes = scala.collection.mutable.ArrayBuffer(step("setup pass 0") { w.setup(r, 0, keep = true) })
+    step("warm-up") { w.warm(r) }
+    val slices = split(r.seconds, Size.SetupPasses)
+    slices.zipWithIndex.foreach { case (secs, k) =>
+      if (k > 0) passes += step(s"setup pass $k") { w.setup(r, k, keep = false) }
+      step(s"timed slice $k") { w.slice(r, secs, last = k == slices.size - 1) }
     }
-    val e2e = scala.collection.mutable.LinkedHashMap[String, Double]("setup_s" -> Stats.median(passes))
-    step("timed") { w.timed(r, e2e) }
+    val e2e = scala.collection.mutable.LinkedHashMap[String, Double]("setup_s" -> Stats.median(passes.toSeq))
+    w.result(r, e2e)
     step("check") { w.check(r) }
     e2e.foreach { case (k, v) => r.put(k, v) }
     if (r.traced) {
       // one more set-up pass and timed phase with spans on, then the timed
       // phase once more with spans off. The traced phase is compared with
-      // the mean of the untraced phases on either side of it, so warm-up
-      // still going on during the run cancels out of the tracing overhead.
+      // the mean of the untraced phases on either side of it, so drift
+      // during the run cancels out of the tracing overhead.
       r.tracer.on = true
       val t0 = System.nanoTime()
       r.tracer.span("setup") { w.setup(r, Size.SetupPasses, keep = false) }
       val tr = scala.collection.mutable.LinkedHashMap[String, Double](
         "setup_s" -> (System.nanoTime() - t0) / 1e9)
-      w.timed(r, tr)
+      w.slice(r, r.seconds, last = true)
+      w.result(r, tr)
       r.tracer.on = false
       val after = scala.collection.mutable.LinkedHashMap[String, Double]()
-      w.timed(r, after)
+      w.slice(r, r.seconds, last = true)
+      w.result(r, after)
       r.tracer.on = true
       Metrics.EndToEnd.foreach { case (k, _) =>
         val base = if (after.contains(k)) (e2e(k) + after(k)) / 2 else e2e(k)

@@ -13,6 +13,11 @@ import graft.query._
 case class BatchStats(commit: Double, visible: Double, reload: Double, jobs: Double,
     rewritten: Double, written: Double)
 
+/** One request of a closed loop: its index in the request list, start,
+  * latency and response size.
+  */
+case class Sent(k: Int, startNs: Long, ms: Double, bytes: Int)
+
 /** Steps every workload shares. */
 object Steps {
   def corpus(r: Run, name: String): String = {
@@ -28,7 +33,7 @@ object Steps {
     r.rm(idxName)
     val gc0 = Gc.ms()
     var secs = 0.0
-    val work = r.meter.window(r.nproc) {
+    val work = r.meter.window(r.sparkThreads) {
       r.tracer.span("index.build", "setup") {
         val t0 = System.nanoTime()
         IndexBuild.build(r.spark, r.spark.read.parquet(corpusDir), r.dir(idxName), numChunks = chunks)
@@ -85,7 +90,7 @@ object Steps {
     val files0 = files(idxDir)
     r.attempted.incrementAndGet()
     val t0 = System.nanoTime()
-    val work = r.meter.window(r.nproc) {
+    val work = r.meter.window(r.sparkThreads) {
       r.tracer.span("index.reindex", "batch", b.toLong) { IndexBuild.reindexDocs(r.spark, idxDir, frame) }
     }
     val t1 = System.nanoTime()
@@ -121,34 +126,34 @@ object Steps {
   def latency(into: mutable.Map[String, Double], lat: Seq[Double], seconds: Double): Unit = {
     require(lat.size >= 100, s"only ${lat.size} requests completed; p90 needs 100")
     into("query_qps") = lat.size / seconds
-    into("query_p50_ms") = Stats.median(lat)
+    into("query.p50_ms") = Stats.median(lat)
     into("query_p90_ms") = Stats.percentile(lat, 0.9).get
   }
 
-  /** Rate and latency percentiles of a closed loop as medians over its
-    * one-second windows (a request belongs to the window it started in), so
-    * a burst of host contention within one window does not move them.
-    * `lat` holds (start ns, latency ms) per request.
+  /** Rate and latency percentiles of a closed loop that cycles a request
+    * list. The rate is the median of `windows`, the requests started in
+    * each one-second window of the loop. The percentiles are taken over
+    * the list, each request's latency being the median of its repetitions,
+    * so a burst of host contention, which hits only some repetitions of
+    * each request, does not move them.
     */
-  def windowed(into: mutable.Map[String, Double], lat: Seq[(Long, Double)], t0: Long, seconds: Int): Unit = {
-    val byWindow = lat.groupBy { case (t, _) => ((t - t0) / 1000000000L).toInt }
-    val windows = (0 until seconds).map(w => byWindow.getOrElse(w, Nil).map(_._2))
-    val p90s = windows.flatMap(Stats.percentile(_, 0.9))
-    require(p90s.nonEmpty, "no one-second window has the 100 requests p90 needs")
-    into("query_qps") = Stats.median(windows.map(_.size.toDouble))
-    into("query_p50_ms") = Stats.median(windows.filter(_.nonEmpty).map(Stats.median))
-    into("query_p90_ms") = Stats.median(p90s)
+  def cycled(into: mutable.Map[String, Double], sent: Seq[Sent], windows: Seq[Double]): Unit = {
+    into("query_qps") = Stats.median(windows)
+    val reps = sent.groupBy(_.k).values.map(v => Stats.median(v.map(_.ms))).toSeq
+    into("query.p50_ms") = Stats.median(reps)
+    into("query_p90_ms") = Stats.percentile(reps, 0.9).getOrElse(sys.error(
+      s"only ${reps.size} distinct requests completed; p90 needs 100"))
   }
 
   /** Closed-loop HTTP clients over `bodies`, cycled: each client takes the
-    * next request number k until `stop(k)`. Every response must be 200 and
-    * pass `ok`; returns (start ns, latency ms, response bytes) per request.
+    * next request number n, from `from` on, until `stop(n)`. Every response
+    * must be 200 and pass `ok`; returns one [[Sent]] per request.
     */
   def httpLoop(r: Run, port: Int, host: String, clients: Int, reqs: IndexedSeq[Req],
       bodies: IndexedSeq[String], inflight: ConcurrentHashMap[String, java.lang.Long],
-      stop: Int => Boolean, ok: (Int, String) => Option[String]): Seq[(Long, Double, Int)] = {
-    val next = new AtomicInteger(0)
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, Int)]()
+      from: Int, stop: Int => Boolean, ok: (Int, String) => Option[String]): Seq[Sent] = {
+    val next = new AtomicInteger(from)
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[Sent]()
     val threads = (0 until clients).map { _ =>
       new Thread(() => {
         val http = new Http(host, port)
@@ -167,7 +172,7 @@ object Steps {
               inflight.remove(key, Long.box(id))
               r.tracer.record(Span("http.request", t0, t1, "", id))
             }
-            out.add((t0, (t1 - t0) / 1e6, body.length))
+            out.add(Sent(k, t0, (t1 - t0) / 1e6, body.length))
             if (code != 200) r.fail(s"http $code for request ${reqs(k).id}")
             else ok(k, body).foreach(r.fail)
           } catch { case e: Exception => r.fail(s"http request ${reqs(k).id}: $e") }
@@ -177,7 +182,7 @@ object Steps {
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
-    val b = Seq.newBuilder[(Long, Double, Int)]
+    val b = Seq.newBuilder[Sent]
     out.forEach(b += _)
     b.result()
   }
@@ -192,59 +197,78 @@ final class Serve extends Workload {
   private var node: ReloadingNode = _
   private var server: SearchHttpServer = _
   private val inflight = new ConcurrentHashMap[String, java.lang.Long]()
-  /** Build seconds of the set-up passes, untraced and traced. */
+  /** Build seconds of the set-up passes after pass 0, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
   /** The stream as the HTTP front runs it (see [[Gen.viaHttp]]). */
   private var reqs: IndexedSeq[Req] = _
   private var bodies: IndexedSeq[String] = _
   private var expect: Array[String] = _
-  private var lat: Seq[(Long, Double, Int)] = Nil
+  /** Requests, one-second window counts and GC ms of the slices since the
+    * last [[result]], and the number of the next request to send.
+    */
+  private val sent = mutable.ArrayBuffer[Sent]()
+  private val windows = mutable.ArrayBuffer[Double]()
+  private var gcMs = 0L
+  private var nextReq = 0
+  private var lat: Seq[Sent] = Nil
   private var gcPer1k = 0.0
 
   def setup(r: Run, pass: Int, keep: Boolean): Unit = {
     val corpus = Steps.corpus(r, s"corpus$pass")
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
-    buildSecs(r.tracer.on) += b._1
+    if (pass > 0) buildSecs(r.tracer.on) += b._1
+    lastBuild = b
     val n = new ReloadingNode(dir, Steps.loader(r, dir), pollMs = Long.MaxValue)
     val s = r.tracer.span("server.start", "setup") { Steps.serve(n, r, inflight) }
     if (keep) {
-      idxDir = dir; node = n; server = s; lastBuild = b
+      idxDir = dir; node = n; server = s
     } else {
       s.stop(); n.stop(); r.rm(s"index$pass")
     }
     r.rm(s"corpus$pass")
   }
 
-  private def loop(r: Run, stop: Int => Boolean, ok: (Int, String) => Option[String]) =
-    Steps.httpLoop(r, server.boundPort, server.boundHostForUrl, math.max(1, r.nproc / 2), reqs,
-      bodies, inflight, stop, ok)
+  private def loop(r: Run, from: Int, stop: Int => Boolean, ok: (Int, String) => Option[String]) =
+    Steps.httpLoop(r, server.boundPort, server.boundHostForUrl, Size.ServeClients, reqs,
+      bodies, inflight, from, stop, ok)
 
   /** Every later response must equal the first one byte for byte. */
   private def same(k: Int, body: String): Option[String] =
     if (body == expect(k)) None else Some(s"response for request ${reqs(k).id} changed")
 
-  def timed(r: Run, into: mutable.Map[String, Double]): Unit = {
-    if (reqs == null) {
-      reqs = Gen.stream(r.seed, r.docs, Size.ServeRequests).map(Gen.viaHttp)
-      bodies = reqs.map(q => Gen.httpBody(q.spec))
-      // every distinct request once: the page must equal the node's own
-      // answer; its body is then the expected body in the timed loop
-      expect = new Array[String](reqs.size)
-      loop(r, _ >= reqs.size, (k, body) => {
-        expect(k) = body
-        Check.httpVsNode(body, reqs(k).spec, node.current)
-      })
-    }
+  def warm(r: Run): Unit = {
+    reqs = Gen.stream(r.seed, r.docs, Size.ServeRequests).map(Gen.viaHttp)
+    bodies = reqs.map(q => Gen.httpBody(q.spec))
+    // every distinct request once: the page must equal the node's own
+    // answer; its body is then the expected body in the timed loop
+    expect = new Array[String](reqs.size)
+    loop(r, 0, _ >= reqs.size, (k, body) => {
+      expect(k) = body
+      Check.httpVsNode(body, reqs(k).spec, node.current)
+    })
     // a round sends every request once
-    Harness.warm("serve") { loop(r, _ >= reqs.size, same) }
+    Harness.warm("serve") { loop(r, 0, _ >= reqs.size, same) }
+  }
+
+  def slice(r: Run, seconds: Int, last: Boolean): Unit = {
     val gc0 = Gc.ms()
     val t0 = System.nanoTime()
-    val deadline = t0 + r.seconds * 1000000000L
-    lat = loop(r, _ => System.nanoTime() > deadline, same)
-    gcPer1k = (Gc.ms() - gc0) * 1000.0 / lat.size
-    Steps.windowed(into, lat.map(l => (l._1, l._2)), t0, r.seconds)
+    val deadline = t0 + seconds * 1000000000L
+    val got = loop(r, nextReq, _ => System.nanoTime() > deadline, same)
+    gcMs += Gc.ms() - gc0
+    nextReq += got.size
+    val byWindow = got.groupBy(s => ((s.startNs - t0) / 1000000000L).toInt)
+    windows ++= (0 until seconds).map(w => byWindow.getOrElse(w, Nil).size.toDouble)
+    sent ++= got
+  }
+
+  def result(r: Run, into: mutable.Map[String, Double]): Unit = {
+    Steps.cycled(into, sent.toSeq, windows.toSeq)
+    lat = sent.toSeq
+    gcPer1k = gcMs * 1000.0 / lat.size
+    sent.clear(); windows.clear(); gcMs = 0; nextReq = 0
     into("build_docs_per_s") = r.docs / Stats.median(buildSecs(r.tracer.on).toSeq)
     into("index_bytes_per_text_byte") = Steps.dirBytes(idxDir) /
       Steps.textBytes(r, s"$idxDir/docstore").toDouble
@@ -264,11 +288,11 @@ final class Serve extends Workload {
     val mem = node.current
     val idx = IndexHandle.load(idxDir)
     val kernelUs = Layers.common(r, idxDir, idx, mem, reqs, lastBuild, Gen.httpSpecs)
-    Layers.latencyTail(r, lat.map(_._2))
+    Layers.latencyTail(r, lat.map(_.ms))
     // the loop cycles the stream, so its mean latency is the mean over reqs
-    r.put("query.kernel_share", kernelUs / (lat.map(_._2).sum / lat.size * 1e3))
+    r.put("query.kernel_share", kernelUs / (lat.map(_.ms).sum / lat.size * 1e3))
     r.put("jvm.gc_ms_per_1k_queries", gcPer1k)
-    r.put("api.response_kb", Stats.median(lat.map(_._3 / 1024.0)))
+    r.put("api.response_kb", Stats.median(lat.map(_.bytes / 1024.0)))
     Layers.apiOverhead(r)
     // the write path, last: update batches on the served index, each made
     // visible by the node's reload
@@ -287,13 +311,22 @@ final class Serve extends Workload {
   */
 final class Disk extends Workload {
   private var idxDir = ""
-  /** Build seconds of the set-up passes, untraced and traced. */
+  /** Build seconds of the set-up passes after pass 0, untraced and traced. */
   private val buildSecs = Map(false -> mutable.ArrayBuffer[Double](), true -> mutable.ArrayBuffer[Double]())
   private var lastBuild: (Double, SparkWork, Long) = _
   private var reqs: IndexedSeq[Req] = _
   private var mem: InMemoryIndex = _
   private var lat: Seq[Double] = Nil
   private var served: Seq[(Req, SearchResult)] = Nil
+  /** The handle, answers (null when the search failed), wall seconds, GC
+    * ms and Spark jobs of the slices since the last [[result]]; the stream
+    * runs on from slice to slice.
+    */
+  private var idx: IndexHandle = _
+  private val out = mutable.ArrayBuffer[(Req, SearchResult, Double)]()
+  private var secs = 0.0
+  private var gcMs = 0L
+  private var jobs = 0
   private var jobsPerQuery = 0.0
   private var gcPer1k = 0.0
 
@@ -302,14 +335,15 @@ final class Disk extends Workload {
     val b = Steps.build(r, corpus, s"index$pass", Size.Chunks)
     val dir = r.dir(s"index$pass")
     IndexHandle.load(dir) // what a disk-serving process opens at start
-    if (keep) { idxDir = dir; lastBuild = b } else r.rm(s"index$pass")
-    buildSecs(r.tracer.on) += b._1
+    if (keep) idxDir = dir else r.rm(s"index$pass")
+    if (pass > 0) buildSecs(r.tracer.on) += b._1
+    lastBuild = b
     r.rm(s"corpus$pass")
   }
 
-  def timed(r: Run, into: mutable.Map[String, Double]): Unit = {
-    if (reqs == null) reqs = Gen.stream(r.seed, r.docs, 2000)
-    if (mem == null) mem = InMemoryIndex.load(r.spark, IndexHandle.load(idxDir))
+  def warm(r: Run): Unit = {
+    reqs = Gen.stream(r.seed, r.docs, 2000)
+    mem = InMemoryIndex.load(r.spark, IndexHandle.load(idxDir))
     // a round: another seed's requests on a fresh handle, so every round
     // does the same work, df lookups included
     val warmReqs = Gen.stream(r.seed + 1, r.docs, Size.DiskWarmRequests)
@@ -317,35 +351,42 @@ final class Disk extends Workload {
       val h = IndexHandle.load(idxDir)
       warmReqs.foreach(q => Bm25Query.search(r.spark, h, q.spec))
     }
-    // a fresh handle: its df cache starts empty, as on a new serving process
-    val idx = IndexHandle.load(idxDir)
-    val out = mutable.ArrayBuffer[(Req, SearchResult, Double)]()
+  }
+
+  def slice(r: Run, seconds: Int, last: Boolean): Unit = {
+    // a fresh handle per timed phase: its df cache starts empty, as on a
+    // new serving process
+    if (idx == null) idx = IndexHandle.load(idxDir)
     val gc0 = Gc.ms()
     val t0 = System.nanoTime()
-    val deadline = t0 + r.seconds * 1000000000L
+    val deadline = t0 + seconds * 1000000000L
     val work = r.meter.window(1) {
-      var i = 0
-      while ((System.nanoTime() < deadline || out.size < 100) && i < reqs.size) {
-        val q = reqs(i)
+      while ((System.nanoTime() < deadline || (last && out.size < 100)) && out.size < reqs.size) {
+        val q = reqs(out.size)
         r.attempted.incrementAndGet()
         val a = System.nanoTime()
-        try {
-          val res = r.tracer.span("bm25.search", "", q.id.toLong) { Bm25Query.search(r.spark, idx, q.spec) }
-          out += ((q, res, (System.nanoTime() - a) / 1e6))
-        } catch { case e: Exception => r.fail(s"search ${q.id}: $e") }
-        i += 1
+        val res = try r.tracer.span("bm25.search", "", q.id.toLong) { Bm25Query.search(r.spark, idx, q.spec) }
+          catch { case e: Exception => r.fail(s"search ${q.id}: $e"); null }
+        out += ((q, res, (System.nanoTime() - a) / 1e6))
       }
     }
-    val secs = (System.nanoTime() - t0) / 1e9
-    gcPer1k = (Gc.ms() - gc0) * 1000.0 / out.size
-    jobsPerQuery = work.jobs.toDouble / out.size
+    secs += (System.nanoTime() - t0) / 1e9
+    gcMs += Gc.ms() - gc0
+    jobs += work.jobs
+  }
+
+  def result(r: Run, into: mutable.Map[String, Double]): Unit = {
+    val ok = out.filter(_._2 != null)
+    gcPer1k = gcMs * 1000.0 / ok.size
+    jobsPerQuery = jobs.toDouble / ok.size
     // every answer against the resident node's answer for the same query
-    out.foreach { case (q, res, _) =>
+    ok.foreach { case (q, res, _) =>
       Check.diff(Page.of(res), Page.of(mem.search(q.spec))).foreach(d => r.fail(s"disk vs resident: $d for ${q.spec}"))
     }
-    lat = out.map(_._3).toSeq
-    served = out.map(o => (o._1, o._2)).toSeq
+    lat = ok.map(_._3).toSeq
+    served = ok.map(o => (o._1, o._2)).toSeq
     Steps.latency(into, lat, secs)
+    idx = null; out.clear(); secs = 0; gcMs = 0; jobs = 0
     into("build_docs_per_s") = r.docs / Stats.median(buildSecs(r.tracer.on).toSeq)
     into("index_bytes_per_text_byte") = Steps.dirBytes(idxDir) /
       Steps.textBytes(r, s"$idxDir/docstore").toDouble
