@@ -50,6 +50,16 @@ object LocalParquet {
       new GroupReadSupport()
   }
 
+  /** Workers of multi-file reads, shared by every call so that a read
+    * starts no threads of its own (thread start-up on a busy host made
+    * query latency uneven). Daemon threads; idle ones exit after a minute.
+    */
+  private lazy val filePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-local-parquet")
+    t.setDaemon(true)
+    t
+  }
+
   /** A directory this reader may serve: plain local path or file: URI. */
   def isLocalDir(dir: String): Boolean =
     dir.startsWith("/") || dir.startsWith("file:")
@@ -128,38 +138,52 @@ object LocalParquet {
     }
     pconf.set(ReadSupport.PARQUET_READ_SCHEMA, projStr)
     val results = new Array[Seq[T]](files.size)
-    val nThreads = math.min(files.size,
-      math.max(2, Runtime.getRuntime.availableProcessors()))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-    try {
-      val futs = files.zipWithIndex.map { case ((f, chunk), i) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
+    def readFile(i: Int): Unit = {
+      val (f, chunk) = files(i)
+      var b: ParquetReader.Builder[Group] = new LocalParquet.GroupBuilder(
+        new org.apache.parquet.io.LocalInputFile(f.toPath), pconf)
+      // all of parquet-mr's filtering tiers stay ON (row-group stats,
+      // dictionary, column index, record level) — an A/B with
+      // dictionary filtering disabled regressed point reads ~6×
+      // (the dictionary check is what rejects whole row groups here;
+      // the column index alone let the record filter decode far more
+      // pages)
+      if (pred != null)
+        b = b.withFilter(FilterCompat.get(pred)).useDictionaryFilter(dictFilter)
+      val reader = b.build()
+      val buf = Seq.newBuilder[T]
+      try {
+        var g = reader.read()
+        while (g != null) {
+          buf += row(g, chunk)
+          g = reader.read()
+        }
+      } finally reader.close()
+      results(i) = buf.result()
+    }
+    // a point read usually selects one file: read it on the calling thread.
+    // Several files are read by up to nproc workers of the shared pool,
+    // each taking the next unread file
+    if (files.size == 1) readFile(0)
+    else {
+      val next = new java.util.concurrent.atomic.AtomicInteger(0)
+      val workers = math.min(files.size, math.max(2, Runtime.getRuntime.availableProcessors()))
+      val futs = (0 until workers).map { _ =>
+        filePool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            var b: ParquetReader.Builder[Group] = new LocalParquet.GroupBuilder(
-              new org.apache.parquet.io.LocalInputFile(f.toPath), pconf)
-            // all of parquet-mr's filtering tiers stay ON (row-group stats,
-            // dictionary, column index, record level) — an A/B with
-            // dictionary filtering disabled regressed point reads ~6×
-            // (the dictionary check is what rejects whole row groups here;
-            // the column index alone let the record filter decode far more
-            // pages)
-            if (pred != null)
-              b = b.withFilter(FilterCompat.get(pred)).useDictionaryFilter(dictFilter)
-            val reader = b.build()
-            val buf = Seq.newBuilder[T]
-            try {
-              var g = reader.read()
-              while (g != null) {
-                buf += row(g, chunk)
-                g = reader.read()
-              }
-            } finally reader.close()
-            results(i) = buf.result()
+            var i = next.getAndIncrement()
+            while (i < files.size) { readFile(i); i = next.getAndIncrement() }
           }
         })
       }
-      futs.foreach(_.get()) // propagate the first failure
-    } finally pool.shutdown()
+      // join every worker before propagating the first failure, so no read
+      // of this call is still running when it returns
+      val errs = futs.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      errs.headOption.foreach(e => throw e)
+    }
     results.toSeq.flatten
   }
 
@@ -367,6 +391,63 @@ object LocalParquet {
     val pred = and(eqString("lang", lang), inStrings("term", terms))
     read(termdictPath, Seq("lang", "term", "df"), pred,
       (g, _) => (str(g, "term"), lng(g, "df")), dictFilter = false)
+  }
+
+  /** Termdict rows (term, df) of `lang` whose first code point is one of
+    * `firstCps`, keeping only terms that pass `keep`. Each code point cp
+    * selects the term range [utf8(cp), utf8(cp+1)) — UTF-8 byte order is
+    * code-point order, and the termdict is sorted on (lang, term), so the
+    * column index prunes the read to those buckets. `keep(firstCp, cpLen)`
+    * runs as a record-level predicate on each term's UTF-8 bytes while
+    * reading (no String is built for a rejected row): rejected rows are
+    * never collected, so a large bucket is streamed, not held.
+    */
+  def readTermDictBuckets(termdictPath: String, lang: String, firstCps: Seq[Int],
+      keep: (Int, Int) => Boolean): Seq[(String, Long)] = {
+    if (firstCps.isEmpty) return Nil
+    val c = FilterApi.binaryColumn("term")
+    val buckets = firstCps.distinct.map { cp =>
+      val lo = new String(Character.toChars(cp)).getBytes("UTF-8")
+      // the exclusive upper bound bumps the last byte: a UTF-8 sequence
+      // never ends in 0xFF, and every term starting with cp sorts below it
+      val hi = lo.clone()
+      hi(hi.length - 1) = (hi(hi.length - 1) + 1).toByte
+      FilterApi.and(FilterApi.gtEq(c, Binary.fromConstantByteArray(lo)),
+        FilterApi.lt(c, Binary.fromConstantByteArray(hi))): FilterPredicate
+    }.reduce(or)
+    val pred = and(eqString("lang", lang),
+      FilterApi.and(buckets, FilterApi.userDefined(c, new KeepTerms(keep))))
+    read(termdictPath, Seq("lang", "term", "df"), pred,
+      (g, _) => (str(g, "term"), lng(g, "df")), dictFilter = false)
+  }
+
+  /** Record-level term predicate: never drops a row group or page (the
+    * bucket ranges do that), only rows whose term fails `p(firstCp, cpLen)`,
+    * both read off the (valid) UTF-8 bytes without decoding the term. */
+  private final class KeepTerms(p: (Int, Int) => Boolean)
+      extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[Binary]
+      with Serializable {
+    def keep(v: Binary): Boolean = v != null && v.length > 0 && {
+      val b = v.toByteBuffer
+      val at = b.position
+      val n = b.remaining
+      var cps = 0
+      var i = 0
+      while (i < n) {
+        if ((b.get(at + i) & 0xC0) != 0x80) cps += 1 // not a continuation byte
+        i += 1
+      }
+      val b0 = b.get(at) & 0xFF
+      def cont(k: Int) = if (k < n) b.get(at + k) & 0x3F else 0
+      val first =
+        if (b0 < 0x80) b0
+        else if (b0 < 0xE0) ((b0 & 0x1F) << 6) | cont(1)
+        else if (b0 < 0xF0) ((b0 & 0x0F) << 12) | (cont(1) << 6) | cont(2)
+        else ((b0 & 0x07) << 18) | (cont(1) << 12) | (cont(2) << 6) | cont(3)
+      p(first, cps)
+    }
+    def canDrop(s: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean = false
+    def inverseCanDrop(s: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean = false
   }
 
   /** Full termdict load: (lang, term, df) — the doc-shard global-df map. */

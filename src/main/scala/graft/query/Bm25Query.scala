@@ -69,8 +69,12 @@ case class IndexHandle(dir: String, stats: Map[String, (Long, Long)]) {
     if (compactComplete) s"$dir/segments_compact" else s"$dir/segments"
   def facetsPath: String =
     if (compactComplete) s"$dir/facets_compact" else s"$dir/facets"
-  /** Materialized term dictionary (absent only on pre-termdict indexes). */
-  def termdictPath: Option[String] =
+  /** Materialized term dictionary (absent only on pre-termdict indexes).
+    * Pinned on first use like [[compactComplete]] (one handle, one index
+    * version): df-cache misses and suggestions would otherwise each pay a
+    * Hadoop-conf build and a file-system stat.
+    */
+  @transient lazy val termdictPath: Option[String] =
     if (graft.index.TableIO.exists(s"$dir/termdict")) Some(s"$dir/termdict") else None
 
   /** Driver-resident (lang, term) → corpus df for terms queried through this
@@ -624,80 +628,97 @@ object Bm25Query {
     * suggester semantics (index_searcher.py:660-674): min_word_length 3,
     * prefix_length 1, candidates within Damerau-Levenshtein ≤ 2, score =
     * 1 − d/maxLen ≥ 0.6, ranked by (score desc, docFreq desc).
+    *
+    * A local termdict is read on the driver (no Spark job): only the query
+    * words' first-code-point buckets, only rows passing the length
+    * prefilter, ranked by [[QueryCore.suggest]] — the rule the resident
+    * node runs. Other index dirs collect [[suggestPlan]], which scores in
+    * executors and brings only the per-word top-`size` to the driver.
     */
   def suggest(spark: SparkSession, idx: IndexHandle, lang: String, query: String,
       size: Int = 5, minScore: Double = 0.6): Seq[String] = {
-    import spark.implicits._
-    val qTerms = Analyzer.terms(query, lang).filter(_.length >= 3)
-    if (qTerms.isEmpty) return Nil
-    // Fully distributed candidate scoring: the term dictionary is never
-    // collected (a single first-letter prefix is millions of terms at web
-    // scale). Cheap codegen'd prefilters (prefix pushdown + built-in
-    // levenshtein bound) run first; exact Damerau-Levenshtein (OSA, what the
-    // reference's Lucene suggester uses) refines via UDF; orderBy().limit()
-    // brings only the top-`size` winners to the driver.
-    // dedupe repeated query terms: the old per-term loop processed each
-    // occurrence identically and .distinct'ed the output, so occurrences
-    // beyond the first never contribute — but in the batched plan they
-    // WOULD double candidate rows and push real suggestions past the
-    // per-term rank cutoff
-    val qSeq = qTerms.toSeq.distinct
-    val rows = suggestPlan(spark, idx, lang, qSeq, size, minScore)
-      .as[(String, Int, String)]
-      .collect() // ≤ size rows per query term
-    val byTerm = rows.groupBy(_._1)
-    // emit in the original per-term order (term iteration order, then rank)
-    // — identical to the former one-job-per-term loop's output
-    qSeq.flatMap(w => byTerm.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct
+    val words = QueryCore.suggestWords(query, lang)
+    if (words.isEmpty) return Nil
+    idx.termdictPath match {
+      case Some(p) if graft.index.LocalParquet.isLocalDir(p) =>
+        // a row is kept while reading when it could correct SOME word of its
+        // bucket; the ranking re-checks it per word
+        val byCp = words.groupBy(_.codePointAt(0)).toArray
+        val cps = byCp.map(_._1)
+        val lens = byCp.map(_._2.map(QueryCore.cpLen).distinct.toArray)
+        val rows = graft.index.LocalParquet.readTermDictBuckets(p, lang, cps.toSeq,
+          (cp, tl) => tl >= QueryCore.SuggestMinLen && {
+            val k = cps.indexOf(cp)
+            k >= 0 && lens(k).exists(wl => QueryCore.suggestLenOk(wl, tl, minScore))
+          })
+        val byPrefix = rows.groupBy(_._1.codePointAt(0))
+        QueryCore.suggest(words, cp => byPrefix.getOrElse(cp, Nil).iterator, size, minScore)
+      case _ => suggestSpark(spark, idx, lang, words, size, minScore)
+    }
   }
 
-  /** THE batched suggest plan — shared by [[suggest]] (which collects it)
-    * and `tools.ExplainCli` (which explains it), so the inspected plan can
-    * never desync from the executed one. Columns: (qword, rank, term).
+  /** [[suggest]] through the Spark plan: collects [[suggestPlan]] for
+    * `words` and orders it like [[QueryCore.suggest]] (word order, then
+    * rank, deduped).
+    */
+  private[query] def suggestSpark(spark: SparkSession, idx: IndexHandle, lang: String,
+      words: Seq[String], size: Int, minScore: Double): Seq[String] = {
+    import spark.implicits._
+    val byWord = suggestPlan(spark, idx, lang, words, size, minScore)
+      .as[(String, Int, String)]
+      .collect() // ≤ size rows per query word
+      .groupBy(_._1)
+    words.flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct
+  }
+
+  /** THE batched Spark suggest plan, for index dirs [[suggest]] cannot read
+    * locally — shared by [[suggest]] (which collects it) and
+    * `tools.ExplainCli` (which explains it), so the inspected plan can never
+    * desync from the executed one. `qSeq` are [[QueryCore.suggestWords]].
+    * Columns: (qword, rank, term).
     *
     * ONE Spark job for the whole (possibly multi-term) query: a single dict
-    * scan filtered to the query terms' first-char buckets, each dict row
-    * exploded against only the query terms sharing its first char, per-term
-    * top-`size` via a window — a 3-term misspelled query doesn't pay 3×
-    * job-scheduling latency.
+    * scan filtered to the query terms' first-code-point buckets (the term
+    * dictionary is never collected), each dict row exploded against only the
+    * query terms sharing its first code point, per-term top-`size` via a
+    * window — a 3-term misspelled query doesn't pay 3× job-scheduling
+    * latency. Lengths are code points (Spark's length/levenshtein), the unit
+    * of [[QueryCore.damerauLevenshtein]].
     *
     * Prefilter soundness: lev(a,b) <= 2*osa(a,b), and a candidate must pass
-    * BOTH osa <= 2 (the suggester's max_edits — OpenSearch's term-suggester
-    * default, which the reference never overrides) and score >= minScore
-    * (osa <= (1-minScore)*maxLen), so lev <= least(4, 2*(1-minScore)*maxLen)
-    * admits every OSA-valid candidate.
+    * BOTH osa <= max_edits and score >= minScore
+    * (osa <= (1-minScore)*maxLen), so lev <= least(2*max_edits,
+    * 2*(1-minScore)*maxLen) admits every OSA-valid candidate.
     */
   def suggestPlan(spark: SparkSession, idx: IndexHandle, lang: String,
       qSeq: Seq[String], size: Int, minScore: Double): DataFrame = {
     // suggest() guards this internally; name the precondition for any other
     // caller instead of letting the StartsWith reduce throw empty.reduce
     require(qSeq.nonEmpty, "suggestPlan needs at least one query term")
-    val osaUdf = udf((a: String, b: String) => damerauLevenshtein(a, b))
+    val osaUdf = udf((a: String, b: String) => QueryCore.damerauLevenshtein(a, b))
     val qArr = array(qSeq.map(lit(_)): _*)
     val maxLen = greatest(length(col("term")), length(col("qword"))).cast("double")
     // dictionary source: the materialized termdict table (one pruned scan —
     // no per-query segment aggregation); segments agg only as a fallback for
     // pre-termdict indexes
     termDictDf(spark, idx, lang)
-      .where(length(col("term")) >= 3)
+      .where(length(col("term")) >= QueryCore.SuggestMinLen)
       // OR of literal StartsWith predicates — unlike substring(term,1,1)
       // this pushes to the term-sorted termdict parquet as row-group-
-      // prunable filters (the same pushdown the old per-term loop had).
-      // First CODE POINT, not substring(0,1): a supplementary-plane first
-      // char would make the literal a lone high surrogate, which UTF-8
-      // mangles — the predicate would match nothing and the Spark path
-      // would silently return zero suggestions where the resident one
-      // (code-point bucketed) finds candidates
+      // prunable filters. First CODE POINT, not substring(0,1): a
+      // supplementary-plane first char would make the literal a lone high
+      // surrogate, which UTF-8 mangles — the predicate would match nothing
       .where(qSeq.map(w => col("term").startsWith(
         w.substring(0, Character.charCount(w.codePointAt(0))))).reduce(_ || _))
       .withColumn("qword", explode(filter(qArr, q =>
         substring(q, 1, 1) === substring(col("term"), 1, 1) && q =!= col("term"))))
       .where(levenshtein(col("qword"), col("term")) <=
-        least(lit(4), floor(lit(2.0 * (1.0 - minScore)) * maxLen)))
+        least(lit(2 * QueryCore.SuggestMaxEdits),
+          floor(lit(2.0 * (1.0 - minScore)) * maxLen)))
       .withColumn("osa", osaUdf(col("qword"), col("term")))
       // max_edits cap: without it a length-10 term at OSA distance 4 scores
       // 0.6 and sneaks in — the reference suggester never returns edits > 2
-      .where(col("osa") <= 2)
+      .where(col("osa") <= QueryCore.SuggestMaxEdits)
       .withColumn("score", lit(1.0) - col("osa") / maxLen)
       .where(col("score") >= minScore)
       .withColumn("rank", row_number().over(org.apache.spark.sql.expressions.Window
@@ -729,24 +750,5 @@ object Bm25Query {
       case None    => spark.read.parquet(idx.segmentsPath)
     }
     base.groupBy("term").agg(sum("df").as("df"))
-  }
-
-  /** Optimal-string-alignment Damerau-Levenshtein (the variant Lucene's
-    * suggester uses).
-    */
-  def damerauLevenshtein(a: String, b: String): Int = {
-    val m = a.length; val nn = b.length
-    if (m == 0) return nn
-    if (nn == 0) return m
-    val d = Array.ofDim[Int](m + 1, nn + 1)
-    for (i <- 0 to m) d(i)(0) = i
-    for (j <- 0 to nn) d(0)(j) = j
-    for (i <- 1 to m; j <- 1 to nn) {
-      val cost = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
-      d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1), d(i - 1)(j - 1) + cost)
-      if (i > 1 && j > 1 && a.charAt(i - 1) == b.charAt(j - 2) && a.charAt(i - 2) == b.charAt(j - 1))
-        d(i)(j) = math.min(d(i)(j), d(i - 2)(j - 2) + cost)
-    }
-    d(m)(nn)
   }
 }

@@ -2,7 +2,6 @@ package graft.query
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.analysis.Analyzer
 import graft.index.{PostingListMerger, PostingListReader, SortedIds, TableIO}
 import scala.collection.parallel.CollectionConverters._
 
@@ -324,55 +323,24 @@ final class InMemoryIndex(
     }
   }
 
-  /** Spelling suggestions from the resident term dictionary (Q8 semantics,
-    * same scoring as [[Bm25Query.suggest]]).
-    */
-  // first-char buckets of the suggest dictionary: a misspelled term scans
-  // only its prefix bucket, not the whole vocabulary (suggest already
-  // restricts candidates to the same first character). Bucket key is the
-  // first CODE POINT, not charAt(0): Spark's substring/startsWith gates are
-  // code-point based, so a UTF-16-unit key would let two supplementary-plane
-  // terms sharing only a high surrogate pair up here but not on the Spark
-  // path — a silent resident-vs-Spark suggest parity break
+  // first-code-point buckets of the suggest dictionary: a misspelled term
+  // ranks only its prefix bucket, not the whole vocabulary (the suggester
+  // restricts candidates to the same first code point — the same bucket key
+  // the Spark plan's startsWith and the local termdict read use)
   private val dictByPrefix: Map[String, Map[Int, Array[(String, Long)]]] =
     dict.map { case (lang, entries) =>
-      lang -> entries.filter(e => e._1.length >= 3).groupBy(_._1.codePointAt(0))
+      lang -> entries.filter(e => QueryCore.cpLen(e._1) >= QueryCore.SuggestMinLen)
+        .groupBy(_._1.codePointAt(0))
     }
 
+  /** Spelling suggestions from the resident term dictionary (Q8 semantics;
+    * the ranking rule is [[QueryCore.suggest]], shared with
+    * [[Bm25Query.suggest]]).
+    */
   def suggest(lang: String, query: String, size: Int = 5, minScore: Double = 0.6): Seq[String] = {
-    val qTerms = Analyzer.terms(query, lang).filter(_.length >= 3)
     val byPrefix = dictByPrefix.getOrElse(lang, Map.empty)
-    // dedup BEFORE the bucket scan (same reasoning as Bm25Query.suggest): a
-    // repeated misspelled term would re-pay the full first-char-bucket scan
-    // + OSA DP per occurrence for output the trailing .distinct collapses
-    qTerms.toSeq.distinct.flatMap { w =>
-      byPrefix.getOrElse(w.codePointAt(0), Array.empty[(String, Long)]).iterator
-        .filter { case (t, _) =>
-          // length-delta prefilter BEFORE the O(len²) OSA DP: |len diff| is
-          // a lower bound on edit distance, so score can only reach minScore
-          // when the delta is within (1-minScore)·maxLen — at web scale a
-          // first-letter bucket is millions of terms (the Spark path
-          // prefilters with the built-in levenshtein for the same reason)
-          // |len diff| also lower-bounds OSA, so the max_edits=2 cap below
-          // prunes here too
-          t != w && math.abs(t.length - w.length) <= 2 &&
-            math.abs(t.length - w.length) <=
-              (1.0 - minScore) * math.max(w.length, t.length)
-        }
-        .map { case (t, dfv) =>
-          val dist = Bm25Query.damerauLevenshtein(w, t)
-          (t, dfv, 1.0 - dist.toDouble / math.max(w.length, t.length), dist)
-        }
-        // max_edits cap (OpenSearch term-suggester default; the reference
-        // never overrides it) AND the score floor — same rule as
-        // Bm25Query.suggest, gated identical by the parity spec
-        .filter(c => c._4 <= 2 && c._3 >= minScore)
-        .map { case (t, dfv, s, _) => (t, dfv, s) }
-        .toSeq
-        .sortBy { case (t, dfv, s) => (-s, -dfv, t) }
-        .take(size)
-        .map(_._1)
-    }.distinct
+    QueryCore.suggest(QueryCore.suggestWords(query, lang),
+      cp => byPrefix.getOrElse(cp, Array.empty[(String, Long)]).iterator, size, minScore)
   }
 }
 

@@ -245,6 +245,126 @@ object QueryCore {
       exIts, allowed, ctx.k, ctx.cap, ctx.phrasePlan))
   }
 
+  // ---- the term suggester (reference index_searcher.py:660-674) ----
+  // ONE rule for every deployment: the resident node's dictionary buckets,
+  // the local termdict read and the Spark plan's OSA UDF all go through the
+  // functions below. Lengths, distances and the term tie-break are in CODE
+  // POINTS — the unit Spark's length/levenshtein/substring and the parquet
+  // UTF-8 byte order use — so a supplementary-plane term scores and ranks
+  // the same on every path.
+
+  /** The suggester's min_word_length, in code points. */
+  val SuggestMinLen = 3
+  /** The suggester's max_edits (OpenSearch term-suggester default, which
+    * the reference never overrides). */
+  val SuggestMaxEdits = 2
+
+  def cpLen(s: String): Int = s.codePointCount(0, s.length)
+
+  /** Query words the suggester corrects: analyzed terms of at least
+    * [[SuggestMinLen]] code points, first occurrence only (a repeated word
+    * would otherwise re-rank the same bucket for output the final dedup
+    * drops).
+    */
+  def suggestWords(query: String, lang: String): Seq[String] =
+    Analyzer.terms(query, lang).iterator.filter(cpLen(_) >= SuggestMinLen).distinct.toSeq
+
+  /** Length-delta prefilter, run before the OSA DP: |len diff| lower-bounds
+    * the edit distance, so a candidate of code-point length `tl` can only
+    * pass the max_edits cap and the score floor for a word of length `wl`
+    * when the delta is within both.
+    */
+  def suggestLenOk(wl: Int, tl: Int, minScore: Double): Boolean = {
+    val d = math.abs(tl - wl)
+    d <= SuggestMaxEdits && d <= (1.0 - minScore) * math.max(wl, tl)
+  }
+
+  /** Top-`size` corrections of one word among `candidates` (term, df) that
+    * share its first code point: length ≥ [[SuggestMinLen]], not the word
+    * itself, OSA distance ≤ [[SuggestMaxEdits]], score 1 − d/maxLen ≥
+    * `minScore`, ranked by (score desc, df desc, term in code-point order).
+    */
+  def rankSuggestions(w: String, candidates: Iterator[(String, Long)],
+      size: Int, minScore: Double): Seq[String] = {
+    val wcp = codePoints(w)
+    val out = scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
+    candidates.foreach { case (t, df) =>
+      val tl = cpLen(t)
+      if (tl >= SuggestMinLen && suggestLenOk(wcp.length, tl, minScore) && t != w) {
+        val dist = osa(wcp, codePoints(t))
+        val score = 1.0 - dist.toDouble / math.max(wcp.length, tl)
+        if (dist <= SuggestMaxEdits && score >= minScore) out += ((t, df, score))
+      }
+    }
+    out.sortWith { (a, b) =>
+      if (a._3 != b._3) a._3 > b._3
+      else if (a._2 != b._2) a._2 > b._2
+      else cpCompare(a._1, b._1) < 0
+    }.iterator.take(size).map(_._1).toSeq
+  }
+
+  /** Suggestions for a query's words: each word ranked against its
+    * first-code-point bucket, concatenated in word order, deduped.
+    */
+  def suggest(words: Seq[String], bucket: Int => Iterator[(String, Long)],
+      size: Int, minScore: Double): Seq[String] =
+    words.flatMap(w => rankSuggestions(w, bucket(w.codePointAt(0)), size, minScore)).distinct
+
+  /** Code-point order (= UTF-8 byte order, Spark's string order); differs
+    * from String.compareTo only between surrogates and U+E000..U+FFFF.
+    */
+  def cpCompare(a: String, b: String): Int = {
+    var i = 0; var j = 0
+    while (i < a.length && j < b.length) {
+      val x = a.codePointAt(i); val y = b.codePointAt(j)
+      if (x != y) return Integer.compare(x, y)
+      i += Character.charCount(x); j += Character.charCount(y)
+    }
+    Integer.compare(a.length - i, b.length - j)
+  }
+
+  /** Optimal-string-alignment Damerau-Levenshtein over code points (the
+    * variant Lucene's suggester uses).
+    */
+  def damerauLevenshtein(a: String, b: String): Int = osa(codePoints(a), codePoints(b))
+
+  private def codePoints(s: String): Array[Int] = {
+    val out = new Array[Int](cpLen(s))
+    var i = 0; var k = 0
+    while (i < s.length) {
+      val c = s.codePointAt(i)
+      out(k) = c; k += 1
+      i += Character.charCount(c)
+    }
+    out
+  }
+
+  /** OSA distance with three rolling DP rows (i-2, i-1, i). */
+  private def osa(a: Array[Int], b: Array[Int]): Int = {
+    val m = a.length; val n = b.length
+    if (m == 0) return n
+    if (n == 0) return m
+    var prev2 = new Array[Int](n + 1)
+    var prev = Array.tabulate(n + 1)(identity)
+    var cur = new Array[Int](n + 1)
+    var i = 1
+    while (i <= m) {
+      cur(0) = i
+      var j = 1
+      while (j <= n) {
+        val cost = if (a(i - 1) == b(j - 1)) 0 else 1
+        var d = math.min(math.min(prev(j) + 1, cur(j - 1) + 1), prev(j - 1) + cost)
+        if (i > 1 && j > 1 && a(i - 1) == b(j - 2) && a(i - 2) == b(j - 1))
+          d = math.min(d, prev2(j - 2) + cost)
+        cur(j) = d
+        j += 1
+      }
+      val t = prev2; prev2 = prev; prev = cur; cur = t
+      i += 1
+    }
+    prev(n)
+  }
+
   /** Merge per-segment heaps → (page, totalHits, relation). */
   def merge(q: QuerySpec, segResults: Array[SegmentResult]): (Array[ScoredDoc], Long, String) = {
     val merged = new TopK(q.from + q.pageSize)

@@ -34,8 +34,9 @@ object ExplainCli {
       "aggregation — with lang pushdown, ReadSchema only term/df) ===")
     Bm25Query.termDictDf(spark, idx, "hi").explain("formatted")
 
-    println("=== distributed BATCHED suggest plan (ONE job for a multi-term " +
-      "query: termdict scan with an OR of pushable StartsWith filters → " +
+    println("=== distributed BATCHED suggest plan — runs for NON-LOCAL index " +
+      "dirs only (a local termdict is read on the driver, no job) (ONE job " +
+      "for a multi-term query: termdict scan with an OR of pushable StartsWith filters → " +
       "explode vs same-first-char query terms → levenshtein prefilter → " +
       "OSA UDF + max_edits cap → per-term window top-n; expect StartsWith " +
       "in PushedFilters) ===")

@@ -127,6 +127,47 @@ class LocalParquetSpec extends AnyFunSuite {
     assert(fullLocal.sorted == fullSpark.toSeq.sorted)
   }
 
+  test("multi-file reads on the shared pool keep file order; a broken file fails the read") {
+    val src = LocalParquet.dataFiles(s"$dir/docstore").map(_._1)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-localpq-multi").toFile
+    try {
+      // more files than cores, so every worker takes several
+      val copies = (0 until 3 * Runtime.getRuntime.availableProcessors()).map { k =>
+        val f = src(k % src.size)
+        val to = new java.io.File(tmp, f"part-$k%03d.parquet")
+        java.nio.file.Files.copy(f.toPath, to.toPath)
+        f
+      }
+      def ids(d: String) = LocalParquet.read(d, Seq("docId"), null, (g, _) => LocalParquet.lng(g, "docId"))
+      val expect = copies.flatMap(f => ids(f.getPath))
+      assert(ids(tmp.getPath) == expect)
+      java.nio.file.Files.write(new java.io.File(tmp, "part-999.parquet").toPath, "not parquet".getBytes)
+      assertThrows[Exception](ids(tmp.getPath))
+    } finally scala.reflect.io.Directory(tmp).deleteRecursively()
+  }
+
+  test("termdict first-code-point bucket read matches the Spark startsWith scan") {
+    import spark.implicits._
+    val p = idx.termdictPath.get
+    // two hi buckets plus a supplementary-plane one no term starts with,
+    // under a record-level keep predicate
+    val words = Seq(Webtext.word("hi", 3), Webtext.word("hi", 7))
+    val cps = words.map(_.codePointAt(0)) :+ 0x10330
+    val keep = (t: String) => QueryCore.cpLen(t) >= 4
+    val prefixes = cps.map(cp => new String(Character.toChars(cp)))
+    val sparkRows = spark.read.parquet(p)
+      .where(col("lang") === "hi" && prefixes.map(col("term").startsWith).reduce(_ || _))
+      .select("term", "df").as[(String, Long)].collect()
+      .filter(r => keep(r._1))
+    // the reader hands keep the first code point and the length read off
+    // the UTF-8 bytes: a wrong decode of either drops or admits rows
+    val localRows = LocalParquet.readTermDictBuckets(p, "hi", cps, (cp, len) =>
+      len >= 4 && cps.contains(cp))
+    assert(localRows.nonEmpty)
+    assert(localRows.sorted == sparkRows.toSeq.sorted)
+    assert(LocalParquet.readTermDictBuckets(p, "hi", Seq(0x10330), (_, _) => true).isEmpty)
+  }
+
   test("search over the local fast path equals the Spark-collect driver path") {
     // the production search() takes the local branch on this local dir; the
     // Spark branch is forced by pointing MaxDriverPostings at the executor

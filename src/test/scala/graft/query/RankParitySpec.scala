@@ -185,10 +185,11 @@ class RankParitySpec extends AnyFunSuite {
     // rank budget)
     assert(Bm25Query.suggest(spark, idx, "hi", s"$missp $missp") ==
       Bm25Query.suggest(spark, idx, "hi", missp))
-    // a multi-term misspelled query is ONE batched Spark action — its job
-    // count must NOT scale with the number of query terms (it used to be
-    // one sequential dict-scan job per term; AQE may split one action into
-    // a few jobs, so the gate is 3-term == 1-term, not == 1)
+    // job budget: on a local index dir suggest reads the termdict on the
+    // driver — NO Spark job, for one misspelled word or three. The Spark
+    // plan (non-local dirs) stays ONE batched action: its job count must
+    // not scale with the number of words (AQE may split one action into a
+    // few jobs, so the gate is 3-word == 1-word, not == 1)
     locally {
       def missp2(r: Int): String = {
         val w = Webtext.word("hi", r)
@@ -200,22 +201,120 @@ class RankParitySpec extends AnyFunSuite {
             s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      def jobsFor(q: String): Int = {
+      def jobsFor(body: => Unit): Int = {
         spark.sparkContext.addSparkListener(listener)
         try {
           jobs.set(0)
-          assert(Bm25Query.suggest(spark, idx, "hi", q).nonEmpty)
+          body
           // listener events are posted asynchronously — poll to quiescence
           var last = -1
           while (jobs.get() != last) { last = jobs.get(); Thread.sleep(250) }
           last
         } finally spark.sparkContext.removeSparkListener(listener)
       }
-      val one = jobsFor(missp2(10))
-      val three = jobsFor(Seq(10, 20, 40).map(missp2).mkString(" "))
-      assert(three == one,
-        s"suggest job count scales with terms: 1-term=$one vs 3-term=$three")
+      val one = missp2(10)
+      val three = Seq(10, 20, 40).map(missp2).mkString(" ")
+      Seq(one, three).foreach { q =>
+        val local = jobsFor(assert(Bm25Query.suggest(spark, idx, "hi", q).nonEmpty))
+        assert(local == 0, s"local suggest ran $local Spark jobs for '$q'")
+      }
+      def planJobs(q: String): Int = jobsFor(assert(Bm25Query.suggestPlan(spark, idx,
+        "hi", QueryCore.suggestWords(q, "hi"), size = 5, minScore = 0.6).collect().nonEmpty))
+      val planOne = planJobs(one)
+      val planThree = planJobs(three)
+      assert(planThree == planOne,
+        s"suggest plan job count scales with words: 1-word=$planOne vs 3-word=$planThree")
     }
+  }
+
+  test("suggest three-way parity: seeded hi/gu/en typos — local termdict read == resident == Spark plan") {
+    val mem = InMemoryIndex.load(spark, idx, withDocs = false)
+    val vocab: Map[String, Array[String]] =
+      graft.index.LocalParquet.readTermDictFull(idx.termdictPath.get)
+        .groupBy(_._1).map { case (l, rs) => l -> rs.map(_._2).sorted.toArray }
+    val rnd = new scala.util.Random(1207)
+    def cps(s: String): Array[Int] = s.codePoints.toArray
+    def str(a: Array[Int]): String = new String(a, 0, a.length)
+    // one typo of `w`, never at the first code point (the suggester's
+    // prefix_length 1 would make the source word unreachable)
+    def typo(w: Array[Int], alphabet: Array[Int], kind: Int): String = {
+      val i = 1 + rnd.nextInt(w.length - 1)
+      kind match {
+        case 0 => str(w.patch(i, Nil, 1))                                 // deletion
+        case 1 if i < w.length - 1 =>                                     // transposition
+          str(w.updated(i, w(i + 1)).updated(i + 1, w(i)))
+        case 2 => str(w.updated(i, alphabet(rnd.nextInt(alphabet.length)))) // substitution
+        case _ => str(w.patch(i, Seq(alphabet(rnd.nextInt(alphabet.length))), 0)) // insertion
+      }
+    }
+    val queries: Seq[(String, String)] = Seq("hi", "gu", "en").flatMap { lang =>
+      val words = vocab(lang).filter(QueryCore.cpLen(_) >= 3)
+      val alphabet = words.flatMap(cps).distinct
+      // length-3 boundary: words of 3 and 4 code points, so a deletion
+      // lands on both sides of min_word_length
+      val short = words.filter(w => QueryCore.cpLen(w) <= 4)
+      val picks = Seq.fill(60)(words(rnd.nextInt(words.length))) ++
+        Seq.fill(12)(short(rnd.nextInt(short.length)))
+      picks.zipWithIndex.map { case (w, k) => lang -> typo(cps(w), alphabet, k % 4) } ++
+        // a repeated word, and two typos in one query
+        Seq(lang -> Seq.fill(2)(typo(cps(picks(0)), alphabet, 2)).mkString(" "),
+          lang -> s"${typo(cps(picks(1)), alphabet, 0)} ${typo(cps(picks(2)), alphabet, 1)}")
+    }
+    assert(queries.size >= 200)
+    // the Spark side: ONE plan per language over every query word (ranking
+    // is per word), assembled per query exactly like suggestSpark
+    val viaPlan: Map[(String, String), Seq[String]] =
+      queries.groupBy(_._1).flatMap { case (lang, qs) =>
+        import spark.implicits._
+        val words = qs.flatMap(q => QueryCore.suggestWords(q._2, lang)).distinct
+        val byWord = Bm25Query.suggestPlan(spark, idx, lang, words, 5, 0.6)
+          .as[(String, Int, String)].collect().groupBy(_._1)
+        qs.map(q => q -> QueryCore.suggestWords(q._2, lang)
+          .flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct)
+      }
+    var nonEmpty = 0
+    queries.foreach { case q @ (lang, text) =>
+      val local = Bm25Query.suggest(spark, idx, lang, text)
+      assert(local == mem.suggest(lang, text), s"local vs resident on $q")
+      assert(local == viaPlan(q), s"local vs Spark plan on $q")
+      if (local.nonEmpty) nonEmpty += 1
+    }
+    assert(nonEmpty >= queries.size / 2, s"only $nonEmpty of ${queries.size} typos got suggestions")
+    // the production Spark branch assembles the same answer
+    queries.filter(_._2.contains(" ")).foreach { case q @ (lang, text) =>
+      val words = QueryCore.suggestWords(text, lang)
+      if (words.nonEmpty)
+        assert(Bm25Query.suggestSpark(spark, idx, lang, words, 5, 0.6) == viaPlan(q), s"$q")
+    }
+
+    // supplementary-plane terms (Gothic letters: caseless, so the analyzer
+    // keeps them): lengths and distances count CODE POINTS on every path
+    import spark.implicits._
+    val d = "/tmp/graft-test-sugg-astral-idx"
+    val f = new java.io.File(d)
+    if (f.exists()) scala.reflect.io.Directory(f).deleteRecursively()
+    val now = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
+    val g1 = new String(Character.toChars(0x10330))
+    val g2 = new String(Character.toChars(0x10331))
+    val texts = Seq(s"${g1}bxy ${g1}bcde ${g1}${g2}c ${g1}b filler", s"${g1}bcdf ${g1}${g2}x words")
+    val docs = texts.zipWithIndex.map { case (t, i) =>
+      graft.corpus.WebDoc(i.toLong, s"https://t/$i", now, Array.emptyByteArray, t, "en",
+        Map.empty[String, String]) }
+    IndexBuild.build(spark, docs.toDF(), d, numChunks = 1)
+    val aIdx = IndexHandle.load(d)
+    val aMem = InMemoryIndex.load(spark, aIdx, withDocs = false)
+    Seq(s"${g1}bcd", s"${g1}${g2}d", s"${g1}bc", s"${g1}b", s"${g1}bcd ${g1}${g2}d").foreach { q =>
+      val local = Bm25Query.suggest(spark, aIdx, "en", q)
+      val words = QueryCore.suggestWords(q, "en")
+      assert(local == aMem.suggest("en", q), s"local vs resident on $q")
+      assert(local == (if (words.isEmpty) Nil
+        else Bm25Query.suggestSpark(spark, aIdx, "en", words, 5, 0.6)), s"local vs Spark plan on $q")
+    }
+    // "𐌰bxy" is 2 edits from "𐌰bcd" over 4 code points: score 0.5 < 0.6
+    // (counting UTF-16 units, 5, would have admitted it at 0.6); "𐌰b" is 2
+    // code points, under min_word_length
+    assert(Bm25Query.suggest(spark, aIdx, "en", s"${g1}bcd") == Seq(s"${g1}bcde", s"${g1}bcdf"))
+    assert(Bm25Query.suggest(spark, aIdx, "en", s"${g1}b").isEmpty)
   }
 
   test("shardable serving: bucket-subset load == full load for in-shard queries") {
