@@ -235,7 +235,8 @@ object IndexAccessRule extends Rule[LogicalPlan] with PredicateHelper {
     * docstore scan keeps reading the `text` bytes the rewrite just made
     * unnecessary — the dominant share of corpus bytes and most of the win
     * (measured: the scan drops from every column to the join/projection
-    * set once pruning re-runs; `tools.RuleAb` reports `text_pruned`). The
+    * set once pruning re-runs; IndexAccessRuleSpec's text-pruning case
+    * asserts it on the physical plan). The
     * extensions path doesn't need this — `injectOptimizerRule` rules run
     * INSIDE the operator-optimization fixed point, where pruning re-fires
     * on its own.

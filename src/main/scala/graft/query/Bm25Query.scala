@@ -122,21 +122,24 @@ object IndexHandle {
 }
 
 /** The query engine: replaces the `client.search(...)` boundary of the
-  * reference (backend/search/index_searcher.py:368-373) with Spark jobs over
-  * the posting segments.
+  * reference (backend/search/index_searcher.py:368-373) with reads of the
+  * on-disk posting segments.
   *
   * Execution: postings/facet rows for the query terms are read with
   * (lang, term) pushdown, grouped by segment (chunk), and each segment runs
-  * the [[SearchKernel]] IN AN EXECUTOR TASK — per-segment parallel top-k, then
-  * a driver-side k-way merge of the tiny per-segment heaps. No shuffle of
-  * postings ever happens at query time; the only data movement is
-  * O(#segments × (from+k)) ScoredDocs.
+  * the [[SearchKernel]] for a per-segment top-k, then a k-way merge of the
+  * per-segment heaps. A query whose candidate volume fits under
+  * [[MaxDriverPostings]] reads its rows on the driver through
+  * [[graft.index.LocalParquet]] (df lookups, postings, facets, payloads and
+  * suggestions: no Spark job, on any FileSystem scheme); a larger one runs
+  * the segment kernels IN EXECUTOR TASKS over a cogroup of the posting and
+  * facet rows, and only O(#segments × (from+k)) ScoredDocs reach the driver.
   */
 object Bm25Query {
 
-  /** Below this Σdf the query collects its posting blobs and runs the kernel
-    * on the driver (one Spark job instead of a cogroup shuffle); above it the
-    * per-segment kernels run in executor tasks. ~5M postings ≈ tens of MB.
+  /** Below this Σdf the query reads its posting blobs on the driver and runs
+    * the kernel there (no Spark job); above it the per-segment kernels run
+    * in executor tasks. ~5M postings ≈ tens of MB.
     * Driver-side config knob (mutable for tests / tuning).
     */
   @volatile var MaxDriverPostings: Long =
@@ -149,11 +152,11 @@ object Bm25Query {
   @volatile var DfCacheMax: Int = 1 << 20
 
   /** Corpus-wide df for `terms`, served from the handle's driver-resident
-    * term-df cache; only UNCACHED terms pay the Spark probe job (a
-    * groupBy(term).sum(df) over the (lang, term)-pruned segments scan).
-    * A query whose terms are all cached skips one of its three sequential
-    * Spark jobs — repeat terms are the norm (head terms at web scale), so
-    * steady-state query latency drops to kernel + payload-fetch.
+    * term-df cache; only UNCACHED terms pay a probe: a (lang, term)-pruned
+    * termdict read on the driver, or on a pre-termdict index a Spark
+    * groupBy(term).sum(df) over the segments. Repeat terms are the norm
+    * (head terms at web scale), so steady-state query latency drops to
+    * kernel + payload-fetch.
     */
   def globalDfMap(spark: SparkSession, idx: IndexHandle, lang: String,
       terms: Seq[String]): Map[String, Long] = {
@@ -163,12 +166,11 @@ object Bm25Query {
     val missing = terms.filterNot(cached.contains)
     if (missing.isEmpty) cached
     else {
-      // termdict when present (one pruned row per term, no aggregation);
-      // local indexes read it directly on the driver (LocalParquet — same
-      // pushdown, no Spark job); pre-termdict indexes fall back to the
+      // termdict when present (one pruned row per term, read on the driver
+      // with no aggregation); pre-termdict indexes fall back to the
       // segments aggregation
       val probed: Map[String, Long] = idx.termdictPath match {
-        case Some(p) if graft.index.LocalParquet.isLocalDir(p) =>
+        case Some(p) =>
           graft.index.LocalParquet.readTermDict(p, lang, missing).toMap
         case _ =>
           termDictDf(spark, idx, lang)
@@ -200,10 +202,9 @@ object Bm25Query {
 
     val allTerms = (terms.map(_._1) ++ ctx.excludeTerms).distinct
     val hasFilters = ctx.facetSel.nonEmpty || ctx.dateSel.nonEmpty
-    val local = graft.index.LocalParquet.isLocalDir(idx.dir)
 
     // global df per term (for idf + execution-path choice) — from the
-    // handle's term-df cache; only first-seen terms pay a probe job
+    // handle's term-df cache; only first-seen terms pay a probe
     import spark.implicits._
     val dfMap: Map[String, Long] = globalDfMap(spark, idx, q.lang, allTerms)
     // ctx.mode, not q.mode: context() forces "all" for phrase queries, so a
@@ -219,70 +220,27 @@ object Bm25Query {
     // streams, and a rare-term query over a broad filter (date-range's
     // has_date='0' branch, a category covering half the corpus) is
     // facet-dominated: gating on postings alone would pull corpus-scale
-    // docId lists onto the driver. Small → collect the blobs and run kernels
-    // ON THE DRIVER (one Spark job, Lucene-like latency). Large → per-segment
+    // docId lists onto the driver. Small → read the blobs and run kernels
+    // ON THE DRIVER (no Spark job, Lucene-like latency). Large → per-segment
     // kernels in executor tasks via cogroup (nothing ever concentrates on
     // the driver). The facet volume is one pruned df-column probe (no blobs
     // read), cached per (lang, selection) on the handle like term dfs.
     val dfSum = dfMap.values.sum
     val totalPostings =
       if (!hasFilters || dfSum > MaxDriverPostings) dfSum // probe can't change the verdict
-      else dfSum + facetVolume(spark, idx, q.lang, ctx)
+      else dfSum + facetVolume(idx, q.lang, ctx)
     val segResults: Array[SegmentResult] =
-      if (totalPostings <= MaxDriverPostings && local) {
-        // LOCAL driver path: the query's posting/facet rows are a few
+      if (totalPostings <= MaxDriverPostings) {
+        // driver path: the query's posting/facet rows are a few
         // pushdown-pruned KB that land on the driver either way — read the
-        // parquet directly (LocalParquet: same PushedFilters-shaped
-        // predicates, row-group pruning, projection) instead of paying a
-        // full Spark job's scheduling latency per read. Same rows, gated by
-        // LocalParquetSpec + RankParitySpec.
+        // parquet directly (LocalParquet: PushedFilters-shaped predicates,
+        // row-group pruning, projection) instead of paying a Spark job's
+        // scheduling latency per read (LocalParquetSpec + RankParitySpec)
         val postList: Array[QueryCore.PostRow] =
           graft.index.LocalParquet.readSegmentRows(
             idx.segmentsPath, q.lang, allTerms.toSeq, ctx.phrase).toArray
         val facetList: Array[QueryCore.FacetRow] =
-          if (!hasFilters) Array.empty else localFacetRows(idx, q.lang, ctx)
-        val facetByChunk = QueryCore.decodeFacets(facetList).groupBy(_._1)
-        postList.groupBy(_._1).iterator.flatMap { case (chunk, posts) =>
-          QueryCore.segmentKernel(ctx, info, posts, facetByChunk.getOrElse(chunk, Array.empty))
-        }.toArray
-      } else if (totalPostings <= MaxDriverPostings) {
-        // non-local index dir: same driver path through Spark collects.
-        // postings and facet lists are independent reads — submit both jobs
-        // concurrently (Spark schedules parallel jobs from separate threads),
-        // so a filtered query pays max(post, facet) latency, not the sum
-        val posCol = if (ctx.phrase) col("posBlob") else lit(null).cast("binary").as("posBlob")
-        val rows = spark.read.parquet(idx.segmentsPath)
-          .where(col("lang") === q.lang && col("term").isin(allTerms.toSeq: _*))
-          .select(col("chunk"), col("term"), col("df"), col("blob"), posCol)
-        val facetRows: DataFrame = facetReadDf(spark, idx, q.lang, ctx)
-        val facetFut =
-          if (facetRows == null) null
-          else scala.concurrent.Future(
-            // blocking{}: the collect parks this global-pool thread for a
-            // full Spark job; the hint lets the pool compensate instead of
-            // starving under concurrent filtered searches
-            scala.concurrent.blocking { facetRows.as[QueryCore.FacetRow].collect() })(
-            scala.concurrent.ExecutionContext.global)
-        val postList =
-          try rows.as[QueryCore.PostRow].collect()
-          catch { case t: Throwable =>
-            // the concurrent facet job cannot be cancelled from here (no
-            // job-group tagging on this path) — observe its future so the
-            // in-flight job's own failure is never an unobserved orphan,
-            // then surface the postings failure as THE error
-            if (facetFut != null)
-              facetFut.onComplete(_ => ())(scala.concurrent.ExecutionContext.global)
-            throw t
-          }
-        val facetList =
-          if (facetFut == null) Array.empty[QueryCore.FacetRow]
-          // Duration.Inf is deliberate: this parallels the synchronous
-          // .collect() above, which is itself an unbounded same-JVM wait on
-          // the same scheduler — a bound here would time out legitimate
-          // large-corpus facet reads while protecting against nothing the
-          // sibling collect isn't equally exposed to (PeerRpc's bounded
-          // waits guard CROSS-PROCESS hangs, a different failure domain)
-          else scala.concurrent.Await.result(facetFut, scala.concurrent.duration.Duration.Inf)
+          if (!hasFilters) Array.empty else driverFacetRows(idx, q.lang, ctx)
         val facetByChunk = QueryCore.decodeFacets(facetList).groupBy(_._1)
         postList.groupBy(_._1).iterator.flatMap { case (chunk, posts) =>
           QueryCore.segmentKernel(ctx, info, posts, facetByChunk.getOrElse(chunk, Array.empty))
@@ -316,21 +274,13 @@ object Bm25Query {
         // null url/text normalize to "" exactly like the resident path
         // (InMemoryIndex.load documents NULL columns as legal docstore
         // rows); a null Hit.url would NPE the JSON render downstream
+        // page-sized point read: docId-sorted row groups prune to ~one
+        // row group per file
         val docs: Map[Long, (String, String)] =
-          if (local)
-            // page-sized point read — docId-sorted row groups prune the same
-            // way the Spark isin scan did, minus the job overhead
-            graft.index.LocalParquet.readDocPayloads(s"${idx.dir}/docstore", ids.toSeq)
-              .map { case (id, url, _, text) =>
-                id -> (if (url == null) "" else url, if (text == null) "" else text)
-              }.toMap
-          else spark.read.parquet(s"${idx.dir}/docstore")
-            .where(col("docId").isin(ids.toSeq: _*))
-            .select("docId", "url", "lang", "text")
-            .collect()
-            .map(r => r.getLong(0) ->
-              (Option(r.getString(1)).getOrElse(""), Option(r.getString(3)).getOrElse("")))
-            .toMap
+          graft.index.LocalParquet.readDocPayloads(s"${idx.dir}/docstore", ids.toSeq)
+            .map { case (id, url, _, text) =>
+              id -> (if (url == null) "" else url, if (text == null) "" else text)
+            }.toMap
         val qset = terms.map(_._1).toSet
         page.toSeq.map { sd =>
           // a winner can be missing from the docstore when a mutation
@@ -433,37 +383,27 @@ object Bm25Query {
   }
 
   /** Σdf over the facet rows a query's filter selection reads — the volume
-    * the driver path would collect. One aggregation over the ALREADY-PRUNED
-    * facet read (column pruning drops the docId blobs from the scan: only
-    * the tiny df column is read), cached on the handle per (lang, canonical
-    * selection) so repeat filtered queries — the norm for UI-issued date
-    * pickers and category filters — skip the probe entirely.
+    * the driver path would read. One df-column-only driver read of the
+    * pruned facet rows (the docId blobs are never read), cached on the
+    * handle per (lang, canonical selection) so repeat filtered queries — the
+    * norm for UI-issued date pickers and category filters — skip the probe
+    * entirely.
     */
-  private def facetVolume(spark: SparkSession, idx: IndexHandle, lang: String,
-      ctx: QueryCore.Ctx): Long = {
+  private def facetVolume(idx: IndexHandle, lang: String, ctx: QueryCore.Ctx): Long = {
     // structural key, not toString: rendered strings collide (a value
     // containing ", " is indistinguishable from two values) and a collision
     // silently reuses another selection's volume in the path choice
     val key = (lang, (ctx.facetSel, ctx.dateSel): AnyRef)
     Option(idx.facetVolCache.get(key)).map(_.longValue).getOrElse {
-      val v =
-        if (graft.index.LocalParquet.isLocalDir(idx.dir))
-          // df-column-only local probe (withBlob = false: the docId blobs are
-          // never read), same label-multiplicity as the union the Spark agg
-          // summed over
-          localFacetRows(idx, lang, ctx, withBlob = false).iterator.map(_._3).sum
-        else {
-          val facetRows = facetReadDf(spark, idx, lang, ctx)
-          val r = facetRows.agg(sum(col("df"))).collect()(0)
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
+      // same label multiplicity as the rows the kernel reads
+      val v = driverFacetRows(idx, lang, ctx, withBlob = false).iterator.map(_._3).sum
       if (idx.facetVolCache.size > DfCacheMax) idx.facetVolCache.clear()
       idx.facetVolCache.put(key, Long.box(v))
       v
     }
   }
 
-  /** Local-read analog of [[facetReadDf]]: ONE pass over the pruned facet
+  /** Driver-read analog of [[facetReadDf]]: ONE pass over the pruned facet
     * files, then the same per-branch labeling the Spark union produced — a
     * facetSel match keeps its physical key, a date-rule match is relabeled
     * to the rule's synthetic key, and a row matching both branches is
@@ -472,7 +412,7 @@ object Bm25Query {
     * consumes; values on the date keys are ASCII ISO dates, so Java string
     * order, Spark UTF8String order and the parquet STRING comparator agree.
     */
-  private def localFacetRows(idx: IndexHandle, lang: String,
+  private def driverFacetRows(idx: IndexHandle, lang: String,
       ctx: QueryCore.Ctx, withBlob: Boolean = true): Array[QueryCore.FacetRow] = {
     val rules = ctx.dateSel.map(QueryCore.dateRules).getOrElse(Seq.empty)
     val conds: Seq[(String, Option[Seq[String]], Option[(Option[String], Option[String])])] =
@@ -629,18 +569,18 @@ object Bm25Query {
     * prefix_length 1, candidates within Damerau-Levenshtein ≤ 2, score =
     * 1 − d/maxLen ≥ 0.6, ranked by (score desc, docFreq desc).
     *
-    * A local termdict is read on the driver (no Spark job): only the query
+    * The termdict is read on the driver (no Spark job): only the query
     * words' first-code-point buckets, only rows passing the length
     * prefilter, ranked by [[QueryCore.suggest]] — the rule the resident
-    * node runs. Other index dirs collect [[suggestPlan]], which scores in
-    * executors and brings only the per-word top-`size` to the driver.
+    * node runs. Pre-termdict indexes collect [[suggestPlan]], which scores
+    * in executors and brings only the per-word top-`size` to the driver.
     */
   def suggest(spark: SparkSession, idx: IndexHandle, lang: String, query: String,
       size: Int = 5, minScore: Double = 0.6): Seq[String] = {
     val words = QueryCore.suggestWords(query, lang)
     if (words.isEmpty) return Nil
     idx.termdictPath match {
-      case Some(p) if graft.index.LocalParquet.isLocalDir(p) =>
+      case Some(p) =>
         // a row is kept while reading when it could correct SOME word of its
         // bucket; the ranking re-checks it per word
         val byCp = words.groupBy(_.codePointAt(0)).toArray
@@ -653,7 +593,7 @@ object Bm25Query {
           })
         val byPrefix = rows.groupBy(_._1.codePointAt(0))
         QueryCore.suggest(words, cp => byPrefix.getOrElse(cp, Nil).iterator, size, minScore)
-      case _ => suggestSpark(spark, idx, lang, words, size, minScore)
+      case None => suggestSpark(spark, idx, lang, words, size, minScore)
     }
   }
 
@@ -671,8 +611,9 @@ object Bm25Query {
     words.flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct
   }
 
-  /** THE batched Spark suggest plan, for index dirs [[suggest]] cannot read
-    * locally — shared by [[suggest]] (which collects it) and
+  /** THE batched Spark suggest plan, the distributed form of [[suggest]]
+    * and its path on pre-termdict indexes — shared by [[suggest]] (which
+    * collects it) and
     * `tools.ExplainCli` (which explains it), so the inspected plan can never
     * desync from the executed one. `qSeq` are [[QueryCore.suggestWords]].
     * Columns: (qword, rank, term).

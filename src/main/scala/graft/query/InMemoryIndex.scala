@@ -29,7 +29,6 @@ import scala.collection.parallel.CollectionConverters._
   * terms/filter-keys fall inside its shards.
   */
 final class InMemoryIndex(
-    spark: SparkSession,
     idx: IndexHandle,
     postings: java.util.HashMap[(String, String), (Long, Array[Byte], Array[Byte])],
     facets: Map[(String, String, String), Array[Long]],
@@ -167,34 +166,22 @@ final class InMemoryIndex(
 
   // Bounded payload cache for bucket/chunk-subset nodes (no resident
   // docstore): head queries repeat their winners, so only FIRST-seen page
-  // docs pay the point-read Spark job — the same serving-cache idea as the
+  // docs pay the docstore point read — the same serving-cache idea as the
   // reference's 30-min metadata TTL cache (search_api.py:86). Node is bound
   // to one index version (reload after mutations), so entries never go stale.
   private val payloadCache = new java.util.concurrent.ConcurrentHashMap[Long, (String, String)]()
 
   /** On-demand payload point-read for a page of winners: docId IN-list over
-    * the docId-sorted docstore — parquet min/max stats prune to ~one row
-    * group per file (same shape as Bm25Query's J7 payload semi-join).
+    * the docId-sorted docstore, read on the driver — parquet min/max stats
+    * prune to ~one row group per file (same read as Bm25Query's payload
+    * fetch). Null url/text normalize to "", the convention of load().
     */
-  private def fetchDocs(ids: Seq[Long]): Map[Long, (String, String)] = {
-    if (graft.index.LocalParquet.isLocalDir(idx.dir))
-      // direct pruned point read (no Spark job) — serving-path latency; same
-      // rows, same docId-sorted row-group pruning (LocalParquetSpec)
-      return graft.index.LocalParquet
-        .readDocPayloads(s"${idx.dir}/docstore", ids)
-        .map { case (id, url, _, text) =>
-          id -> (if (url == null) "" else url, if (text == null) "" else text) }
-        .toMap
-    import spark.implicits._
-    spark.read.parquet(s"${idx.dir}/docstore")
-      .where(col("docId").isin(ids: _*))
-      .select("docId", "url", "text")
-      .as[(Long, String, String)]
-      .collect()
-      .map { case (id, url, text) => // null-safe, same convention as load()
+  private def fetchDocs(ids: Seq[Long]): Map[Long, (String, String)] =
+    graft.index.LocalParquet
+      .readDocPayloads(s"${idx.dir}/docstore", ids)
+      .map { case (id, url, _, text) =>
         id -> (if (url == null) "" else url, if (text == null) "" else text) }
       .toMap
-  }
 
   /** Full-row point-read for the context / similar-documents endpoints —
     * same docId-sorted row-group pruning as [[fetchDocs]], plus lang + meta
@@ -203,32 +190,18 @@ final class InMemoryIndex(
     */
   def docPayloads(ids: Seq[Long]): Map[Long, DocPayload] = {
     if (ids.isEmpty) return Map.empty
-    if (graft.index.LocalParquet.isLocalDir(idx.dir))
-      // direct pruned point read incl. the meta map — same normalization
-      return graft.index.LocalParquet
-        .readDocPayloadsMeta(s"${idx.dir}/docstore", ids)
-        .map { case (id, url, lang, text, meta) =>
-          id -> DocPayload(id,
-            if (url == null) "" else url,
-            if (text == null) "" else text,
-            lang,
-            if (meta == null) Map.empty else meta)
-        }.toMap
-    import spark.implicits._
-    spark.read.parquet(s"${idx.dir}/docstore")
-      .where(col("docId").isin(ids: _*))
-      .select("docId", "url", "text", "lang", "meta")
-      .as[(Long, String, String, String, Map[String, String])]
-      .collect()
-      .map(r => r._1 -> DocPayload(r._1,
-        if (r._2 == null) "" else r._2, // null-safe url/text, same as load()
-        if (r._3 == null) "" else r._3,
-        r._4,
-        // a NULL meta map is a legal docstore row (normalizeInput passes
-        // meta through; every build stage tolerates it) — normalize like
-        // url/text or neighborIds' meta.get NPEs the /api/context render
-        if (r._5 == null) Map.empty else r._5))
-      .toMap
+    graft.index.LocalParquet
+      .readDocPayloadsMeta(s"${idx.dir}/docstore", ids)
+      .map { case (id, url, lang, text, meta) =>
+        id -> DocPayload(id,
+          if (url == null) "" else url, // null-safe url/text, same as load()
+          if (text == null) "" else text,
+          lang,
+          // a NULL meta map is a legal docstore row (normalizeInput passes
+          // meta through; every build stage tolerates it) — normalize like
+          // url/text or neighborIds' meta.get NPEs the /api/context render
+          if (meta == null) Map.empty else meta)
+      }.toMap
   }
 
   /** Previous/next chunk ids for the /api/context endpoint, from the RESIDENT
@@ -406,24 +379,20 @@ object InMemoryIndex {
     // definition of where the artifact lives and when to fall back (a third
     // inline existence check here could desync doc-shard nodes' global df
     // from the Spark paths on an artifact-location change)
-    val rows = idx.termdictPath match {
-      case Some(p) if graft.index.LocalParquet.isLocalDir(p) =>
-        // direct full read of the (small) stats-only artifact — no Spark job
-        return graft.index.LocalParquet.readTermDictFull(p)
-          .map { case (l, t, d) => (l, t) -> d }.toMap
-      case Some(p) =>
-        spark.read.parquet(p).select("lang", "term", "df")
-          .as[(String, String, Long)]
+    val rows: Seq[(String, String, Long)] = idx.termdictPath match {
+      // driver read of the (small) stats-only artifact — no Spark job
+      case Some(p) => graft.index.LocalParquet.readTermDictFull(p)
       case None =>
         // legacy index without the artifact: one column-pruned read of
         // (lang, term, df) over all chunks (chunks partition docs, so
         // per-chunk df sums to global df) — parity over silent drift
         spark.read.parquet(idx.segmentsPath)
           .groupBy(col("lang"), col("term"))
-          .agg(org.apache.spark.sql.functions.sum("df").as("df"))
+          .agg(sum("df").as("df"))
           .as[(String, String, Long)]
+          .collect().toSeq
     }
-    rows.collect().map { case (l, t, d) => (l, t) -> d }.toMap
+    rows.map { case (l, t, d) => (l, t) -> d }.toMap
   }
 
   /** @param sharedGlobalDf a termdict map loaded once via [[loadGlobalDf]]
@@ -436,7 +405,6 @@ object InMemoryIndex {
       facetBuckets: Option[Set[Int]] = None,
       chunks: Option[Set[Int]] = None,
       sharedGlobalDf: Option[Map[(String, String), Long]] = None): InMemoryIndex = {
-    import spark.implicits._
     var bytes = 0L
     val postings = new java.util.HashMap[(String, String), (Long, Array[Byte], Array[Byte])]()
     // a doc-shard (chunk-subset) load needs the PER-CHUNK tables: the
@@ -451,29 +419,12 @@ object InMemoryIndex {
       if (chunks.isDefined && idx.facetsPath.endsWith("_compact"))
         s"${idx.dir}/facets"
       else idx.facetsPath
-    val localDir = graft.index.LocalParquet.isLocalDir(idx.dir)
     // load-time scans read whole tables (pruned only by bucket/chunk shard
-    // selection) destined for THIS process's heap — on a local index dir the
-    // direct parquet read skips the executor→driver row serialization round
-    // trip entirely (LocalParquetSpec gates row parity with the Spark read)
+    // selection) destined for THIS process's heap: a driver read skips the
+    // executor→driver row serialization round trip entirely
+    // (LocalParquetSpec gates row parity with the Spark read)
     val segRows: Array[(String, String, Array[Byte], Array[Byte])] =
-      if (localDir)
-        graft.index.LocalParquet.readSegmentsFull(segSrc, buckets, chunks).toArray
-      else {
-        val segRead0 = spark.read.parquet(segSrc)
-        val segRead = chunks match {
-          case Some(cs) => segRead0.where(col("chunk").isin(cs.toSeq: _*))
-          case None     => segRead0
-        }
-        val segSel = buckets match {
-          case Some(bs) => segRead.where(col("bucket").isin(bs.toSeq: _*))
-          case None     => segRead
-        }
-        segSel
-          .select("lang", "term", "blob", "posBlob")
-          .as[(String, String, Array[Byte], Array[Byte])]
-          .collect()
-      }
+      graft.index.LocalParquet.readSegmentsFull(segSrc, buckets, chunks).toArray
     // per-term chunk-run merges are independent pure CPU — spread them over
     // the node's cores (load time is node startup; ~3× faster than the
     // single-thread loop on a 3-chunk index)
@@ -491,23 +442,7 @@ object InMemoryIndex {
     bytes += byteSum.get()
     val facetShard = facetBuckets.orElse(buckets.map(_ => Set.empty[Int]))
     val facetRows: Array[(String, String, String, Long, Array[Byte])] =
-      if (localDir)
-        graft.index.LocalParquet.readFacetsFull(facetSrc, facetShard, chunks).toArray
-      else {
-        val facetRead0 = spark.read.parquet(facetSrc)
-        val facetRead = chunks match {
-          case Some(cs) => facetRead0.where(col("chunk").isin(cs.toSeq: _*))
-          case None     => facetRead0
-        }
-        val facetSel = facetShard match {
-          case Some(fbs) => facetRead.where(col("bucket").isin(fbs.toSeq: _*))
-          case None      => facetRead
-        }
-        facetSel
-          .select("lang", "key", "value", "df", "docIds")
-          .as[(String, String, String, Long, Array[Byte])]
-          .collect()
-      }
+      graft.index.LocalParquet.readFacetsFull(facetSrc, facetShard, chunks).toArray
     val facets = facetRows
       .groupBy(r => (r._1, r._2, r._3))
       .map { case (key, rows) =>
@@ -542,26 +477,19 @@ object InMemoryIndex {
       }
     val docs = new java.util.HashMap[Long, (String, String)]()
     if (withDocs && buckets.isEmpty && chunks.isEmpty) {
-      val docRows: Seq[(Long, String, String)] =
-        if (localDir)
-          graft.index.LocalParquet.readDocstoreFull(s"${idx.dir}/docstore")
-        else spark.read.parquet(s"${idx.dir}/docstore")
-          .select("docId", "url", "text")
-          .as[(Long, String, String)]
-          .collect()
-          .toSeq
-      docRows.foreach { case (id, url, text) =>
-        // NULL text/url rows are legal in the docstore (the build indexes
-        // them with zero postings — Analyzer.foreachToken no-ops on null):
-        // normalize to "" so the resident node neither NPEs here nor
-        // hands a null to highlight()
-        val u = if (url == null) "" else url
-        val t = if (text == null) "" else text
-        bytes += (u.length + t.length) * 2L // UTF-16 chars resident
-        docs.put(id, (u, t))
+      graft.index.LocalParquet.readDocstoreFull(s"${idx.dir}/docstore").foreach {
+        case (id, url, text) =>
+          // NULL text/url rows are legal in the docstore (the build indexes
+          // them with zero postings — Analyzer.foreachToken no-ops on null):
+          // normalize to "" so the resident node neither NPEs here nor
+          // hands a null to highlight()
+          val u = if (url == null) "" else url
+          val t = if (text == null) "" else text
+          bytes += (u.length + t.length) * 2L // UTF-16 chars resident
+          docs.put(id, (u, t))
       }
     }
-    new InMemoryIndex(spark, idx, postings, facets, dict, docs, bytes,
+    new InMemoryIndex(idx, postings, facets, dict, docs, bytes,
       globalDf, chunks)
   }
 }

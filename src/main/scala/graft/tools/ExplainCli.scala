@@ -34,14 +34,15 @@ object ExplainCli {
       "aggregation — with lang pushdown, ReadSchema only term/df) ===")
     Bm25Query.termDictDf(spark, idx, "hi").explain("formatted")
 
-    println("=== distributed BATCHED suggest plan — runs for NON-LOCAL index " +
-      "dirs only (a local termdict is read on the driver, no job) (ONE job " +
+    println("=== distributed BATCHED suggest plan — runs for PRE-TERMDICT " +
+      "indexes only (a termdict is read on the driver, no job) (ONE job " +
       "for a multi-term query: termdict scan with an OR of pushable StartsWith filters → " +
       "explode vs same-first-char query terms → levenshtein prefilter → " +
       "OSA UDF + max_edits cap → per-term window top-n; expect StartsWith " +
       "in PushedFilters) ===")
     // THE executed plan, not a rebuilt copy: suggestPlan is what suggest()
-    // collects, so this inspection can never desync from production (a
+    // collects on a pre-termdict index, so this inspection can never desync
+    // from production (a
     // hand-copied plan here once drifted past the max_edits-cap change)
     Bm25Query.suggestPlan(spark, idx, "hi", Seq("abc", "def"),
       size = 5, minScore = 0.6).explain("formatted")

@@ -3,16 +3,17 @@ package graft.index
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.{SparkTestSession, Webtext}
-import graft.query.{Bm25Query, IndexHandle, QueryCore, QuerySpec}
+import graft.query.{Bm25Query, InMemoryIndex, IndexHandle, QueryCore, QuerySpec}
+import graft.testkit.GraftTestFs
 
-/** The driver-local parquet fast path must return EXACTLY the rows the Spark
-  * scans it replaces returned — every reader shape is compared row-for-row
-  * against the equivalent Spark read over a real built index (the same files,
-  * the same pushdown predicates). This is the gate that keeps the non-local
-  * Spark fallback and the local path from drifting.
+/** The driver-side parquet reader must return EXACTLY the rows the Spark
+  * scans of the same tables return — every reader shape is compared
+  * row-for-row against the equivalent Spark read over a real built index
+  * (the same files, the same pushdown predicates), with the index dir given
+  * bare, as a `file:` URI and under a test-only FileSystem scheme.
   */
 class LocalParquetSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = { val s = SparkTestSession.spark; GraftTestFs.register(s); s }
 
   val dir = "/tmp/graft-test-localpq-idx"
   lazy val idx: IndexHandle = {
@@ -22,6 +23,10 @@ class LocalParquetSpec extends AnyFunSuite {
       dir, numChunks = 2, saltTargetPostings = 64)
     IndexHandle.load(dir)
   }
+
+  /** The index dir as the reader sees it: bare, `file:` and `graftfs:`. */
+  private def forms: Seq[String] = { idx; Seq(dir, s"file://$dir", GraftTestFs.uri(dir)) }
+  private def table(form: String, path: String): String = form + path.stripPrefix(dir)
 
   private def blobKey(b: Array[Byte]): String =
     if (b == null) "∅" else java.util.Arrays.hashCode(b).toString + ":" + b.length
@@ -33,12 +38,14 @@ class LocalParquetSpec extends AnyFunSuite {
       .where(col("lang") === "hi" && col("term").isin(terms: _*))
       .select(col("chunk"), col("term"), col("df"), col("blob"), col("posBlob"))
       .as[QueryCore.PostRow].collect()
-    val localRows = LocalParquet
-      .readSegmentRows(idx.segmentsPath, "hi", terms, withPositions = true)
-    assert(localRows.nonEmpty, "fixture produced no posting rows")
     def key(r: QueryCore.PostRow) =
       (r._1, r._2, r._3, blobKey(r._4), blobKey(r._5))
-    assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted)
+    forms.foreach { d =>
+      val localRows = LocalParquet
+        .readSegmentRows(table(d, idx.segmentsPath), "hi", terms, withPositions = true)
+      assert(localRows.nonEmpty, "fixture produced no posting rows")
+      assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted, d)
+    }
   }
 
   test("segments full read matches the Spark load scan, incl. bucket subset") {
@@ -51,11 +58,13 @@ class LocalParquetSpec extends AnyFunSuite {
       }
       val sparkRows = sel.select("lang", "term", "blob", "posBlob")
         .as[(String, String, Array[Byte], Array[Byte])].collect()
-      val localRows = LocalParquet.readSegmentsFull(idx.segmentsPath, buckets, None)
       def key(r: (String, String, Array[Byte], Array[Byte])) =
         (r._1, r._2, blobKey(r._3), blobKey(r._4))
-      assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted)
-      assert(buckets.isEmpty || localRows.nonEmpty)
+      forms.foreach { d =>
+        val localRows = LocalParquet.readSegmentsFull(table(d, idx.segmentsPath), buckets, None)
+        assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted, d)
+        assert(buckets.isEmpty || localRows.nonEmpty)
+      }
     }
   }
 
@@ -65,11 +74,13 @@ class LocalParquetSpec extends AnyFunSuite {
       .where(col("chunk") === 1)
       .select("lang", "term", "blob", "posBlob")
       .as[(String, String, Array[Byte], Array[Byte])].collect()
-    val localRows = LocalParquet.readSegmentsFull(idx.segmentsPath, None, Some(Set(1)))
-    assert(localRows.nonEmpty)
     def key(r: (String, String, Array[Byte], Array[Byte])) =
       (r._1, r._2, blobKey(r._3), blobKey(r._4))
-    assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted)
+    forms.foreach { d =>
+      val localRows = LocalParquet.readSegmentsFull(table(d, idx.segmentsPath), None, Some(Set(1)))
+      assert(localRows.nonEmpty)
+      assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted, d)
+    }
   }
 
   test("facet reads match the Spark scan: value-in and date-range conds") {
@@ -79,7 +90,6 @@ class LocalParquetSpec extends AnyFunSuite {
       Seq(("category", Some(Seq("Pravachan")), None),
         ("date", None, Some((Some("2019-01-01"), Some("2020-12-31")))),
         ("has_date", Some(Seq("0")), None))
-    val localRows = LocalParquet.readFacetRows(idx.facetsPath, "hi", conds)
     val sparkRows = spark.read.parquet(idx.facetsPath)
       .where(col("lang") === "hi" &&
         ((col("key") === "category" && col("value").isin("Pravachan")) ||
@@ -87,10 +97,13 @@ class LocalParquetSpec extends AnyFunSuite {
          (col("key") === "has_date" && col("value") === "0")))
       .select("chunk", "key", "value", "df", "docIds")
       .as[(Int, String, String, Long, Array[Byte])].collect()
-    assert(localRows.nonEmpty, "fixture produced no facet rows")
     def key(r: (Int, String, String, Long, Array[Byte])) =
       (r._1, r._2, r._3, r._4, blobKey(r._5))
-    assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted)
+    forms.foreach { d =>
+      val localRows = LocalParquet.readFacetRows(table(d, idx.facetsPath), "hi", conds)
+      assert(localRows.nonEmpty, "fixture produced no facet rows")
+      assert(localRows.map(key).sorted == sparkRows.toSeq.map(key).sorted, d)
+    }
   }
 
   test("docstore point reads match the Spark isin scan (incl. meta + misses)") {
@@ -100,15 +113,17 @@ class LocalParquetSpec extends AnyFunSuite {
       .where(col("docId").isin(ids: _*))
       .select("docId", "url", "lang", "text")
       .as[(Long, String, String, String)].collect()
-    val localRows = LocalParquet.readDocPayloads(s"$dir/docstore", ids)
-    assert(localRows.map(r => (r._1, r._2, r._3, r._4)).sorted ==
-      sparkRows.toSeq.sorted)
-    val withMeta = LocalParquet.readDocPayloadsMeta(s"$dir/docstore", ids)
     val sparkMeta = spark.read.parquet(s"$dir/docstore")
       .where(col("docId").isin(ids: _*))
       .select("docId", "meta")
       .as[(Long, Map[String, String])].collect().toMap
-    assert(withMeta.map(r => r._1 -> r._5).toMap == sparkMeta)
+    forms.foreach { d =>
+      val localRows = LocalParquet.readDocPayloads(s"$d/docstore", ids)
+      assert(localRows.map(r => (r._1, r._2, r._3, r._4)).sorted ==
+        sparkRows.toSeq.sorted, d)
+      val withMeta = LocalParquet.readDocPayloadsMeta(s"$d/docstore", ids)
+      assert(withMeta.map(r => r._1 -> r._5).toMap == sparkMeta, d)
+    }
   }
 
   test("termdict reads match the Spark pruned scan") {
@@ -118,17 +133,19 @@ class LocalParquetSpec extends AnyFunSuite {
     val sparkRows = spark.read.parquet(p)
       .where(col("lang") === "hi" && col("term").isin(terms: _*))
       .select("term", "df").as[(String, Long)].collect()
-    val localRows = LocalParquet.readTermDict(p, "hi", terms)
-    assert(localRows.nonEmpty)
-    assert(localRows.sorted == sparkRows.toSeq.sorted)
     val fullSpark = spark.read.parquet(p).select("lang", "term", "df")
       .as[(String, String, Long)].collect()
-    val fullLocal = LocalParquet.readTermDictFull(p)
-    assert(fullLocal.sorted == fullSpark.toSeq.sorted)
+    forms.foreach { d =>
+      val localRows = LocalParquet.readTermDict(table(d, p), "hi", terms)
+      assert(localRows.nonEmpty)
+      assert(localRows.sorted == sparkRows.toSeq.sorted, d)
+      assert(LocalParquet.readTermDictFull(table(d, p)).sorted == fullSpark.toSeq.sorted, d)
+    }
   }
 
   test("multi-file reads on the shared pool keep file order; a broken file fails the read") {
-    val src = LocalParquet.dataFiles(s"$dir/docstore").map(_._1)
+    val src = LocalParquet.dataFiles(s"$dir/docstore").map(f =>
+      new java.io.File(f._1.getPath.toUri.getPath))
     val tmp = java.nio.file.Files.createTempDirectory("graft-localpq-multi").toFile
     try {
       // more files than cores, so every worker takes several
@@ -161,18 +178,20 @@ class LocalParquetSpec extends AnyFunSuite {
       .filter(r => keep(r._1))
     // the reader hands keep the first code point and the length read off
     // the UTF-8 bytes: a wrong decode of either drops or admits rows
-    val localRows = LocalParquet.readTermDictBuckets(p, "hi", cps, (cp, len) =>
-      len >= 4 && cps.contains(cp))
-    assert(localRows.nonEmpty)
-    assert(localRows.sorted == sparkRows.toSeq.sorted)
-    assert(LocalParquet.readTermDictBuckets(p, "hi", Seq(0x10330), (_, _) => true).isEmpty)
+    forms.foreach { d =>
+      val localRows = LocalParquet.readTermDictBuckets(table(d, p), "hi", cps, (cp, len) =>
+        len >= 4 && cps.contains(cp))
+      assert(localRows.nonEmpty)
+      assert(localRows.sorted == sparkRows.toSeq.sorted, d)
+      assert(LocalParquet.readTermDictBuckets(table(d, p), "hi", Seq(0x10330), (_, _) => true).isEmpty)
+    }
   }
 
   test("search over the local fast path equals the Spark-collect driver path") {
-    // the production search() takes the local branch on this local dir; the
-    // Spark branch is forced by pointing MaxDriverPostings at the executor
-    // cogroup path, which shares none of the local reader — identical pages
-    // prove the whole read layer agrees end-to-end
+    // the production search() reads on the driver; MaxDriverPostings = 0
+    // forces the executor cogroup path, whose Spark scans share none of the
+    // driver reader — identical pages prove the whole read layer agrees
+    // end-to-end
     val qs = Seq(
       QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" ")),
       QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "), mode = "any"),
@@ -193,5 +212,27 @@ class LocalParquetSpec extends AnyFunSuite {
         assert(local.totalHits == dist.totalHits, s"total mismatch for $q")
       }
     } finally Bm25Query.MaxDriverPostings = prev
+  }
+
+  test("a missing table dir fails the read, naming the path; an empty chunk selection is no error") {
+    val copy = "/tmp/graft-test-localpq-nodocstore"
+    val c = new java.io.File(copy)
+    if (c.exists()) scala.reflect.io.Directory(c).deleteRecursively()
+    def cp(f: java.io.File, t: java.io.File): Unit =
+      if (f.isDirectory) { t.mkdirs(); f.listFiles().foreach(k => cp(k, new java.io.File(t, k.getName))) }
+      else java.nio.file.Files.copy(f.toPath, t.toPath)
+    try {
+      cp(new java.io.File(idx.dir), c)
+      scala.reflect.io.Directory(new java.io.File(s"$copy/docstore")).deleteRecursively()
+      val h = IndexHandle.load(copy)
+      def failsNaming(body: => Any): Unit = {
+        val e = intercept[java.io.FileNotFoundException](body)
+        assert(e.getMessage.contains(s"$copy/docstore"), e.getMessage)
+      }
+      // a query WITH hits reaches the payload read
+      failsNaming(Bm25Query.search(spark, h, QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "))))
+      failsNaming(InMemoryIndex.load(spark, h))
+      assert(LocalParquet.readSegmentsFull(h.segmentsPath, None, Some(Set(99))).isEmpty)
+    } finally scala.reflect.io.Directory(c).deleteRecursively()
   }
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.corpus.{SparkTestSession, Webtext}
 import graft.index.IndexBuild
+import graft.testkit.{GraftTestFs, SparkJobs}
 
 /** The reference-engine gate (SURVEY §5.2#4): the distributed WAND engine must
   * return identical docIDs and near-identical scores to the naive full-scan
@@ -23,8 +24,9 @@ class RankParitySpec extends AnyFunSuite {
   }
   lazy val docstore: DataFrame = { idx; spark.read.parquet(s"$dir/docstore") }
 
-  private def assertParity(q: QuerySpec, expectNonEmpty: Boolean = true): Unit = {
-    val got = Bm25Query.search(spark, idx, q)
+  private def assertParity(q: QuerySpec, expectNonEmpty: Boolean = true,
+      h: => IndexHandle = idx): Unit = {
+    val got = Bm25Query.search(spark, h, q)
     val (oracle, oracleTotal) = NaiveBm25.search(spark, docstore, q)
     if (expectNonEmpty) assert(oracle.nonEmpty, s"oracle empty for $q — bad fixture")
     assert(got.hits.map(_.docId) == oracle.map(_.docId),
@@ -185,33 +187,17 @@ class RankParitySpec extends AnyFunSuite {
     // rank budget)
     assert(Bm25Query.suggest(spark, idx, "hi", s"$missp $missp") ==
       Bm25Query.suggest(spark, idx, "hi", missp))
-    // job budget: on a local index dir suggest reads the termdict on the
-    // driver — NO Spark job, for one misspelled word or three. The Spark
-    // plan (non-local dirs) stays ONE batched action: its job count must
-    // not scale with the number of words (AQE may split one action into a
-    // few jobs, so the gate is 3-word == 1-word, not == 1)
+    // job budget: suggest reads the termdict on the driver — NO Spark job,
+    // for one misspelled word or three. The Spark plan (pre-termdict
+    // indexes) stays ONE batched action: its job count must not scale with
+    // the number of words (AQE may split one action into a few jobs, so the
+    // gate is 3-word == 1-word, not == 1)
     locally {
       def missp2(r: Int): String = {
         val w = Webtext.word("hi", r)
         w.dropRight(1) + (if (w.last == 'क') 'ख' else 'क')
       }
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      def jobsFor(body: => Unit): Int = {
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          jobs.set(0)
-          body
-          // listener events are posted asynchronously — poll to quiescence
-          var last = -1
-          while (jobs.get() != last) { last = jobs.get(); Thread.sleep(250) }
-          last
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
+      def jobsFor(body: => Unit): Int = SparkJobs.count(spark)(body)
       val one = missp2(10)
       val three = Seq(10, 20, 40).map(missp2).mkString(" ")
       Seq(one, three).foreach { q =>
@@ -315,6 +301,94 @@ class RankParitySpec extends AnyFunSuite {
     // code points, under min_word_length
     assert(Bm25Query.suggest(spark, aIdx, "en", s"${g1}bcd") == Seq(s"${g1}bcde", s"${g1}bcdf"))
     assert(Bm25Query.suggest(spark, aIdx, "en", s"${g1}b").isEmpty)
+  }
+
+  /** The golden query shapes above, for re-running over other dir forms. */
+  private def goldens: Seq[QuerySpec] = Seq(
+    QuerySpec("hi", hiPhrase),
+    QuerySpec("gu", guPhrase),
+    QuerySpec("hi", hiPhrase, phrase = true),
+    QuerySpec("hi", Webtext.GoldenPhrase("hi").reverse.mkString(" "), phrase = true),
+    QuerySpec("hi", hiPhrase, mode = "any"),
+    QuerySpec("hi", hiPhrase, excludeWords = Seq(Webtext.word("hi", 30))),
+    QuerySpec("hi", hiPhrase, metaFilters = Map("category" -> Seq("Granth", "Pravachan"),
+      "Author" -> Seq("author1", "author2"))),
+    QuerySpec("hi", hiPhrase, yearRange = Some((2020, 2020))),
+    QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2020))),
+      metaFilters = Map("category" -> Seq("Pravachan"))),
+    QuerySpec("hi", Webtext.word("hi", 5), from = 20, pageSize = 20),
+    QuerySpec("hi", Webtext.word("hi", 0), trackTotalHits = 50),
+    QuerySpec("hi", "शान्ति"))
+
+  private def misspelled(r: Int): String = {
+    val w = Webtext.word("hi", r)
+    w.dropRight(1) + (if (w.last == 'क') 'ख' else 'क')
+  }
+
+  test("goldens give the same pages over a graftfs: dir and a scheme-less dir under a graftfs defaultFS") {
+    GraftTestFs.register(spark)
+    def page(r: SearchResult) = (r.hits.map(h => (h.docId, h.score, h.url, h.highlighted)),
+      r.totalHits, r.totalRelation, r.suggestions)
+    val qs = goldens :+ QuerySpec("hi", misspelled(10))
+    val expected = qs.map(q => page(Bm25Query.search(spark, idx, q)))
+    val viaScheme = IndexHandle.load(GraftTestFs.uri(dir))
+    qs.zip(expected).foreach { case (q, e) =>
+      assert(page(Bm25Query.search(spark, viaScheme, q)) == e, s"graftfs: $q")
+    }
+    goldens.foreach(q => assertParity(q, h = viaScheme))
+    // a scheme-less dir resolves through fs.defaultFS like every other
+    // index read; the opens prove the pages came through that FileSystem
+    GraftTestFs.asDefaultFs(spark) {
+      val bare = IndexHandle.load(dir)
+      bare.segmentsPath; bare.termdictPath // the handle's own control-file reads
+      val before = GraftTestFs.opens.get()
+      qs.zip(expected).foreach { case (q, e) =>
+        assert(page(Bm25Query.search(spark, bare, q)) == e, s"defaultFS: $q")
+      }
+      assert(GraftTestFs.opens.get() > before, "scheme-less index reads bypassed fs.defaultFS")
+    }
+  }
+
+  test("Spark-job budget on a graftfs: dir: driver-bound reads run no job; the executor path gives the same page") {
+    GraftTestFs.register(spark)
+    idx
+    val h = IndexHandle.load(GraftTestFs.uri(dir))
+    val searches = Seq(
+      QuerySpec("hi", hiPhrase),
+      QuerySpec("hi", hiPhrase, mode = "any"),
+      QuerySpec("hi", hiPhrase, phrase = true),
+      QuerySpec("hi", hiPhrase, metaFilters = Map("category" -> Seq("Granth"))),
+      QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2020)))),
+      QuerySpec("hi", misspelled(20)))
+    searches.foreach { q =>
+      var r: SearchResult = null
+      val jobs = SparkJobs.count(spark) { r = Bm25Query.search(spark, h, q) }
+      assert(jobs == 0, s"$jobs Spark jobs for $q")
+      assert(r.hits.nonEmpty || r.suggestions.nonEmpty, s"empty answer for $q")
+      val saved = Bm25Query.MaxDriverPostings
+      val viaExecutors = try {
+        Bm25Query.MaxDriverPostings = 0
+        Bm25Query.search(spark, h, q)
+      } finally Bm25Query.MaxDriverPostings = saved
+      assert(viaExecutors.hits.map(h => (h.docId, h.score, h.url)) ==
+        r.hits.map(h => (h.docId, h.score, h.url)), s"$q")
+      assert(viaExecutors.totalHits == r.totalHits, s"$q")
+    }
+    var mem: InMemoryIndex = null
+    assert(SparkJobs.count(spark) { mem = InMemoryIndex.load(spark, h) } == 0, "full load")
+    val q = QuerySpec("hi", hiPhrase)
+    val shardSet = Bm25Query.queryTerms(q).map(t => InMemoryIndex.bucketOf(t._1)).toSet
+    var page: SearchResult = null
+    val subsetJobs = SparkJobs.count(spark) {
+      val shard = InMemoryIndex.load(spark, h, buckets = Some(shardSet))
+      page = shard.search(q)
+    }
+    assert(subsetJobs == 0, s"bucket-subset load + page fetch ran $subsetJobs jobs")
+    assert(page.hits.nonEmpty && page.hits.map(_.url) == mem.search(q).hits.map(_.url))
+    val ids = page.hits.map(_.docId).take(3)
+    var payloads: Map[Long, DocPayload] = null
+    assert(SparkJobs.count(spark) { payloads = mem.docPayloads(ids) } == 0, "docPayloads")
+    assert(payloads.keySet == ids.toSet)
   }
 
   test("shardable serving: bucket-subset load == full load for in-shard queries") {
