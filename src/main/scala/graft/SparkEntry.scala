@@ -246,8 +246,7 @@ object SparkEntry {
       // term-dictionary spelling suggestions (Q8): candidates share the first
       // char, length ≥ 3, levenshtein ≤ 2, score = 1 - d/maxLen ≥ 0.6 —
       // candidates scanned from the MATERIALIZED termdict (df summed across
-      // langs to match the whole-corpus oracle; langs partition the docs),
-      // with the segments-aggregation fallback for pre-termdict indexes
+      // langs to match the whole-corpus oracle; langs partition the docs)
       val dict = Bm25Query.termDictAllLangsDf(s, index(s, dir))
         .where(length(col("term")) >= 3 && col("term").startsWith("s") && col("term") =!= "spakr")
       dict
@@ -287,8 +286,7 @@ object SparkEntry {
       // MATERIALIZED term dictionary (edit distance ≤ 2, shared first char),
       // Cartesian product of variants, combo score = Σ per-word corpus
       // frequency, top-k. df summed across langs (langs partition the docs)
-      // to match the whole-corpus oracle; segments fallback for pre-termdict
-      // indexes.
+      // to match the whole-corpus oracle.
       val dict = Bm25Query.termDictAllLangsDf(s, index(s, dir))
       def variants(seed: String, w: String, d: String) = dict
         .where(col("term").startsWith(seed.substring(0, 1)) &&
@@ -403,7 +401,7 @@ object SparkEntry {
       // MERGE: reindex regenerated versions of another source's docs
       val regen = web.where(col("source") === "src1")
         .withColumn("text", concat(col("text"), lit(" reindexed")))
-      IndexBuild.reindexDocs(s, out, regen, numChunks = 2)
+      IndexBuild.reindexDocs(s, out, regen)
       // verification surface: term stats read back from the UPDATED segments
       s.read.parquet(s"$out/segments")
         .where(col("lang") === "en" && col("term").isin("spark", "dup", "reindexed"))

@@ -319,8 +319,10 @@ object IndexBuild extends Serializable {
     // resuming into an existing index with a DIFFERENT chunking would leave
     // the old layout's chunk>=numChunks partitions on disk (and in the
     // manifest as "done"), duplicating every doc they hold — refuse
-    if (TableIO.exists(s"$outDir/props.json")) {
-      val prev = IndexBuild.readProps(outDir)
+    // read WITHOUT the format gate: a dir built by an older graft of the
+    // same chunk layout resumes (its manifest signatures still validate) and
+    // gets current props below; a layout change bumps Manifest.sig's prefix
+    recordedProps(outDir).foreach { prev =>
       require(prev.numChunks == numChunks || Manifest.rows(outDir).isEmpty,
         s"$outDir was built with numChunks=${prev.numChunks}; rebuilding with " +
           s"numChunks=$numChunks would leave stale chunk partitions — use the " +
@@ -540,10 +542,13 @@ object IndexBuild extends Serializable {
         // counts. Sampling 1/HeadSampleMod of DOCS (by docId hash — stable
         // across runs/resumes, no RNG) cuts this full explode+agg pass ~10×.
         // Estimation error at the df > saltTarget boundary only moves a
-        // term's salt factor or head membership, never a byte of output; a
-        // missed borderline head leaves one ≤2×-target run (already the
-        // tolerated behavior for terms past headCap). True skew bombs
-        // (df ≫ target) have sample counts far above the cut — never missed.
+        // term's salt factor or head membership, never a byte of output. A
+        // missed borderline head leaves one unsalted run, LIKELY ≤2× target:
+        // that is a probabilistic bound, not a hard one — a term moderately
+        // above the target can draw a low sample count and stay unsalted.
+        // GRAFT_HEAD_SAMPLE_MOD=1 counts exactly; a mergeable heavy-hitter
+        // summary (ROADMAP Direction 4) would make the bound hard. True skew
+        // bombs (df ≫ target) have sample counts far above the cut.
         val sampleMod = HeadSampleMod
         val heads: Map[(String, String), Int] = phase(s"head df agg c$k") {
           val sampled =
@@ -753,24 +758,12 @@ object IndexBuild extends Serializable {
   /** The ONE definition of "the compact read caches are safe to serve" —
     * IndexHandle (source selection) and IndexVersion (reload fingerprint)
     * both call this; divergent definitions would let a poller skip a reload
-    * onto a source flip, or reload onto one it then ignores.
-    *
-    * Marker + both dirs is the primary signal. The `_SUCCESS`-pair fallback
-    * is migration for indexes compacted before the marker existed: under the
-    * default committer both files prove both cache jobs committed, and every
-    * content mutation path (deleteByQuery / reindexDocs / resume-build)
-    * drops the dirs before touching content, so a marker-less `_SUCCESS`
-    * pair can only describe caches consistent with the live tables. Under
-    * marksuccessfuljobs=false the fallback is inert (old code never served
-    * compact there either) and the marker carries the signal alone.
+    * onto a source flip, or reload onto one it then ignores. The rule:
+    * the completion marker AND both cache dirs exist.
     */
-  def compactServable(dir: String): Boolean = {
-    val dirsExist = TableIO.exists(s"$dir/segments_compact") &&
-      TableIO.exists(s"$dir/facets_compact")
-    dirsExist && (TableIO.exists(compactDonePath(dir)) ||
-      (TableIO.exists(s"$dir/segments_compact/_SUCCESS") &&
-        TableIO.exists(s"$dir/facets_compact/_SUCCESS")))
-  }
+  def compactServable(dir: String): Boolean =
+    TableIO.exists(compactDonePath(dir)) &&
+      TableIO.exists(s"$dir/segments_compact") && TableIO.exists(s"$dir/facets_compact")
 
   private def dropCompacted(outDir: String): Unit = {
     // marker first: any partially-deleted state must read as "no caches"
@@ -830,19 +823,22 @@ object IndexBuild extends Serializable {
 
   /** Replay an interrupted mutation from its journaled tmp inputs. Returns
     * true if a pending rewrite was found and completed. Called automatically
-    * at the start of every mutation and of [[compact]].
+    * at the start of every mutation and of [[compact]], so its format check
+    * comes first: an index of another format fails with "rebuild", never
+    * with a replay.
     */
-  def recoverPendingMutation(spark: SparkSession, outDir: String): Boolean =
+  def recoverPendingMutation(spark: SparkSession, outDir: String): Boolean = {
+    val props = readProps(outDir)
     pendingJournal(outDir) match {
       case None => false
       case Some((ks, salt)) =>
-        val props = resolveProps(spark, outDir)
         println(s"[build] recovering interrupted mutation on chunk" +
           s"${if (ks.size > 1) "s" else ""} ${ks.mkString(",")} of $outDir")
         replayJournaled(spark, outDir, ks,
           salt.getOrElse(props.saltTargetPostings), props.storePositions)
         true
     }
+  }
 
   /** Rebuild every journaled chunk from its tmp input, finalize the global
     * stats/termdict, and only THEN clear the journal and tmps — shared by
@@ -1023,7 +1019,7 @@ object IndexBuild extends Serializable {
     recoverPendingMutation(spark, outDir)
     // rebuild with the RECORDED build mode, not API defaults (a mixed
     // positions/no-positions index would be silently wrong)
-    val props = resolveProps(spark, outDir)
+    val props = readProps(outDir)
     val salt = if (saltTargetPostings > 0) saltTargetPostings else props.saltTargetPostings
     val store = spark.read.parquet(s"$outDir/docstore")
     val affected = store.where(pred).select($"chunk").distinct().as[Int].collect().sorted
@@ -1046,19 +1042,11 @@ object IndexBuild extends Serializable {
     * One partition overwrite per affected chunk.
     */
   def reindexDocs(spark: SparkSession, outDir: String, docs: DataFrame,
-      numChunks: Int = -1, saltTargetPostings: Int = -1): Unit = {
+      saltTargetPostings: Int = -1): Unit = {
     import spark.implicits._
     recoverPendingMutation(spark, outDir)
-    val props = resolveProps(spark, outDir)
+    val props = readProps(outDir)
     val salt = if (saltTargetPostings > 0) saltTargetPostings else props.saltTargetPostings
-    // the override exists only for pre-props legacy indexes — a value that
-    // DISAGREES with the recorded chunking would route incoming docs to
-    // docId mod N' chunks while their old versions stay in docId mod N ones:
-    // duplicate docs, double-counted df, broken chunk disjointness
-    require(numChunks <= 0 || numChunks == props.numChunks,
-      s"$outDir is chunked numChunks=${props.numChunks}; reindexDocs with " +
-        s"numChunks=$numChunks would duplicate documents across chunk layouts")
-    val chunks = if (numChunks > 0) numChunks else props.numChunks
     // same persist rationale as build(): a derived-id batch embeds the
     // corpus-wide url-dedup window in normalizeInput — without a persist the
     // affected-chunk collect plus every per-chunk tmp write re-pays that
@@ -1066,7 +1054,8 @@ object IndexBuild extends Serializable {
     // projection).
     val derivedIds = !docs.columns.contains("docId") && !docs.columns.contains("doc_id")
     val incoming0 = normalizeInput(docs)
-      .withColumn("chunk", pmod(col("docId"), lit(chunks)).cast("int"))
+      // the RECORDED chunking: the chunk each doc's old version lives in
+      .withColumn("chunk", pmod(col("docId"), lit(props.numChunks)).cast("int"))
     val incoming =
       if (derivedIds) incoming0.persist(StorageLevel.MEMORY_AND_DISK) else incoming0
     val changed = try {
@@ -1079,50 +1068,58 @@ object IndexBuild extends Serializable {
             .select($"docId", $"url", $"warc_ts", $"text", $"lang", $"meta")
             .join(incomingK.select($"docId"), Seq("docId"), "left_anti")
           k -> keep.union(incomingK)
-        }, salt, props.storePositions, chunks)
+        }, salt, props.storePositions, props.numChunks)
     } finally {
       if (derivedIds) incoming.unpersist()
     }
     if (changed) noteMutation(spark, outDir)
   }
 
-  /** Persist / recover index-level build properties (`props.json`). Indexes
-    * from before the props file default to the original build defaults.
+  /** The on-disk index format, recorded in `props.json` by every build.
+    * A constant, not an option: [[readProps]] — the entry of every reader
+    * and mutation — refuses any other value, so an index this code did not
+    * write fails at open with a "rebuild" error instead of being served
+    * through a compatibility path. A future change to the chunk layout bumps
+    * this AND [[Manifest.sig]]'s prefix: build() reads the old props without
+    * the gate, and the prefix bump is what makes its resume rebuild every
+    * chunk instead of trusting the old files.
     */
+  val FormatVersion = 1
+
+  /** Persist the index-level build properties (`props.json`). */
   def writeProps(outDir: String, p: IndexProps): Unit = {
-    val json = s"""{"storePositions": ${p.storePositions}, "numChunks": ${p.numChunks}, """ +
-      s""""saltTargetPostings": ${p.saltTargetPostings}}"""
+    val json = s"""{"formatVersion": $FormatVersion, "storePositions": ${p.storePositions}, """ +
+      s""""numChunks": ${p.numChunks}, "saltTargetPostings": ${p.saltTargetPostings}}"""
     TableIO.writeStringAtomic(s"$outDir/props.json", json)
   }
 
-  /** Props for a MUTATION: recorded file when present; for a legacy
-    * (pre-props) index, DERIVE rather than guess — numChunks from the
-    * manifest's chunk set, positions mode by probing one segment row —
-    * a wrong guess here recreates exactly the mixed-index/mis-chunked
-    * corruption props exist to prevent. The derived props are persisted so
-    * later mutations skip the probe.
+  /** The recorded build properties of an index of THIS format — the one
+    * format check. A missing `props.json`, or a `formatVersion` that is
+    * absent or differs from [[FormatVersion]], fails naming the dir.
     */
-  private def resolveProps(spark: SparkSession, outDir: String): IndexProps = {
-    if (TableIO.exists(s"$outDir/props.json")) return readProps(outDir)
-    val chunks = Manifest.doneChunks(outDir)
-    val numChunks = if (chunks.nonEmpty) chunks.max + 1 else 4
-    val hasPos = !spark.read.parquet(s"$outDir/segments")
-      .where(length(col("posBlob")) > 0).limit(1).isEmpty
-    println(s"[index] WARN $outDir predates props.json; derived " +
-      s"numChunks=$numChunks storePositions=$hasPos")
-    val p = IndexProps(hasPos, numChunks, 8192)
-    writeProps(outDir, p)
-    p
+  def readProps(outDir: String): IndexProps = {
+    val txt = TableIO.readString(s"$outDir/props.json")
+    val found = txt.flatMap(propField(_, "formatVersion"))
+    if (!found.contains(FormatVersion.toString))
+      throw new IllegalStateException(s"$outDir has index formatVersion " +
+        s"${found.getOrElse("absent")}, expected $FormatVersion — rebuild the " +
+        "index into a fresh directory")
+    parseProps(txt.get)
   }
 
-  def readProps(outDir: String): IndexProps = {
-    val txtOpt = TableIO.readString(s"$outDir/props.json")
-    if (txtOpt.isEmpty) return IndexProps(storePositions = true, 4, 8192)
-    val txt = txtOpt.get
-    def grab(k: String): String = {
-      val m = java.util.regex.Pattern.compile("\"" + k + "\":\\s*([^,}\\s]+)").matcher(txt)
-      if (m.find()) m.group(1) else ""
-    }
+  /** `props.json` as recorded, without the format gate — for build()'s
+    * resume guard only.
+    */
+  private def recordedProps(outDir: String): Option[IndexProps] =
+    TableIO.readString(s"$outDir/props.json").map(parseProps)
+
+  private def propField(txt: String, k: String): Option[String] = {
+    val m = java.util.regex.Pattern.compile("\"" + k + "\":\\s*([^,}\\s]+)").matcher(txt)
+    if (m.find()) Some(m.group(1)) else None
+  }
+
+  private def parseProps(txt: String): IndexProps = {
+    def grab(k: String): String = propField(txt, k).getOrElse("")
     IndexProps(grab("storePositions").toBoolean, grab("numChunks").toInt,
       grab("saltTargetPostings").toInt)
   }
@@ -1193,15 +1190,15 @@ object IndexBuild extends Serializable {
   private def writeTermDict(spark: SparkSession, outDir: String): Unit = {
     import spark.implicits._
     val tmp = s"$outDir/termdict_tmp"
-    // per-chunk slices are trustworthy only when they COVER every done chunk
-    // (a legacy index that was partially mutated has slices for the rewritten
-    // chunks only — aggregating just those would silently truncate the
-    // dictionary); otherwise fall back to the segments stats columns
-    val sliceIds = TableIO.listChunkIds(s"$outDir/termdict_chunks").toSet
-    val src = if (sliceIds.nonEmpty && Manifest.doneChunks(outDir).subsetOf(sliceIds))
-                s"$outDir/termdict_chunks"
-              else s"$outDir/segments"
-    spark.read.parquet(src)
+    // the rollup must COVER every done chunk: aggregating the slices of only
+    // some chunks would silently truncate the dictionary
+    val missing = Manifest.doneChunks(outDir) --
+      TableIO.listChunkIds(s"$outDir/termdict_chunks")
+    if (missing.nonEmpty)
+      throw new IllegalStateException(s"$outDir: done chunk(s) " +
+        s"${missing.toSeq.sorted.mkString(",")} have no termdict_chunks slice — " +
+        "rebuild the index")
+    spark.read.parquet(s"$outDir/termdict_chunks")
       .select($"lang", $"term", $"df", $"cf", $"bucket")
       .groupBy($"lang", $"term")
       .agg(sum($"df").as("df"), sum($"cf").as("cf"), first($"bucket").as("bucket"))
@@ -1210,8 +1207,8 @@ object IndexBuild extends Serializable {
       .write.option("parquet.page.row.count.limit", PageRowLimit.toString)
             .mode(SaveMode.Overwrite).parquet(tmp)
     // swap via two renames, not delete-then-rename: a crash between a DELETE
-    // and the rename-in would leave NO termdict at all (df lookups silently
-    // demoted to the legacy path until some later finalizeStats). With
+    // and the rename-in would leave NO termdict at all (every df lookup
+    // failing until some later finalizeStats). With
     // rename-out → rename-in the no-termdict window is two metadata ops, and
     // a crash inside it leaves termdict_old for inspection; the orphan is
     // cleaned on the next rollup. Readers hold the old listing; single writer.
@@ -1292,11 +1289,8 @@ object IndexBuild extends Serializable {
   * raw wall clock — see [[nextTs]]); valid for the single writer this
   * manifest documents; a multi-writer deployment swaps this object for
   * conditional commits.
-  * Legacy single-file `manifest.jsonl` manifests remain readable (their rows
-  * order BEFORE any commit-file rows of the same chunk).
   */
 object Manifest {
-  private def legacyPath(outDir: String) = s"$outDir/manifest.jsonl"
   private def commitDir(outDir: String) = s"$outDir/manifest.d"
   private val seqCounter = new java.util.concurrent.atomic.AtomicLong()
   // Per-outDir monotonic timestamp: seeded ONCE per JVM from the max
@@ -1340,17 +1334,13 @@ object Manifest {
   }
 
   /** All commit rows, ordered so that per-chunk `.last` is the most recent
-    * commit (legacy JSONL rows first in their file order, then commit files
-    * by their name-embedded sequence — names sort lexicographically by
-    * (chunk, time, counter) thanks to fixed-width zero padding).
+    * commit (commit files by their name-embedded sequence — names sort
+    * lexicographically by (chunk, time, counter) thanks to fixed-width zero
+    * padding).
     */
-  def rows(outDir: String): Seq[ManifestRow] = {
-    val legacy = TableIO.readString(legacyPath(outDir)).toSeq
-      .flatMap(_.split("\n").toSeq.filter(_.nonEmpty).map(parseRow))
-    val commits = TableIO.listFiles(commitDir(outDir), "chunk-").sorted
+  def rows(outDir: String): Seq[ManifestRow] =
+    TableIO.listFiles(commitDir(outDir), "chunk-").sorted
       .flatMap(n => TableIO.readString(s"${commitDir(outDir)}/$n").map(parseRow))
-    legacy ++ commits
-  }
 
   /** Chunks already built — the anti-join side of resume (J5 in SURVEY §2.4).
     * Latest row per chunk wins (a rebuilt chunk appends a new row).

@@ -69,13 +69,12 @@ case class IndexHandle(dir: String, stats: Map[String, (Long, Long)]) {
     if (compactComplete) s"$dir/segments_compact" else s"$dir/segments"
   def facetsPath: String =
     if (compactComplete) s"$dir/facets_compact" else s"$dir/facets"
-  /** Materialized term dictionary (absent only on pre-termdict indexes).
-    * Pinned on first use like [[compactComplete]] (one handle, one index
-    * version): df-cache misses and suggestions would otherwise each pay a
-    * Hadoop-conf build and a file-system stat.
+  /** Materialized term dictionary: df lookups and suggestions read it. */
+  def termdict: String = s"$dir/termdict"
+  /** [[termdict]] under its earlier Option-typed name, kept for callers
+    * outside `src`; new code reads [[termdict]].
     */
-  @transient lazy val termdictPath: Option[String] =
-    if (graft.index.TableIO.exists(s"$dir/termdict")) Some(s"$dir/termdict") else None
+  def termdictPath: Option[String] = Some(termdict)
 
   /** Driver-resident (lang, term) → corpus df for terms queried through this
     * handle — the analog of Lucene's in-memory term dictionary. Entries never
@@ -98,6 +97,9 @@ case class IndexHandle(dir: String, stats: Map[String, (Long, Long)]) {
 
 object IndexHandle {
   def load(dir: String): IndexHandle = {
+    // the format check first: an index of another format says "rebuild",
+    // not "recover" or "not finalized"
+    graft.index.IndexBuild.readProps(dir)
     // a mutation journal entry means a deleteByQuery/reindexDocs died
     // between its docstore overwrite and its manifest commit — that chunk's
     // postings and docstore disagree (deleted docs would resurrect with
@@ -153,30 +155,21 @@ object Bm25Query {
 
   /** Corpus-wide df for `terms`, served from the handle's driver-resident
     * term-df cache; only UNCACHED terms pay a probe: a (lang, term)-pruned
-    * termdict read on the driver, or on a pre-termdict index a Spark
-    * groupBy(term).sum(df) over the segments. Repeat terms are the norm
-    * (head terms at web scale), so steady-state query latency drops to
-    * kernel + payload-fetch.
+    * termdict read on the driver. Repeat terms are the norm (head terms at
+    * web scale), so steady-state query latency drops to kernel +
+    * payload-fetch.
     */
   def globalDfMap(spark: SparkSession, idx: IndexHandle, lang: String,
       terms: Seq[String]): Map[String, Long] = {
-    import spark.implicits._
     val cached = terms.flatMap(t =>
       Option(idx.dfCache.get((lang, t))).map(v => t -> v.longValue)).toMap
     val missing = terms.filterNot(cached.contains)
     if (missing.isEmpty) cached
     else {
-      // termdict when present (one pruned row per term, read on the driver
-      // with no aggregation); pre-termdict indexes fall back to the
-      // segments aggregation
-      val probed: Map[String, Long] = idx.termdictPath match {
-        case Some(p) =>
-          graft.index.LocalParquet.readTermDict(p, lang, missing).toMap
-        case _ =>
-          termDictDf(spark, idx, lang)
-            .where(col("term").isin(missing: _*))
-            .as[(String, Long)].collect().toMap
-      }
+      // one pruned termdict row per term, read on the driver with no
+      // aggregation
+      val probed: Map[String, Long] =
+        graft.index.LocalParquet.readTermDict(idx.termdict, lang, missing).toMap
       if (idx.dfCache.size > DfCacheMax) idx.dfCache.clear()
       missing.foreach(t => idx.dfCache.put((lang, t), Long.box(probed.getOrElse(t, 0L))))
       cached ++ missing.map(t => t -> probed.getOrElse(t, 0L))
@@ -572,50 +565,30 @@ object Bm25Query {
     * The termdict is read on the driver (no Spark job): only the query
     * words' first-code-point buckets, only rows passing the length
     * prefilter, ranked by [[QueryCore.suggest]] — the rule the resident
-    * node runs. Pre-termdict indexes collect [[suggestPlan]], which scores
-    * in executors and brings only the per-word top-`size` to the driver.
+    * node runs.
     */
   def suggest(spark: SparkSession, idx: IndexHandle, lang: String, query: String,
       size: Int = 5, minScore: Double = 0.6): Seq[String] = {
     val words = QueryCore.suggestWords(query, lang)
     if (words.isEmpty) return Nil
-    idx.termdictPath match {
-      case Some(p) =>
-        // a row is kept while reading when it could correct SOME word of its
-        // bucket; the ranking re-checks it per word
-        val byCp = words.groupBy(_.codePointAt(0)).toArray
-        val cps = byCp.map(_._1)
-        val lens = byCp.map(_._2.map(QueryCore.cpLen).distinct.toArray)
-        val rows = graft.index.LocalParquet.readTermDictBuckets(p, lang, cps.toSeq,
-          (cp, tl) => tl >= QueryCore.SuggestMinLen && {
-            val k = cps.indexOf(cp)
-            k >= 0 && lens(k).exists(wl => QueryCore.suggestLenOk(wl, tl, minScore))
-          })
-        val byPrefix = rows.groupBy(_._1.codePointAt(0))
-        QueryCore.suggest(words, cp => byPrefix.getOrElse(cp, Nil).iterator, size, minScore)
-      case None => suggestSpark(spark, idx, lang, words, size, minScore)
-    }
+    // a row is kept while reading when it could correct SOME word of its
+    // bucket; the ranking re-checks it per word
+    val byCp = words.groupBy(_.codePointAt(0)).toArray
+    val cps = byCp.map(_._1)
+    val lens = byCp.map(_._2.map(QueryCore.cpLen).distinct.toArray)
+    val rows = graft.index.LocalParquet.readTermDictBuckets(idx.termdict, lang, cps.toSeq,
+      (cp, tl) => tl >= QueryCore.SuggestMinLen && {
+        val k = cps.indexOf(cp)
+        k >= 0 && lens(k).exists(wl => QueryCore.suggestLenOk(wl, tl, minScore))
+      })
+    val byPrefix = rows.groupBy(_._1.codePointAt(0))
+    QueryCore.suggest(words, cp => byPrefix.getOrElse(cp, Nil).iterator, size, minScore)
   }
 
-  /** [[suggest]] through the Spark plan: collects [[suggestPlan]] for
-    * `words` and orders it like [[QueryCore.suggest]] (word order, then
-    * rank, deduped).
-    */
-  private[query] def suggestSpark(spark: SparkSession, idx: IndexHandle, lang: String,
-      words: Seq[String], size: Int, minScore: Double): Seq[String] = {
-    import spark.implicits._
-    val byWord = suggestPlan(spark, idx, lang, words, size, minScore)
-      .as[(String, Int, String)]
-      .collect() // ≤ size rows per query word
-      .groupBy(_._1)
-    words.flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct
-  }
-
-  /** THE batched Spark suggest plan, the distributed form of [[suggest]]
-    * and its path on pre-termdict indexes — shared by [[suggest]] (which
-    * collects it) and
-    * `tools.ExplainCli` (which explains it), so the inspected plan can never
-    * desync from the executed one. `qSeq` are [[QueryCore.suggestWords]].
+  /** THE batched Spark suggest plan, the distributed form of [[suggest]]:
+    * a reference plan that no serving path runs. RankParitySpec's three-way
+    * suggest parity compares [[suggest]] against it, and `tools.ExplainCli`
+    * explains it. `qSeq` are [[QueryCore.suggestWords]].
     * Columns: (qword, rank, term).
     *
     * ONE Spark job for the whole (possibly multi-term) query: a single dict
@@ -640,8 +613,7 @@ object Bm25Query {
     val qArr = array(qSeq.map(lit(_)): _*)
     val maxLen = greatest(length(col("term")), length(col("qword"))).cast("double")
     // dictionary source: the materialized termdict table (one pruned scan —
-    // no per-query segment aggregation); segments agg only as a fallback for
-    // pre-termdict indexes
+    // no per-query segment aggregation)
     termDictDf(spark, idx, lang)
       .where(length(col("term")) >= QueryCore.SuggestMinLen)
       // OR of literal StartsWith predicates — unlike substring(term,1,1)
@@ -669,27 +641,11 @@ object Bm25Query {
       .select(col("qword"), col("rank"), col("term"))
   }
 
-  /** (term, df) rows of a language's dictionary — termdict scan when the
-    * artifact exists, per-query segments aggregation otherwise.
-    */
+  /** (term, df) rows of a language's dictionary: a termdict scan. */
   def termDictDf(spark: SparkSession, idx: IndexHandle, lang: String): DataFrame =
-    idx.termdictPath match {
-      case Some(p) =>
-        spark.read.parquet(p).where(col("lang") === lang).select(col("term"), col("df"))
-      case None =>
-        spark.read.parquet(idx.segmentsPath)
-          .where(col("lang") === lang)
-          .groupBy("term").agg(sum("df").as("df"))
-    }
+    spark.read.parquet(idx.termdict).where(col("lang") === lang).select(col("term"), col("df"))
 
-  /** (term, df) summed across ALL languages (langs partition the docs), with
-    * the same pre-termdict fallback.
-    */
-  def termDictAllLangsDf(spark: SparkSession, idx: IndexHandle): DataFrame = {
-    val base = idx.termdictPath match {
-      case Some(p) => spark.read.parquet(p)
-      case None    => spark.read.parquet(idx.segmentsPath)
-    }
-    base.groupBy("term").agg(sum("df").as("df"))
-  }
+  /** (term, df) summed across ALL languages (langs partition the docs). */
+  def termDictAllLangsDf(spark: SparkSession, idx: IndexHandle): DataFrame =
+    spark.read.parquet(idx.termdict).groupBy("term").agg(sum("df").as("df"))
 }

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.index.{PostingListMerger, PostingListReader, SortedIds, TableIO}
 import scala.collection.parallel.CollectionConverters._
 
@@ -367,33 +366,15 @@ object InMemoryIndex {
     * @param facetBuckets facet-key-shard subset; None = follow `buckets`
     * @param chunks       doc-shard subset (chunk ids); None = all chunks
     */
-  /** Corpus-wide (lang, term) → df — from the termdict artifact when
-    * present, else aggregated across ALL chunks of the segments table
-    * (chunks partition docs, so per-chunk df sums to global df). A
-    * chunk-subset node MUST score with this, never its shard-local df, or
-    * its BM25 scores silently diverge from a full node's.
+  /** Corpus-wide (lang, term) → df from the termdict artifact: a driver
+    * read of the (small) stats-only table, no Spark job. A chunk-subset node
+    * MUST score with this, never its shard-local df, or its BM25 scores
+    * silently diverge from a full node's. `spark` is unused; the signature
+    * is kept for existing callers.
     */
-  def loadGlobalDf(spark: SparkSession, idx: IndexHandle): Map[(String, String), Long] = {
-    import spark.implicits._
-    // source resolution delegates to IndexHandle.termdictPath — THE
-    // definition of where the artifact lives and when to fall back (a third
-    // inline existence check here could desync doc-shard nodes' global df
-    // from the Spark paths on an artifact-location change)
-    val rows: Seq[(String, String, Long)] = idx.termdictPath match {
-      // driver read of the (small) stats-only artifact — no Spark job
-      case Some(p) => graft.index.LocalParquet.readTermDictFull(p)
-      case None =>
-        // legacy index without the artifact: one column-pruned read of
-        // (lang, term, df) over all chunks (chunks partition docs, so
-        // per-chunk df sums to global df) — parity over silent drift
-        spark.read.parquet(idx.segmentsPath)
-          .groupBy(col("lang"), col("term"))
-          .agg(sum("df").as("df"))
-          .as[(String, String, Long)]
-          .collect().toSeq
-    }
-    rows.map { case (l, t, d) => (l, t) -> d }.toMap
-  }
+  def loadGlobalDf(spark: SparkSession, idx: IndexHandle): Map[(String, String), Long] =
+    graft.index.LocalParquet.readTermDictFull(idx.termdict)
+      .map { case (l, t, d) => (l, t) -> d }.toMap
 
   /** @param sharedGlobalDf a termdict map loaded once via [[loadGlobalDf]]
     *   and shared across the chunk-subset nodes of an in-process fleet —
@@ -452,9 +433,8 @@ object InMemoryIndex {
         key -> all
       }
     // doc-shard nodes need corpus-wide df: idf parity with a full node, and
-    // the GLOBAL suggest dictionary. loadGlobalDf falls back to aggregating
-    // the full segments table when the termdict artifact is absent (legacy
-    // indexes) — a shard-local df here would silently break score parity.
+    // the GLOBAL suggest dictionary — a shard-local df here would silently
+    // break score parity.
     val globalDf: Map[(String, String), Long] = chunks match {
       case Some(_) =>
         val m = sharedGlobalDf.getOrElse(loadGlobalDf(spark, idx))

@@ -31,7 +31,7 @@ object IndexVersion {
       .sorted.lastOption.getOrElse("")
     val compactState = TableIO.readString(s"$dir/compact_state.json").getOrElse("")
     // the SERVING-SOURCE flip signal — the SAME predicate IndexHandle keys
-    // on (marker + dirs, with the migration fallback): fingerprinting on a
+    // on (marker + both dirs): fingerprinting on a
     // different signal would either skip a reload across a real source flip
     // or reload onto a half-written cache the loader then ignores
     val hasCompact = graft.index.IndexBuild.compactServable(dir)

@@ -25,7 +25,7 @@ object IncrementalIndex {
     * `outDir`. AvailableNow by default: drain what exists, then stop —
     * the bounded catch-up shape of the reference's periodic crawl.
     */
-  /** numChunks defaults to the index's recorded props (a streaming writer
+  /** Batches route by the index's recorded chunking (a streaming writer
     * must never re-chunk an existing index differently from its build).
     *
     * `schema` lets the continuous daemon mode start BEFORE the source has
@@ -36,7 +36,7 @@ object IncrementalIndex {
     * require a schema up front; there is nothing to infer from zero files).
     */
   def run(spark: SparkSession, sourceDir: String, outDir: String,
-      numChunks: Int = -1, availableNow: Boolean = true,
+      availableNow: Boolean = true,
       schema: org.apache.spark.sql.types.StructType = null): StreamingQuery = {
     val s =
       if (schema != null) schema
@@ -51,7 +51,7 @@ object IncrementalIndex {
     val writer = stream.writeStream
       .option("checkpointLocation", s"$outDir/stream_checkpoint")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) IndexBuild.reindexDocs(spark, outDir, batch, numChunks)
+        if (!batch.isEmpty) IndexBuild.reindexDocs(spark, outDir, batch)
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }

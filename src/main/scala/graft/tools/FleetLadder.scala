@@ -62,10 +62,12 @@ object FleetLadder {
         .drop("html").write.parquet(corpusDir)
     }
     val idxDir = s"$workDir/idx_${docs}_c$numChunks"
-    // trust only a FINALIZED index whose manifest covers every chunk — a
-    // killed prior run must rebuild, not fabricate ladder numbers
+    // trust only a FINALIZED index of this format whose manifest covers
+    // every chunk — a killed prior run, or a cache written by an older
+    // format, must rebuild, not fabricate ladder numbers
     val complete = graft.index.TableIO.exists(s"$idxDir/stats.json") &&
-      graft.index.IndexBuild.readProps(idxDir).numChunks == numChunks
+      (try graft.index.IndexBuild.readProps(idxDir).numChunks == numChunks
+       catch { case _: IllegalStateException => false })
     if (!complete) {
       CpuProbe.rmDir(idxDir)
       val t0 = System.nanoTime()

@@ -169,7 +169,7 @@ class IndexBuildSpec extends AnyFunSuite {
     IndexBuild.build(spark, corpus, "/tmp/gidx-re", numChunks = 2)
     val regen = corpus.where(pmod(col("docId"), lit(5)) === 0)
       .withColumn("text", concat(col("text"), lit(" regenerated")))
-    IndexBuild.reindexDocs(spark, "/tmp/gidx-re", regen, numChunks = 2)
+    IndexBuild.reindexDocs(spark, "/tmp/gidx-re", regen)
     val modified = corpus.withColumn("text",
       when(pmod(col("docId"), lit(5)) === 0, concat(col("text"), lit(" regenerated")))
         .otherwise(col("text")))
@@ -216,7 +216,7 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(h.segmentsPath.endsWith("/segments"))
   }
 
-  test("half-written compact is never served; _SUCCESS-pair fallback migrates pre-marker indexes") {
+  test("half-written compact is never served without its marker") {
     val dir = "/tmp/gidx-halfc"
     val corpus = Webtext.synthesize(spark, 300, partitions = 2).toDF()
     rm(dir)
@@ -225,20 +225,13 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(TableIO.exists(IndexBuild.compactDonePath(dir)))
     val vCompact = graft.query.IndexVersion.of(dir)
     assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"))
-    // migration: an index compacted BEFORE the marker existed (complete
-    // _SUCCESS pair, no compact_done.json) keeps serving its caches — no
-    // silent fleet-wide demotion to base segments on upgrade
-    TableIO.deleteRecursive(IndexBuild.compactDonePath(dir))
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"),
-      "a pre-marker compacted index must keep serving via the _SUCCESS fallback")
-    assert(graft.query.IndexVersion.of(dir) == vCompact,
-      "serving source did not flip, so the reload fingerprint must not move")
     // crash mid facets_compact job: dir exists with partial data (no
     // _SUCCESS), marker never written — must fall back to base tables
+    TableIO.deleteRecursive(IndexBuild.compactDonePath(dir))
     TableIO.deleteRecursive(s"$dir/facets_compact/_SUCCESS")
     val h = graft.query.IndexHandle.load(dir)
     assert(h.segmentsPath.endsWith("/segments"),
-      "a compact cache without marker or complete _SUCCESS pair must not be served")
+      "a compact cache without its completion marker must not be served")
     assert(h.facetsPath.endsWith("/facets"))
     // the reload fingerprint must key on the same predicate the handle does —
     // otherwise a poller would skip a reload across a real source flip
@@ -445,7 +438,7 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(tdMap() == segMap())
     // suggest routes through the termdict scan and stays consistent
     val idx = graft.query.IndexHandle.load("/tmp/gidx-td")
-    assert(idx.termdictPath.isDefined)
+    assert(TableIO.exists(idx.termdict))
     // mutation refreshes the dictionary
     IndexBuild.deleteByQuery(spark, "/tmp/gidx-td", col("docId") < 100)
     assert(tdMap() == segMap(), "termdict stale after delete-by-query")
@@ -454,6 +447,66 @@ class IndexBuildSpec extends AnyFunSuite {
       .select("term", "bucket").as[(String, Int)].collect()
       .count { case (t, b) => b != graft.query.InMemoryIndex.bucketOf(t) }
     assert(badBucket == 0)
+  }
+
+  test("finalizeStats refuses a done chunk with no termdict slice, naming it") {
+    val dir = "/tmp/gidx-tdslice"
+    rm(dir)
+    IndexBuild.build(spark, Webtext.synthesize(spark, 200, partitions = 2).toDF(), dir,
+      numChunks = 2)
+    TableIO.deleteRecursive(s"$dir/termdict_chunks/chunk=1")
+    // the rollup must not silently drop chunk 1's terms from the dictionary
+    val e = intercept[IllegalStateException](IndexBuild.finalizeStats(spark, dir))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("chunk(s) 1 have no termdict_chunks slice"), e.getMessage)
+  }
+
+  test("format gate: open and mutations refuse other versions; build() resumes") {
+    import org.apache.spark.sql.functions._
+    val src = "/tmp/gidx-fmt"
+    val corpus = Webtext.synthesize(spark, 200, partitions = 2).toDF()
+    rm(src)
+    IndexBuild.build(spark, corpus, src, numChunks = 2)
+    val props = TableIO.readString(s"$src/props.json").get
+    assert(props.contains(s"\"formatVersion\": ${IndexBuild.FormatVersion}"), props)
+    def copyOf(name: String)(edit: String => Unit): String = {
+      val d = s"$src-$name"
+      rm(d)
+      val from = java.nio.file.Paths.get(src)
+      val walk = java.nio.file.Files.walk(from)
+      try walk.forEach { f =>
+        java.nio.file.Files.copy(f, java.nio.file.Paths.get(d).resolve(from.relativize(f)))
+      } finally walk.close()
+      edit(d)
+      d
+    }
+    val versionField = "\"formatVersion\":\\s*\\d+"
+    // the format every index had before the field existed
+    val stripped = copyOf("stripped")(d =>
+      TableIO.writeStringAtomic(s"$d/props.json", props.replaceFirst(versionField + ",\\s*", "")))
+    val noProps = copyOf("noprops")(d => TableIO.deleteRecursive(s"$d/props.json"))
+    val future = copyOf("future")(d =>
+      TableIO.writeStringAtomic(s"$d/props.json",
+        props.replaceFirst(versionField, "\"formatVersion\": 999")))
+    Seq(stripped -> "absent", noProps -> "absent", future -> "999").foreach { case (d, found) =>
+      Seq[(String, () => Any)](
+        "load" -> (() => graft.query.IndexHandle.load(d)),
+        "deleteByQuery" -> (() => IndexBuild.deleteByQuery(spark, d, col("docId") === 1L)),
+        "reindexDocs" -> (() => IndexBuild.reindexDocs(spark, d, corpus.where(col("docId") === 1L))),
+        "compact" -> (() => IndexBuild.compact(spark, d))
+      ).foreach { case (op, run) =>
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(s"$d has index formatVersion $found") &&
+          e.getMessage.contains("rebuild"), s"$op: ${e.getMessage}")
+      }
+    }
+    // same chunk layout: build() resumes over the stripped copy (no chunk
+    // rebuilt), records the current version, and the copy then loads
+    val commits = Manifest.rows(stripped).size
+    IndexBuild.build(spark, corpus, stripped, numChunks = 2)
+    assert(Manifest.rows(stripped).size == commits, "resume rebuilt a chunk")
+    assert(graft.query.IndexHandle.load(stripped).stats ==
+      graft.query.IndexHandle.load(src).stats)
   }
 
   test("positions-free SERVING: resident node over a nopos index == Spark path; phrase fails fast") {
@@ -521,25 +574,20 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(dup == 0)
   }
 
-  test("manifest: O(1) commit files, per-chunk latest wins, legacy JSONL still read") {
+  test("manifest: O(1) commit files, per-chunk latest wins") {
     val dir = "/tmp/gidx-manifest"
     rm(dir)
-    // a pre-existing legacy single-file manifest (older index layout)
-    graft.index.TableIO.writeStringAtomic(s"$dir/manifest.jsonl",
-      """{"chunk":0,"status":"done","docs":10,"tokens":100,"terms":50,"inputChecksum":"v3:p:10:1","wallMs":5}""" + "\n" +
-      """{"chunk":1,"status":"done","docs":11,"tokens":110,"terms":55,"inputChecksum":"v3:p:11:2","wallMs":6}""" + "\n")
-    // new-style commits: chunk 1 rebuilt twice — its LATEST commit must win
+    // chunk 1 rebuilt twice — its LATEST commit must win
     Manifest.append(dir, ManifestRow(1, "done", 12, 120, 60, "v3:p:12:3", 7))
     Manifest.append(dir, ManifestRow(1, "done", 13, 130, 65, "v3:p:13:4", 8))
     Manifest.append(dir, ManifestRow(2, "done", 14, 140, 70, "v3:p:14:5", 9))
     // each append created exactly one immutable file; nothing was rewritten
     val commits = graft.index.TableIO.listFiles(s"$dir/manifest.d", "chunk-")
     assert(commits.size == 3, s"expected 3 commit files, saw $commits")
-    assert(Manifest.doneChunks(dir) == Set(0, 1, 2))
+    assert(Manifest.doneChunks(dir) == Set(1, 2))
     val latest = Manifest.rows(dir).groupBy(_.chunk).map { case (c, rs) => c -> rs.last }
-    assert(latest(0).docs == 10, "legacy-only chunk reads from JSONL")
     assert(latest(1).inputChecksum == "v3:p:13:4",
-      "latest commit file must supersede both the legacy row and the earlier commit")
+      "latest commit file must supersede the earlier commit")
     assert(latest(2).docs == 14)
   }
 

@@ -129,7 +129,7 @@ class LocalParquetSpec extends AnyFunSuite {
   test("termdict reads match the Spark pruned scan") {
     import spark.implicits._
     val terms = Webtext.GoldenPhrase("hi").toSeq
-    val p = idx.termdictPath.get
+    val p = idx.termdict
     val sparkRows = spark.read.parquet(p)
       .where(col("lang") === "hi" && col("term").isin(terms: _*))
       .select("term", "df").as[(String, Long)].collect()
@@ -165,7 +165,7 @@ class LocalParquetSpec extends AnyFunSuite {
 
   test("termdict first-code-point bucket read matches the Spark startsWith scan") {
     import spark.implicits._
-    val p = idx.termdictPath.get
+    val p = idx.termdict
     // two hi buckets plus a supplementary-plane one no term starts with,
     // under a record-level keep predicate
     val words = Seq(Webtext.word("hi", 3), Webtext.word("hi", 7))

@@ -188,8 +188,8 @@ class RankParitySpec extends AnyFunSuite {
     assert(Bm25Query.suggest(spark, idx, "hi", s"$missp $missp") ==
       Bm25Query.suggest(spark, idx, "hi", missp))
     // job budget: suggest reads the termdict on the driver — NO Spark job,
-    // for one misspelled word or three. The Spark plan (pre-termdict
-    // indexes) stays ONE batched action: its job count must not scale with
+    // for one misspelled word or three. The Spark reference plan stays ONE
+    // batched action: its job count must not scale with
     // the number of words (AQE may split one action into a few jobs, so the
     // gate is 3-word == 1-word, not == 1)
     locally {
@@ -216,7 +216,7 @@ class RankParitySpec extends AnyFunSuite {
   test("suggest three-way parity: seeded hi/gu/en typos — local termdict read == resident == Spark plan") {
     val mem = InMemoryIndex.load(spark, idx, withDocs = false)
     val vocab: Map[String, Array[String]] =
-      graft.index.LocalParquet.readTermDictFull(idx.termdictPath.get)
+      graft.index.LocalParquet.readTermDictFull(idx.termdict)
         .groupBy(_._1).map { case (l, rs) => l -> rs.map(_._2).sorted.toArray }
     val rnd = new scala.util.Random(1207)
     def cps(s: String): Array[Int] = s.codePoints.toArray
@@ -248,15 +248,22 @@ class RankParitySpec extends AnyFunSuite {
     }
     assert(queries.size >= 200)
     // the Spark side: ONE plan per language over every query word (ranking
-    // is per word), assembled per query exactly like suggestSpark
+    // is per word), assembled per query like QueryCore.suggest orders its
+    // answer (word order, then rank, deduped)
+    def viaPlanFor(h: IndexHandle, lang: String,
+        qs: Seq[String]): Map[String, Seq[String]] = {
+      import spark.implicits._
+      val words = qs.flatMap(QueryCore.suggestWords(_, lang)).distinct
+      val byWord =
+        if (words.isEmpty) Map.empty[String, Array[(String, Int, String)]]
+        else Bm25Query.suggestPlan(spark, h, lang, words, 5, 0.6)
+          .as[(String, Int, String)].collect().groupBy(_._1)
+      qs.map(q => q -> QueryCore.suggestWords(q, lang)
+        .flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct).toMap
+    }
     val viaPlan: Map[(String, String), Seq[String]] =
       queries.groupBy(_._1).flatMap { case (lang, qs) =>
-        import spark.implicits._
-        val words = qs.flatMap(q => QueryCore.suggestWords(q._2, lang)).distinct
-        val byWord = Bm25Query.suggestPlan(spark, idx, lang, words, 5, 0.6)
-          .as[(String, Int, String)].collect().groupBy(_._1)
-        qs.map(q => q -> QueryCore.suggestWords(q._2, lang)
-          .flatMap(w => byWord.getOrElse(w, Array.empty).sortBy(_._2).map(_._3)).distinct)
+        viaPlanFor(idx, lang, qs.map(_._2)).map { case (q, s) => (lang, q) -> s }
       }
     var nonEmpty = 0
     queries.foreach { case q @ (lang, text) =>
@@ -266,12 +273,6 @@ class RankParitySpec extends AnyFunSuite {
       if (local.nonEmpty) nonEmpty += 1
     }
     assert(nonEmpty >= queries.size / 2, s"only $nonEmpty of ${queries.size} typos got suggestions")
-    // the production Spark branch assembles the same answer
-    queries.filter(_._2.contains(" ")).foreach { case q @ (lang, text) =>
-      val words = QueryCore.suggestWords(text, lang)
-      if (words.nonEmpty)
-        assert(Bm25Query.suggestSpark(spark, idx, lang, words, 5, 0.6) == viaPlan(q), s"$q")
-    }
 
     // supplementary-plane terms (Gothic letters: caseless, so the analyzer
     // keeps them): lengths and distances count CODE POINTS on every path
@@ -289,12 +290,12 @@ class RankParitySpec extends AnyFunSuite {
     IndexBuild.build(spark, docs.toDF(), d, numChunks = 1)
     val aIdx = IndexHandle.load(d)
     val aMem = InMemoryIndex.load(spark, aIdx, withDocs = false)
-    Seq(s"${g1}bcd", s"${g1}${g2}d", s"${g1}bc", s"${g1}b", s"${g1}bcd ${g1}${g2}d").foreach { q =>
+    val astral = Seq(s"${g1}bcd", s"${g1}${g2}d", s"${g1}bc", s"${g1}b", s"${g1}bcd ${g1}${g2}d")
+    val astralPlan = viaPlanFor(aIdx, "en", astral)
+    astral.foreach { q =>
       val local = Bm25Query.suggest(spark, aIdx, "en", q)
-      val words = QueryCore.suggestWords(q, "en")
       assert(local == aMem.suggest("en", q), s"local vs resident on $q")
-      assert(local == (if (words.isEmpty) Nil
-        else Bm25Query.suggestSpark(spark, aIdx, "en", words, 5, 0.6)), s"local vs Spark plan on $q")
+      assert(local == astralPlan(q), s"local vs Spark plan on $q")
     }
     // "𐌰bxy" is 2 edits from "𐌰bcd" over 4 code points: score 0.5 < 0.6
     // (counting UTF-16 units, 5, would have admitted it at 0.6); "𐌰b" is 2
@@ -340,7 +341,7 @@ class RankParitySpec extends AnyFunSuite {
     // index read; the opens prove the pages came through that FileSystem
     GraftTestFs.asDefaultFs(spark) {
       val bare = IndexHandle.load(dir)
-      bare.segmentsPath; bare.termdictPath // the handle's own control-file reads
+      bare.segmentsPath // the handle's own control-file reads
       val before = GraftTestFs.opens.get()
       qs.zip(expected).foreach { case (q, e) =>
         assert(page(Bm25Query.search(spark, bare, q)) == e, s"defaultFS: $q")
@@ -454,31 +455,26 @@ class RankParitySpec extends AnyFunSuite {
     nodes.foreach(n => assert(n.loadedBytes < full.loadedBytes))
   }
 
-  test("legacy index without termdict: chunk-subset nodes still score with GLOBAL df") {
-    // Pre-termdict indexes are supported; a chunk-subset load must then fall
-    // back to aggregating corpus-wide df from the segments table — never to
-    // shard-LOCAL df, which would silently break fleet/full score parity.
-    val legacyDir = "/tmp/graft-test-idx-legacy"
+  test("index without termdict fails fast on subset load and zero-hit search") {
+    // the termdict is the only source of corpus-wide df and of suggestions:
+    // with it gone a chunk-subset node must not fall back to shard-LOCAL df
+    // (silently breaking fleet/full score parity) or to any other table
+    val noTdDir = "/tmp/graft-test-idx-notermdict"
     val src = new java.io.File(idx.dir)
-    val dst = new java.io.File(legacyDir)
+    val dst = new java.io.File(noTdDir)
     if (dst.exists()) scala.reflect.io.Directory(dst).deleteRecursively()
     def cp(f: java.io.File, t: java.io.File): Unit =
       if (f.isDirectory) { t.mkdirs(); f.listFiles().foreach(c => cp(c, new java.io.File(t, c.getName))) }
       else java.nio.file.Files.copy(f.toPath, t.toPath)
     cp(src, dst)
-    scala.reflect.io.Directory(new java.io.File(s"$legacyDir/termdict")).deleteRecursively()
-    val legacy = IndexHandle.load(legacyDir)
-    val full = InMemoryIndex.load(spark, legacy)
-    val nodes = ShardedServe.chunkAssignment(numChunks = 2, nNodes = 2).map { cs =>
-      InMemoryIndex.load(spark, legacy, chunks = Some(cs))
-    }
-    Seq(QuerySpec("hi", hiPhrase), QuerySpec("hi", hiPhrase, mode = "any"))
-      .foreach { q =>
-        val a = ShardedServe.search(nodes, q)
-        val b = full.search(q)
-        assert(a.hits.map(h => (h.docId, h.score)) == b.hits.map(h => (h.docId, h.score)), s"$q")
-        assert(a.totalHits == b.totalHits, s"$q")
-      }
+    scala.reflect.io.Directory(new java.io.File(s"$noTdDir/termdict")).deleteRecursively()
+    val h = IndexHandle.load(noTdDir)
+    val e1 = intercept[java.io.FileNotFoundException](
+      InMemoryIndex.load(spark, h, chunks = Some(Set(0))))
+    assert(e1.getMessage.contains(s"$noTdDir/termdict"), e1.getMessage)
+    val e2 = intercept[java.io.FileNotFoundException](
+      Bm25Query.search(spark, h, QuerySpec("hi", misspelled(10))))
+    assert(e2.getMessage.contains(s"$noTdDir/termdict"), e2.getMessage)
   }
 
   test("shard memory scales with shard count: loadedBytes subset ≪ full, monotone in buckets") {

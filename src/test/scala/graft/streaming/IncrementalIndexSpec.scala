@@ -48,7 +48,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       .map(i => Webtext.genDoc(42L, i)).toDF()
     updates.union(newDocs).write.parquet("/tmp/ginc-src")
     // drain the stream (AvailableNow)
-    val q = IncrementalIndex.run(spark, "/tmp/ginc-src", "/tmp/ginc-idx", numChunks = 2)
+    val q = IncrementalIndex.run(spark, "/tmp/ginc-src", "/tmp/ginc-idx")
     q.awaitTermination(120000)
     // fresh build over the merged corpus
     val merged = Webtext.synthesize(spark, 500, partitions = 4).toDF()
