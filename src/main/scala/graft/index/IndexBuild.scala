@@ -19,8 +19,7 @@ case class Run(lang: String, term: String, salt: Int, blob: Array[Byte], posBlob
 
 /** Final per-term segment row. `chunk` identifies the segment (per-chunk
   * segments mirror Lucene's per-segment design: query-time WAND runs per
-  * segment in parallel and merges top-k; `compact` can fold all chunks into
-  * segment -1).
+  * segment in parallel and merges top-k).
   */
 case class SegmentRow(chunk: Int, lang: String, bucket: Int, term: String,
     df: Long, cf: Long, blob: Array[Byte], posBlob: Array[Byte])
@@ -236,7 +235,7 @@ object IndexBuild extends Serializable {
     import spark.implicits._
     TableIO.mkdirs(outDir)
     // Recover an interrupted mutation BEFORE touching any chunk — every
-    // other entry point does (deleteByQuery/reindexDocs/compact recover,
+    // other entry point does (deleteByQuery/reindexDocs recover,
     // IndexHandle.load refuses). Skipping it here is a corruption trap: a
     // rebuild over a journaled index would finish "successfully", serving
     // would still refuse on the journal, and the operator-mandated recovery
@@ -344,12 +343,6 @@ object IndexBuild extends Serializable {
     val parts = if (shufflePartitions > 0) shufflePartitions
                 else spark.sparkContext.defaultParallelism * 8
 
-    // any chunk (re)build makes existing compact read caches stale — drop
-    // them (marker first) BEFORE the first rewrite, or IndexHandle would keep
-    // preferring a compact copy that no longer matches the live segments
-    // (resurrected docs after a resume-build over a changed input). A pure
-    // no-op resume keeps the caches: content is unchanged by construction.
-    if ((0 until numChunks).exists(k => !done.contains(k))) dropCompacted(outDir)
     for (k <- 0 until numChunks) {
       if (done.contains(k)) {
         // resume: skip without recomputation (reference checksum-skip analog)
@@ -733,46 +726,6 @@ object IndexBuild extends Serializable {
     }
   }
 
-  /** Q12 delete-by-query — the engine's `delete_by_query` analog
-    * (reference backend/common/opensearch.py:304-339, term-match delete of a
-    * whole file's documents): a PARTITION OVERWRITE keyed by the predicate.
-    * Only the chunks containing matching docs are rewritten — docstore rows
-    * are filtered, that chunk's segments + facets rebuilt from the remainder,
-    * and a fresh manifest row (with the new input signature) appended. All
-    * other chunks are untouched.
-    */
-  /** Compacted copies are rebuildable caches; any mutation invalidates them
-    * (IndexHandle prefers *_compact when present — serving a stale compact
-    * after a delete/reindex would resurrect deleted docs).
-    */
-  /** Compaction's own completion marker — written LAST by [[compact]],
-    * deleted FIRST here and at compact() entry. Readers key on THIS file
-    * (IndexHandle.compactComplete, IndexVersion), never on the cache dirs'
-    * existence or Spark's _SUCCESS: a crash mid facets_compact leaves a dir
-    * that exists but holds partial data, and _SUCCESS is committer-config
-    * dependent (marksuccessfuljobs=false is routine object-store tuning —
-    * keying on it would silently disable compact-cache serving forever).
-    */
-  def compactDonePath(outDir: String): String = s"$outDir/compact_done.json"
-
-  /** The ONE definition of "the compact read caches are safe to serve" —
-    * IndexHandle (source selection) and IndexVersion (reload fingerprint)
-    * both call this; divergent definitions would let a poller skip a reload
-    * onto a source flip, or reload onto one it then ignores. The rule:
-    * the completion marker AND both cache dirs exist.
-    */
-  def compactServable(dir: String): Boolean =
-    TableIO.exists(compactDonePath(dir)) &&
-      TableIO.exists(s"$dir/segments_compact") && TableIO.exists(s"$dir/facets_compact")
-
-  private def dropCompacted(outDir: String): Unit = {
-    // marker first: any partially-deleted state must read as "no caches"
-    TableIO.deleteRecursive(compactDonePath(outDir))
-    Seq("segments_compact", "facets_compact").foreach { sub =>
-      TableIO.deleteRecursive(s"$outDir/$sub")
-    }
-  }
-
   // ---- mutation journal: crash-safe chunk rewrites ----
   // A mutation rewrites a chunk with SEVERAL jobs (docstore overwrite, then
   // segments, termdict slice, facets); a crash in between leaves the chunk
@@ -823,9 +776,8 @@ object IndexBuild extends Serializable {
 
   /** Replay an interrupted mutation from its journaled tmp inputs. Returns
     * true if a pending rewrite was found and completed. Called automatically
-    * at the start of every mutation and of [[compact]], so its format check
-    * comes first: an index of another format fails with "rebuild", never
-    * with a replay.
+    * at the start of every mutation, so its format check comes first: an
+    * index of another format fails with "rebuild", never with a replay.
     */
   def recoverPendingMutation(spark: SparkSession, outDir: String): Boolean = {
     val props = readProps(outDir)
@@ -877,26 +829,21 @@ object IndexBuild extends Serializable {
     *      replay the same bad input forever, wedging serving. A failure here
     *      leaves the index untouched and serving (at worst orphan tmp dirs
     *      the next mutation overwrites);
-    *   2. drop stale compact read caches, then write ONE journal entry
-    *      naming every chunk + the mutation's salt (recovery must replay
-    *      with the same salt the dying call used, and replays without
-    *      re-dropping — the drop must strictly precede the journal);
+    *   2. write ONE journal entry naming every chunk + the mutation's salt
+    *      (recovery must replay with the same salt the dying call used);
     *   3. rebuild the chunks, finalize stats, clear ([[replayJournaled]]) —
     *      a crash anywhere in 3 re-enters the same step via recovery, so a
     *      multi-chunk delete can never end up silently half-applied.
     * Requires a COMPLETE index (every chunk committed) for any non-empty
-    * rewrite. Returns whether content changed — an empty mutation touches
-    * neither the caches nor the auto-compact counter. Shared by
-    * deleteByQuery and reindexDocs.
+    * rewrite. Shared by deleteByQuery and reindexDocs.
     */
   private def journaledRewriteAll(spark: SparkSession, outDir: String,
       inputs: Seq[(Int, DataFrame)], salt: Int, storePositions: Boolean,
-      numChunks: Int): Boolean = {
+      numChunks: Int): Unit = {
     if (inputs.isEmpty) {
-      // an empty mutation (predicate matched nothing) leaves content — and
-      // therefore any compact read caches — untouched. Its only job is
-      // self-repair for an index whose build died INSIDE finalizeStats (no
-      // journal exists for that crash). Every such crash point leaves a
+      // an empty mutation (predicate matched nothing) leaves content
+      // untouched. Its only job is self-repair for an index whose build
+      // died INSIDE finalizeStats (no journal exists for that crash). Every such crash point leaves a
       // cheap signature — missing stats.json, missing termdict, or an
       // orphan termdict_tmp/termdict_old from a death inside the swap — so
       // the corpus-sized finalize runs ONLY when one is present: a routine
@@ -916,7 +863,7 @@ object IndexBuild extends Serializable {
       val covered = Manifest.doneChunks(outDir)
       if (damaged && (0 until numChunks).forall(covered.contains))
         finalizeStats(spark, outDir)
-      return false
+      return
     }
     // a mutation is defined over a COMPLETE index: rebuilding chunks of a
     // half-built one would end in replayJournaled's finalizeStats over the
@@ -964,55 +911,19 @@ object IndexBuild extends Serializable {
         inputs.foreach { case (k, _) => TableIO.deleteRecursive(tmpPath(outDir, k)) }
         throw t
     }
-    // content is now guaranteed to change: stale compact read caches must be
-    // gone BEFORE the journal commits (recovery replays the rewrites without
-    // re-dropping) and before the first live-table overwrite. An empty or
-    // failed-validation mutation never reaches here — a no-op mutation on a
-    // compacted index keeps its caches and the fleet keeps serving them.
-    dropCompacted(outDir)
     TableIO.writeStringAtomic(pendingPath(outDir),
       s"""{"chunks": [${inputs.map(_._1).mkString(", ")}], "salt": $salt}""")
     replayJournaled(spark, outDir, inputs.map(_._1), salt, storePositions)
-    true
   }
 
-  /** Auto-compaction policy: every content-changing mutation drops the
-    * compacted read caches
-    * and leaves per-term posting runs split across chunk dirs, so query and
-    * load cost creep up with mutation count. Rather than paying a full
-    * [[compact]] on every mutation (its cost is the whole segments table),
-    * a counter file tracks mutations since the last compaction and
-    * [[compact]] fires once every [[AutoCompactEvery]] — amortized O(1/K)
-    * per mutation, the same cadence policy as Lucene's background merges /
-    * Iceberg table maintenance. Serving parity across the trigger is gated
-    * by IndexBuildSpec.
+  /** Q12 delete-by-query — the engine's `delete_by_query` analog
+    * (reference backend/common/opensearch.py:304-339, term-match delete of a
+    * whole file's documents): a PARTITION OVERWRITE keyed by the predicate.
+    * Only the chunks containing matching docs are rewritten — docstore rows
+    * are filtered, that chunk's segments + facets rebuilt from the remainder,
+    * and a fresh manifest row (with the new input signature) appended. All
+    * other chunks are untouched.
     */
-  @volatile var AutoCompactEvery: Int = 8
-
-  private def compactStatePath(outDir: String) = s"$outDir/compact_state.json"
-
-  private def mutationsSinceCompact(outDir: String): Int =
-    TableIO.readString(compactStatePath(outDir)).flatMap { txt =>
-      val m = java.util.regex.Pattern.compile("\"mutationsSinceCompact\":\\s*(\\d+)").matcher(txt)
-      if (m.find()) Some(m.group(1).toInt) else None
-    }.getOrElse(0)
-
-  private def writeCompactState(outDir: String, n: Int): Unit =
-    TableIO.writeStringAtomic(compactStatePath(outDir),
-      s"""{"mutationsSinceCompact": $n}""")
-
-  /** Called at the end of every content-changing mutation: bump the
-    * counter, compact when it reaches the threshold. No-op mutations skip
-    * it — they neither split posting runs nor drop the read caches, so
-    * they create none of the debt this counter amortizes.
-    */
-  private def noteMutation(spark: SparkSession, outDir: String): Unit = {
-    val n = mutationsSinceCompact(outDir) + 1
-    if (AutoCompactEvery > 0 && n >= AutoCompactEvery) {
-      compact(spark, outDir) // also resets the counter
-    } else writeCompactState(outDir, n)
-  }
-
   def deleteByQuery(spark: SparkSession, outDir: String, pred: org.apache.spark.sql.Column,
       saltTargetPostings: Int = -1): Unit = {
     import spark.implicits._
@@ -1026,14 +937,11 @@ object IndexBuild extends Serializable {
     // three-valued logic: a NULL predicate (e.g. a missing meta key) must
     // KEEP the doc — bare `!pred` is NULL there and would silently delete
     // every non-matching doc the predicate can't evaluate
-    val changed = journaledRewriteAll(spark, outDir,
+    journaledRewriteAll(spark, outDir,
       affected.toSeq.map { k =>
         k -> store.where($"chunk" === k && !coalesce(pred, lit(false)))
           .select($"docId", $"url", $"warc_ts", $"text", $"lang", $"meta")
       }, salt, props.storePositions, props.numChunks)
-    // a no-match delete changed nothing: it must not creep the auto-compact
-    // counter toward a corpus-sized compact() it did nothing to necessitate
-    if (changed) noteMutation(spark, outDir)
   }
 
   /** Q12 reindex (MERGE): delete every doc whose docId appears in `docs`,
@@ -1058,7 +966,7 @@ object IndexBuild extends Serializable {
       .withColumn("chunk", pmod(col("docId"), lit(props.numChunks)).cast("int"))
     val incoming =
       if (derivedIds) incoming0.persist(StorageLevel.MEMORY_AND_DISK) else incoming0
-    val changed = try {
+    try {
       val store = spark.read.parquet(s"$outDir/docstore")
       val affected = incoming.select($"chunk").distinct().as[Int].collect().sorted
       journaledRewriteAll(spark, outDir,
@@ -1072,7 +980,6 @@ object IndexBuild extends Serializable {
     } finally {
       if (derivedIds) incoming.unpersist()
     }
-    if (changed) noteMutation(spark, outDir)
   }
 
   /** The on-disk index format, recorded in `props.json` by every build.
@@ -1223,59 +1130,6 @@ object IndexBuild extends Serializable {
     if (!fs.rename(hp(tmp), hp(live)))
       throw new java.io.IOException(s"rename $tmp -> $live failed")
     TableIO.deleteRecursive(old)
-  }
-
-  /** Optional compaction: fold all chunk segments into a single segment
-    * (chunk = -1) via the same k-way sort-merge. Doc sets across chunks are
-    * disjoint (docId mod numChunks), so this is a pure interleave.
-    */
-  def compact(spark: SparkSession, outDir: String): Unit = {
-    import spark.implicits._
-    // compacting over a journaled (half-rewritten) chunk would bake the
-    // inconsistency into the read caches — replay the rewrite first
-    recoverPendingMutation(spark, outDir)
-    // a RE-compact overwrites the caches in two jobs: the marker must drop
-    // before the first overwrite or a crash in between would leave "done"
-    // pointing at a new-segments/old-facets mix
-    TableIO.deleteRecursive(compactDonePath(outDir))
-    val parts = spark.sparkContext.defaultParallelism
-    val segs = spark.read.parquet(s"$outDir/segments").as[SegmentRow]
-    segs
-      .groupByKey(s => (s.lang, s.term))
-      .mapGroups { (key: (String, String), rs: Iterator[SegmentRow]) =>
-        val (blob, posBlob, df, cf) =
-          PostingListMerger.merge(rs.map(r => (r.blob, r.posBlob)).toSeq)
-        SegmentRow(-1, key._1, termBucketOf(key._2),
-          key._2, df.toLong, cf, blob, posBlob)
-      }
-      .toDF()
-      .repartition(math.max(parts / 4, 1), $"term")
-      .sortWithinPartitions($"lang", $"term")
-      .write.option("parquet.page.row.count.limit", PageRowLimit.toString)
-            .mode(SaveMode.Overwrite).parquet(s"$outDir/segments_compact")
-    // facets likewise
-    // lazily decode and re-slice: materializing ONE corpus-wide array per
-    // value (the old shape) is exactly the unbounded-task-memory pattern the
-    // per-chunk FacetSliceDocs slicing exists to prevent — a compact of a
-    // 100-TB index would pool every doc of a chunk-wide value in one task.
-    // Iterator.flatMap keeps at most one decoded input row + one output
-    // slice in memory; readers union the slices like any multi-row value.
-    spark.read.parquet(s"$outDir/facets").as[FacetRow]
-      .groupByKey(f => (f.lang, f.key, f.value))
-      .flatMapGroups { (key: (String, String, String), rs: Iterator[FacetRow]) =>
-        rs.flatMap { f =>
-          SortedIds.decode(f.docIds, f.df.toInt).iterator
-        }.grouped(FacetSliceDocs).map { slice =>
-          val ids = slice.toArray
-          FacetRow(-1, key._1, facetBucketOf(key._2), key._2, key._3,
-            ids.length.toLong, SortedIds.sortAndEncode(ids))
-        }
-      }
-      .toDF()
-      .write.option("parquet.page.row.count.limit", PageRowLimit.toString)
-            .mode(SaveMode.Overwrite).parquet(s"$outDir/facets_compact")
-    writeCompactState(outDir, 0)
-    TableIO.writeStringAtomic(compactDonePath(outDir), """{"done": true}""")
   }
 }
 

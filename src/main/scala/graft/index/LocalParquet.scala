@@ -85,7 +85,7 @@ object LocalParquet {
   }
 
   /** All data files under `dir` with their dir-derived chunk id (None for a
-    * flat layout — compact tables carry `chunk` as a data column instead).
+    * file outside any `chunk=K` dir, as in the flat `termdict` table).
     * A missing `dir` throws FileNotFoundException: a table an index should
     * have is gone, and reading it as empty would serve silently wrong pages.
     */
@@ -219,8 +219,6 @@ object LocalParquet {
     else g.getString(field, 0)
   def lng(g: Group, field: String): Long =
     if (g.getFieldRepetitionCount(field) == 0) 0L else g.getLong(field, 0)
-  def int(g: Group, field: String): Int =
-    if (g.getFieldRepetitionCount(field) == 0) 0 else g.getInteger(field, 0)
   def bin(g: Group, field: String): Array[Byte] =
     if (g.getFieldRepetitionCount(field) == 0) null
     else g.getBinary(field, 0).getBytes
@@ -242,14 +240,15 @@ object LocalParquet {
       b.result()
     }
 
-  /** Chunk id of a row: the dir-derived id for `chunk=K` layouts, else the
-    * data column (compact tables). A flat file without the column is a
-    * layout bug — fail loudly rather than fabricate a chunk id.
+  /** Chunk id of a row of a per-chunk table (`segments`, `facets`): the id
+    * of its `chunk=K` dir. A data file outside any chunk dir is not this
+    * index's layout — fail naming it rather than fabricate an id (the
+    * listing runs on this failure path only).
     */
-  def chunkOf(g: Group, dirChunk: Option[Int]): Int = dirChunk.getOrElse {
-    require(g.getType.containsField("chunk"),
-      "flat parquet layout without a chunk column — unexpected index layout")
-    int(g, "chunk")
+  def chunkOf(dirChunk: Option[Int], table: String): Int = dirChunk.getOrElse {
+    val stray = dataFiles(table).collectFirst { case (f, None) => f.getPath.toString }
+    throw new IllegalStateException(s"${stray.getOrElse(table)} is not under a " +
+      "chunk=K dir — unexpected index layout")
   }
 
   // ---- filter helpers ----
@@ -318,11 +317,10 @@ object LocalParquet {
   def readSegmentRows(segmentsPath: String, lang: String, terms: Seq[String],
       withPositions: Boolean): Seq[(Int, String, Long, Array[Byte], Array[Byte])] = {
     val wanted = Seq("lang", "term", "df", "blob") ++
-      (if (withPositions) Seq("posBlob") else Nil) ++
-      (if (segmentsPath.endsWith("_compact")) Seq("chunk") else Nil)
+      (if (withPositions) Seq("posBlob") else Nil)
     val pred = and(eqString("lang", lang), inStrings("term", terms))
     read(segmentsPath, wanted, pred, (g, c) =>
-      (chunkOf(g, c), str(g, "term"), lng(g, "df"), bin(g, "blob"),
+      (chunkOf(c, segmentsPath), str(g, "term"), lng(g, "df"), bin(g, "blob"),
         if (withPositions) bin(g, "posBlob") else null), dictFilter = false)
   }
 
@@ -352,8 +350,7 @@ object LocalParquet {
       withBlob: Boolean = true)
       : Seq[(Int, String, String, Long, Array[Byte])] = {
     val wanted = Seq("lang", "key", "value", "df") ++
-      (if (withBlob) Seq("docIds") else Nil) ++
-      (if (facetsPath.endsWith("_compact")) Seq("chunk") else Nil)
+      (if (withBlob) Seq("docIds") else Nil)
     val condPred = conds.map { case (key, inVals, range) =>
       var p = eqString("key", key)
       inVals.foreach(vs => p = and(p, inStrings("value", vs)))
@@ -362,7 +359,7 @@ object LocalParquet {
     }.reduceOption(or).orNull
     val pred = and(eqString("lang", lang), condPred)
     read(facetsPath, wanted, pred, (g, c) =>
-      (chunkOf(g, c), str(g, "key"), str(g, "value"), lng(g, "df"),
+      (chunkOf(c, facetsPath), str(g, "key"), str(g, "value"), lng(g, "df"),
         if (withBlob) bin(g, "docIds") else null))
   }
 

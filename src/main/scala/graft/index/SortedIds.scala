@@ -9,8 +9,9 @@ package graft.index
 object SortedIds {
 
   /** Sort `ids` in place and delta+VByte encode them — the ONE encoder for
-    * facet id blobs ([[decode]] is its inverse). Build and compact both call
-    * this; a format tweak must not need replaying across hand-copies.
+    * facet id blobs ([[decode]] is its inverse), called by the build's
+    * facet writer; a format tweak must not need replaying across
+    * hand-copies.
     */
   def sortAndEncode(ids: Array[Long]): Array[Byte] = {
     java.util.Arrays.sort(ids)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * All paths route through Hadoop's `FileSystem`/`FileContext`, so the index
   * layout works unchanged on HDFS/S3A/GCS where a 100-TB index actually
   * lives — `java.io.File` would silently confine mutations (delete-by-query,
-  * reindex, GC, compaction) to local disk. Small control files are written
+  * reindex, GC) to local disk. Small control files are written
   * via tmp + atomic rename (HDFS/local rename is atomic; object stores make
   * it copy+delete, still safe for the single-writer manifest documented in
   * [[Manifest]] — multi-writer deployments would swap this object for an

@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
-import graft.index.{PostingIterator, PostingListReader, SortedIds, VByte}
+import graft.index.{PostingListReader, SortedIds}
 
 /** Query request — mirrors the reference SearchRequest surface
   * (backend/api/search_api.py:180-213): query text, language, exact phrase
@@ -50,25 +50,8 @@ case class IndexHandle(dir: String, stats: Map[String, (Long, Long)]) {
   def numDocs(lang: String): Long = stats.get(lang).map(_._1).getOrElse(0L)
   def avgdl(lang: String): Double =
     stats.get(lang).map { case (d, t) => if (d == 0) 0.0 else t.toDouble / d }.getOrElse(0.0)
-  // the compacted caches are preferred only when BOTH exist: compaction
-  // writes them in two jobs (segments first) and dropCompacted deletes them
-  // in two steps — an independent per-path fallback in either window would
-  // key kernels by compact chunk -1 while facets still carry 0..n-1 (or the
-  // reverse), and every filtered query would silently return 0 hits
-  // lazy val, not def: pinned on first use so one handle never flips source
-  // mid-query (a handle is bound to one index version by contract)
-  // compact()'s OWN completion marker (written after both cache jobs commit,
-  // dropped before any overwrite/delete), not bare dir existence: a crash
-  // mid facets_compact leaves a dir that EXISTS but holds partial data
-  // (AnalysisException, or silently dropped facet matches). The shared
-  // definition lives in IndexBuild.compactServable — IndexVersion MUST key
-  // on the same predicate or reloads desync from the serving source.
-  @transient private lazy val compactComplete: Boolean =
-    graft.index.IndexBuild.compactServable(dir)
-  def segmentsPath: String =
-    if (compactComplete) s"$dir/segments_compact" else s"$dir/segments"
-  def facetsPath: String =
-    if (compactComplete) s"$dir/facets_compact" else s"$dir/facets"
+  def segmentsPath: String = s"$dir/segments"
+  def facetsPath: String = s"$dir/facets"
   /** Materialized term dictionary: df lookups and suggestions read it. */
   def termdict: String = s"$dir/termdict"
   /** [[termdict]] under its earlier Option-typed name, kept for callers

@@ -1,7 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.SparkSession
-import graft.index.{PostingListMerger, PostingListReader, SortedIds, TableIO}
+import graft.index.{PostingListMerger, SortedIds}
 import scala.collection.parallel.CollectionConverters._
 
 /** Resident serving layer — the analog of the reference's always-on
@@ -388,24 +388,12 @@ object InMemoryIndex {
       sharedGlobalDf: Option[Map[(String, String), Long]] = None): InMemoryIndex = {
     var bytes = 0L
     val postings = new java.util.HashMap[(String, String), (Long, Array[Byte], Array[Byte])]()
-    // a doc-shard (chunk-subset) load needs the PER-CHUNK tables: the
-    // compacted rewrite carries chunk = -1, which a chunk filter would
-    // silently reduce to an empty node — read the originals, which
-    // compaction keeps alongside the *_compact dirs
-    val segSrc =
-      if (chunks.isDefined && idx.segmentsPath.endsWith("_compact"))
-        s"${idx.dir}/segments"
-      else idx.segmentsPath
-    val facetSrc =
-      if (chunks.isDefined && idx.facetsPath.endsWith("_compact"))
-        s"${idx.dir}/facets"
-      else idx.facetsPath
     // load-time scans read whole tables (pruned only by bucket/chunk shard
     // selection) destined for THIS process's heap: a driver read skips the
     // executor→driver row serialization round trip entirely
     // (LocalParquetSpec gates row parity with the Spark read)
     val segRows: Array[(String, String, Array[Byte], Array[Byte])] =
-      graft.index.LocalParquet.readSegmentsFull(segSrc, buckets, chunks).toArray
+      graft.index.LocalParquet.readSegmentsFull(idx.segmentsPath, buckets, chunks).toArray
     // per-term chunk-run merges are independent pure CPU — spread them over
     // the node's cores (load time is node startup; ~3× faster than the
     // single-thread loop on a 3-chunk index)
@@ -423,7 +411,7 @@ object InMemoryIndex {
     bytes += byteSum.get()
     val facetShard = facetBuckets.orElse(buckets.map(_ => Set.empty[Int]))
     val facetRows: Array[(String, String, String, Long, Array[Byte])] =
-      graft.index.LocalParquet.readFacetsFull(facetSrc, facetShard, chunks).toArray
+      graft.index.LocalParquet.readFacetsFull(idx.facetsPath, facetShard, chunks).toArray
     val facets = facetRows
       .groupBy(r => (r._1, r._2, r._3))
       .map { case (key, rows) =>

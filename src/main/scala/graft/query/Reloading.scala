@@ -13,12 +13,10 @@ import graft.index.TableIO
   *   - build / deleteByQuery / reindexDocs / snapshot-ingest consume append
   *     manifest commit files (names carry a monotonic (ts, counter) — see
   *     [[graft.index.Manifest]]), changing the count and the max sequence;
-  *   - auto/explicit compaction rewrites `compact_state.json` and creates or
-  *     drops the `*_compact` read caches;
   *   - finalizeStats rewrites `termdict/` then `stats.json` (both
   *     fingerprinted directly — see [[IndexVersion.of]] for why the manifest
   *     commits alone don't cover the build path's final stats rewrite).
-  * Cost per poll: two small-directory listings + two tiny file reads — no
+  * Cost per poll: two small-directory listings + one tiny file read — no
   * Spark job, no parquet footer reads.
   */
 object IndexVersion {
@@ -29,25 +27,22 @@ object IndexVersion {
     // recency — strip to the fixed-width ts-counter suffix first
     val latest = commits.map(_.split("-").drop(2).mkString("-"))
       .sorted.lastOption.getOrElse("")
-    val compactState = TableIO.readString(s"$dir/compact_state.json").getOrElse("")
-    // the SERVING-SOURCE flip signal — the SAME predicate IndexHandle keys
-    // on (marker + both dirs): fingerprinting on a
-    // different signal would either skip a reload across a real source flip
-    // or reload onto a half-written cache the loader then ignores
-    val hasCompact = graft.index.IndexBuild.compactServable(dir)
     // finalizeStats' artifacts move the fingerprint too: build()'s LAST
     // manifest commit lands BEFORE the corpus-wide stats/termdict rewrite
     // (minutes at scale), so a reload triggered by that commit would pin
-    // PRE-build stats (every BM25 score skewed) with nothing ever
-    // re-triggering on the build path — the mutation paths converge only
-    // because noteMutation bumps compact_state afterwards. stats.json is
-    // hashed by content (written last — content equality IS semantic
-    // equality); the termdict swap is fingerprinted by its part-file names
-    // (fresh task UUIDs every rewrite, one dir listing per poll)
+    // PRE-build stats (every BM25 score skewed) with nothing re-triggering.
+    // finalizeStats writes the termdict part files, then stats.json, and
+    // that is the last fingerprinted write of every build and mutation (a
+    // mutation clears its journal after it; a poll inside that window fails
+    // in IndexHandle.load and ReloadingNode retries on the next poll).
+    // stats.json is hashed by content (written last — content equality IS
+    // semantic equality); the termdict swap is fingerprinted by its
+    // part-file names (fresh task UUIDs every rewrite, one dir listing per
+    // poll)
     val stats = md5(TableIO.readString(s"$dir/stats.json").getOrElse(""))
     val termdict = md5(
       TableIO.listFiles(s"$dir/termdict", "part-").sorted.mkString(","))
-    s"${commits.size}|$latest|$hasCompact|$compactState|$stats|$termdict"
+    s"${commits.size}|$latest|$stats|$termdict"
   }
 
   private def md5(s: String): String = {
@@ -66,12 +61,16 @@ object IndexVersion {
   * TTL cache in the same step.
   *
   * Torn reads: a poll can fire mid-mutation (the writer rewrites one chunk
-  * partition at a time). A reload that fails (parquet dir mid-overwrite)
-  * keeps serving the old snapshot and retries next poll; a reload that
-  * succeeds on an intermediate state is re-triggered by the NEXT version
-  * bump — every mutation's final step (stats + compaction counter, after the
-  * last chunk commit) moves the fingerprint again, so the node converges on
-  * the fully-committed state within one poll interval.
+  * partition at a time). A reload that fails keeps serving the old snapshot
+  * and, because [[checkAndReload]] advances `version` only after a
+  * successful load, retries on the next poll. Two facts make the node
+  * converge on the fully-committed state within one poll interval:
+  *   - while a mutation's journal (`mutation_pending.json`) exists,
+  *     `IndexHandle.load` fails, so no poll loads a half-rewritten chunk;
+  *   - finalizeStats (the `termdict/` part names, then `stats.json`) is the
+  *     last fingerprinted write of every build and mutation, so a reload
+  *     that succeeded on an earlier state (a build between chunk commits)
+  *     is re-triggered by that move.
   *
   * Fleet use: each shard JVM wraps its chunk-subset node in one of these and
   * reloads independently; the chunk assignment never changes across a

@@ -17,10 +17,9 @@ class IndexBuildSpec extends AnyFunSuite {
   /** Decode every (lang,term) posting list of an index into a canonical map
     * for content comparison (file layout may differ; content must not).
     */
-  private def postingsFingerprint(dir: String, compacted: Boolean): Map[(String, String), (Long, Long, Seq[(Long, Int, Int)])] = {
-    val path = if (compacted) s"$dir/segments_compact" else s"$dir/segments"
+  private def postingsFingerprint(dir: String): Map[(String, String), (Long, Long, Seq[(Long, Int, Int)])] = {
     import spark.implicits._
-    spark.read.parquet(path)
+    spark.read.parquet(s"$dir/segments")
       .select("lang", "term", "df", "cf", "blob", "posBlob")
       .as[(String, String, Long, Long, Array[Byte], Array[Byte])]
       .collect()
@@ -40,8 +39,8 @@ class IndexBuildSpec extends AnyFunSuite {
     rm("/tmp/gidx-a"); rm("/tmp/gidx-b")
     IndexBuild.build(spark, corpus, "/tmp/gidx-a", numChunks = 1, saltTargetPostings = 1 << 30)
     IndexBuild.build(spark, corpus, "/tmp/gidx-b", numChunks = 3, saltTargetPostings = 32)
-    val a = postingsFingerprint("/tmp/gidx-a", compacted = false)
-    val b = postingsFingerprint("/tmp/gidx-b", compacted = false)
+    val a = postingsFingerprint("/tmp/gidx-a")
+    val b = postingsFingerprint("/tmp/gidx-b")
     assert(a.keySet == b.keySet, "term dictionaries differ")
     a.foreach { case (k, v) => assert(b(k) == v, s"postings differ for $k") }
     // salting must actually have produced >1 run for head terms in build b
@@ -70,8 +69,8 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(mtimeAfter == mtimeBefore, "chunk 0 was recomputed on resume")
     assert(Manifest.doneChunks("/tmp/gidx-resume") == Set(0, 1, 2, 3))
     // resumed index content == clean build content
-    val clean = postingsFingerprint("/tmp/gidx-clean", compacted = false)
-    val resumed = postingsFingerprint("/tmp/gidx-resume", compacted = false)
+    val clean = postingsFingerprint("/tmp/gidx-clean")
+    val resumed = postingsFingerprint("/tmp/gidx-resume")
     assert(clean == resumed)
     // manifest carries per-partition metrics (lineage)
     val rows = Manifest.rows("/tmp/gidx-resume")
@@ -130,8 +129,8 @@ class IndexBuildSpec extends AnyFunSuite {
     // the recorded signatures no longer match → both chunks must rebuild
     IndexBuild.build(spark, corpusB, "/tmp/gidx-stale", numChunks = 2)
     IndexBuild.build(spark, corpusB, "/tmp/gidx-fresh", numChunks = 2)
-    val stale = postingsFingerprint("/tmp/gidx-stale", compacted = false)
-    val fresh = postingsFingerprint("/tmp/gidx-fresh", compacted = false)
+    val stale = postingsFingerprint("/tmp/gidx-stale")
+    val fresh = postingsFingerprint("/tmp/gidx-fresh")
     assert(stale == fresh, "rebuild into the changed-input dir must serve the NEW input")
     // and unchanged input still resumes as a no-op
     val seg0 = new java.io.File("/tmp/gidx-stale/segments/chunk=0")
@@ -158,8 +157,8 @@ class IndexBuildSpec extends AnyFunSuite {
     IndexBuild.build(spark,
       corpus.filter(!(pmod(col("docId"), lit(3)) === 0 && col("docId") < 300)),
       "/tmp/gidx-del-fresh", numChunks = 3)
-    assert(postingsFingerprint("/tmp/gidx-del", compacted = false) ==
-      postingsFingerprint("/tmp/gidx-del-fresh", compacted = false))
+    assert(postingsFingerprint("/tmp/gidx-del") ==
+      postingsFingerprint("/tmp/gidx-del-fresh"))
   }
 
   test("Q12 reindex (MERGE): delete + add == fresh build of the modified corpus") {
@@ -174,8 +173,8 @@ class IndexBuildSpec extends AnyFunSuite {
       when(pmod(col("docId"), lit(5)) === 0, concat(col("text"), lit(" regenerated")))
         .otherwise(col("text")))
     IndexBuild.build(spark, modified, "/tmp/gidx-re-fresh", numChunks = 2)
-    assert(postingsFingerprint("/tmp/gidx-re", compacted = false) ==
-      postingsFingerprint("/tmp/gidx-re-fresh", compacted = false))
+    assert(postingsFingerprint("/tmp/gidx-re") ==
+      postingsFingerprint("/tmp/gidx-re-fresh"))
     // stats reflect the merged corpus
     val h = graft.query.IndexHandle.load("/tmp/gidx-re")
     val hf = graft.query.IndexHandle.load("/tmp/gidx-re-fresh")
@@ -199,69 +198,6 @@ class IndexBuildSpec extends AnyFunSuite {
       graft.query.QuerySpec("gu", Webtext.GoldenPhrase("gu").mkString(" ")))
     assert(res.hits.nonEmpty)
     assert(res.hits.forall(h => h.docId % 3 != 1))
-  }
-
-  test("mutation invalidates stale compacted copies (IndexHandle prefers *_compact)") {
-    import org.apache.spark.sql.functions._
-    val corpus = Webtext.synthesize(spark, 300, partitions = 2).toDF()
-    rm("/tmp/gidx-stalec")
-    IndexBuild.build(spark, corpus, "/tmp/gidx-stalec", numChunks = 2)
-    IndexBuild.compact(spark, "/tmp/gidx-stalec")
-    assert(new java.io.File("/tmp/gidx-stalec/segments_compact").exists())
-    IndexBuild.deleteByQuery(spark, "/tmp/gidx-stalec", col("docId") < 50)
-    // a stale compacted copy would resurrect the deleted docs via IndexHandle
-    assert(!new java.io.File("/tmp/gidx-stalec/segments_compact").exists())
-    assert(!new java.io.File("/tmp/gidx-stalec/facets_compact").exists())
-    val h = graft.query.IndexHandle.load("/tmp/gidx-stalec")
-    assert(h.segmentsPath.endsWith("/segments"))
-  }
-
-  test("half-written compact is never served without its marker") {
-    val dir = "/tmp/gidx-halfc"
-    val corpus = Webtext.synthesize(spark, 300, partitions = 2).toDF()
-    rm(dir)
-    IndexBuild.build(spark, corpus, dir, numChunks = 2)
-    IndexBuild.compact(spark, dir)
-    assert(TableIO.exists(IndexBuild.compactDonePath(dir)))
-    val vCompact = graft.query.IndexVersion.of(dir)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"))
-    // crash mid facets_compact job: dir exists with partial data (no
-    // _SUCCESS), marker never written — must fall back to base tables
-    TableIO.deleteRecursive(IndexBuild.compactDonePath(dir))
-    TableIO.deleteRecursive(s"$dir/facets_compact/_SUCCESS")
-    val h = graft.query.IndexHandle.load(dir)
-    assert(h.segmentsPath.endsWith("/segments"),
-      "a compact cache without its completion marker must not be served")
-    assert(h.facetsPath.endsWith("/facets"))
-    // the reload fingerprint must key on the same predicate the handle does —
-    // otherwise a poller would skip a reload across a real source flip
-    assert(graft.query.IndexVersion.of(dir) != vCompact,
-      "IndexVersion must move when compact serving flips off")
-    // marker alone (cache dirs missing) must also read as not-compacted
-    IndexBuild.compact(spark, dir)
-    TableIO.deleteRecursive(s"$dir/segments_compact")
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("/segments"))
-  }
-
-  test("resume-build that rewrites chunks drops stale compact caches; no-op resume keeps them") {
-    val dir = "/tmp/gidx-resumec"
-    rm(dir)
-    val c1 = Webtext.synthesize(spark, 300, partitions = 2).toDF()
-    IndexBuild.build(spark, c1, dir, numChunks = 2)
-    IndexBuild.compact(spark, dir)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"))
-    // changed input -> chunk signatures mismatch -> rebuild -> a stale
-    // compact copy would resurrect dropped docs / hide added ones
-    val c2 = Webtext.synthesize(spark, 320, partitions = 2).toDF()
-    IndexBuild.build(spark, c2, dir, numChunks = 2)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("/segments"),
-      "a resume-build that rewrote chunks must not leave stale compact caches served")
-    assert(!TableIO.exists(IndexBuild.compactDonePath(dir)))
-    // a pure no-op resume (identical input) keeps the caches: content is
-    // unchanged by construction
-    IndexBuild.compact(spark, dir)
-    IndexBuild.build(spark, c2, dir, numChunks = 2)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"))
   }
 
   test("empty-match mutation must NOT finalize a half-built index (coverage-gated heal)") {
@@ -290,26 +226,52 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(graft.query.IndexHandle.load(dir).stats.nonEmpty)
   }
 
-  test("no-match mutation keeps compact caches, serving version, and compact counter") {
+  test("no-match mutation leaves the serving version unchanged; a matching one moves it") {
     import org.apache.spark.sql.functions._
     val dir = "/tmp/gidx-noopmut"
     rm(dir)
     val corpus = Webtext.synthesize(spark, 300, partitions = 2).toDF()
     IndexBuild.build(spark, corpus, dir, numChunks = 2)
-    IndexBuild.compact(spark, dir)
     val v0 = graft.query.IndexVersion.of(dir)
-    val state0 = TableIO.readString(s"$dir/compact_state.json")
     IndexBuild.deleteByQuery(spark, dir, col("docId") === -1L)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("_compact"),
-      "a mutation that changed nothing must not demote serving off the compact caches")
     assert(graft.query.IndexVersion.of(dir) == v0,
       "no content change -> no reload fingerprint movement -> no fleet-wide reload")
-    assert(TableIO.readString(s"$dir/compact_state.json") == state0,
-      "a no-op mutation must not creep the auto-compact counter")
-    // and a MATCHING delete still drops the caches before rewriting
     IndexBuild.deleteByQuery(spark, dir, col("docId") % 7 === 0L)
-    assert(graft.query.IndexHandle.load(dir).segmentsPath.endsWith("/segments"))
     assert(graft.query.IndexVersion.of(dir) != v0)
+  }
+
+  test("leftover compaction caches of an earlier build are never served") {
+    import org.apache.spark.sql.functions._
+    import graft.query.{Bm25Query, IndexHandle, InMemoryIndex, QuerySpec}
+    val dir = "/tmp/gidx-leftoverc"
+    rm(dir)
+    val corpus = Webtext.synthesize(spark, 600, partitions = 2).toDF()
+    IndexBuild.build(spark, corpus, dir, numChunks = 2)
+    // what an earlier graft's compaction left: copies of the live tables
+    // under *_compact plus its completion marker
+    Seq("segments", "facets").foreach { t =>
+      val from = java.nio.file.Paths.get(s"$dir/$t")
+      val walk = java.nio.file.Files.walk(from)
+      try walk.forEach { f =>
+        java.nio.file.Files.copy(f,
+          java.nio.file.Paths.get(s"$dir/${t}_compact").resolve(from.relativize(f)))
+      } finally walk.close()
+    }
+    TableIO.writeStringAtomic(s"$dir/compact_done.json", """{"done": true}""")
+    TableIO.writeStringAtomic(s"$dir/compact_state.json", """{"mutationsSinceCompact": 0}""")
+    val q = QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "),
+      pageSize = 1000, trackTotalHits = 100000L)
+    val before = Bm25Query.search(spark, IndexHandle.load(dir), q)
+    assert(before.hits.nonEmpty, "precondition: the golden phrase has hits")
+    val victim = before.hits.head.docId
+    IndexBuild.deleteByQuery(spark, dir, col("docId") === victim)
+    val h = IndexHandle.load(dir)
+    assert(h.segmentsPath.endsWith("/segments") && h.facetsPath.endsWith("/facets"))
+    val disk = Bm25Query.search(spark, h, q)
+    val mem = InMemoryIndex.load(spark, h).search(q)
+    assert(disk.totalHits == before.totalHits - 1 && mem.totalHits == disk.totalHits)
+    assert(!disk.hits.exists(_.docId == victim), "disk search served a deleted doc")
+    assert(!mem.hits.exists(_.docId == victim), "resident load served a deleted doc")
   }
 
   test("empty-match mutation repairs stats/termdict (self-heal after a crash inside finalizeStats)") {
@@ -388,8 +350,8 @@ class IndexBuildSpec extends AnyFunSuite {
       .where(col("docId") >= 20)
     IndexBuild.build(spark, modified, "/tmp/gidx-noposmut-fresh", numChunks = 2,
       storePositions = false)
-    assert(postingsFingerprint("/tmp/gidx-noposmut", compacted = false) ==
-      postingsFingerprint("/tmp/gidx-noposmut-fresh", compacted = false))
+    assert(postingsFingerprint("/tmp/gidx-noposmut") ==
+      postingsFingerprint("/tmp/gidx-noposmut-fresh"))
     // phrase still fails fast after the mutations (gu plants — docIds 106,
     // 207, 308 — survive the docId < 20 delete, so the kernel must reach for
     // positions and find none)
@@ -492,8 +454,7 @@ class IndexBuildSpec extends AnyFunSuite {
       Seq[(String, () => Any)](
         "load" -> (() => graft.query.IndexHandle.load(d)),
         "deleteByQuery" -> (() => IndexBuild.deleteByQuery(spark, d, col("docId") === 1L)),
-        "reindexDocs" -> (() => IndexBuild.reindexDocs(spark, d, corpus.where(col("docId") === 1L))),
-        "compact" -> (() => IndexBuild.compact(spark, d))
+        "reindexDocs" -> (() => IndexBuild.reindexDocs(spark, d, corpus.where(col("docId") === 1L)))
       ).foreach { case (op, run) =>
         val e = intercept[IllegalStateException](run())
         assert(e.getMessage.contains(s"$d has index formatVersion $found") &&
@@ -557,21 +518,6 @@ class IndexBuildSpec extends AnyFunSuite {
     IndexBuild.debugTextSink(spark, "/tmp/gidx-dbg", "/tmp/gidx-dbg-out")
     val lines = spark.read.text("/tmp/gidx-dbg-out").count()
     assert(lines == 120)
-  }
-
-  test("compact folds per-chunk segments into one, content-identical") {
-    val corpus = Webtext.synthesize(spark, 800, partitions = 4).toDF()
-    rm("/tmp/gidx-c")
-    IndexBuild.build(spark, corpus, "/tmp/gidx-c", numChunks = 3, saltTargetPostings = 32)
-    val before = postingsFingerprint("/tmp/gidx-c", compacted = false)
-    IndexBuild.compact(spark, "/tmp/gidx-c")
-    val after = postingsFingerprint("/tmp/gidx-c", compacted = true)
-    assert(before == after)
-    // compacted segments have exactly one row per (lang, term)
-    import spark.implicits._
-    val dup = spark.read.parquet("/tmp/gidx-c/segments_compact")
-      .groupBy("lang", "term").count().filter("count > 1").count()
-    assert(dup == 0)
   }
 
   test("manifest: O(1) commit files, per-chunk latest wins") {
@@ -639,28 +585,6 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(e.getMessage.contains("numChunks"))
   }
 
-  test("doc-sharded fleet load of a COMPACTED index reads per-chunk tables, results identical") {
-    import graft.query._
-    val corpus = Webtext.synthesize(spark, 800, partitions = 3).toDF()
-    rm("/tmp/gidx-compactfleet")
-    IndexBuild.build(spark, corpus, "/tmp/gidx-compactfleet", numChunks = 2,
-      saltTargetPostings = 64)
-    val idx0 = IndexHandle.load("/tmp/gidx-compactfleet")
-    val full = InMemoryIndex.load(spark, idx0)
-    IndexBuild.compact(spark, "/tmp/gidx-compactfleet")
-    val idx = IndexHandle.load("/tmp/gidx-compactfleet")
-    assert(idx.segmentsPath.endsWith("_compact")) // compacted view preferred
-    val nodes = ShardedServe.chunkAssignment(2, 2).map(cs =>
-      InMemoryIndex.load(spark, idx, chunks = Some(cs)))
-    assert(nodes.forall(_.loadedBytes > 0), "chunk-subset nodes must not be empty")
-    val q = QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "), mode = "any")
-    val fleet = ShardedServe.search(nodes, q)
-    val direct = full.search(q)
-    assert(fleet.hits.map(h => (h.docId, h.score)) ==
-      direct.hits.map(h => (h.docId, h.score)))
-    assert(fleet.totalHits == direct.totalHits)
-  }
-
   test("url-derived docIds: recrawled urls dedup to the latest capture") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -720,41 +644,6 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ambiguous"))
   }
 
-  test("auto-compaction fires after K mutations; serving identical across the trigger") {
-    import org.apache.spark.sql.functions._
-    import graft.query.{IndexHandle, InMemoryIndex, QuerySpec}
-    val dir = "/tmp/gidx-autocompact"
-    rm(dir)
-    val prev = IndexBuild.AutoCompactEvery
-    IndexBuild.AutoCompactEvery = 3
-    try {
-      val corpus = Webtext.synthesize(spark, 300, partitions = 2).toDF()
-      IndexBuild.build(spark, corpus, dir, numChunks = 2, saltTargetPostings = 64)
-      def mutate(id: Long): Unit =
-        IndexBuild.reindexDocs(spark, dir, corpus.where(col("docId") === id))
-      mutate(5); mutate(6)
-      assert(!new java.io.File(s"$dir/segments_compact").exists(),
-        "compaction must not fire below the threshold")
-      val q = QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "))
-      val before = InMemoryIndex.load(spark, IndexHandle.load(dir)).search(q)
-      mutate(7) // third mutation since the build -> auto-compact
-      assert(new java.io.File(s"$dir/segments_compact").exists(), "auto-compact did not fire")
-      assert(new java.io.File(s"$dir/facets_compact").exists())
-      val h2 = IndexHandle.load(dir)
-      assert(h2.segmentsPath.endsWith("_compact"), "serving must prefer the compacted copy")
-      val after = InMemoryIndex.load(spark, h2).search(q)
-      assert(after.hits.map(h => (h.docId, h.score)) ==
-        before.hits.map(h => (h.docId, h.score)), "results changed across compaction")
-      assert(after.totalHits == before.totalHits)
-      // compacted content == chunked content, decoded
-      assert(postingsFingerprint(dir, compacted = true) ==
-        postingsFingerprint(dir, compacted = false))
-      // the next mutation invalidates the caches and restarts the cadence
-      mutate(8)
-      assert(!new java.io.File(s"$dir/segments_compact").exists())
-    } finally IndexBuild.AutoCompactEvery = prev
-  }
-
   test("interrupted mutation: journal blocks serving, recovery replays and converges") {
     import org.apache.spark.sql.functions._
     val dir = "/tmp/gidx-journal"
@@ -782,8 +671,8 @@ class IndexBuildSpec extends AnyFunSuite {
     IndexBuild.build(spark,
       corpus.where(!(pmod(col("docId"), lit(2)) === 0 && col("docId") < 40)),
       fresh, numChunks = 2)
-    assert(postingsFingerprint(dir, compacted = false) ==
-      postingsFingerprint(fresh, compacted = false))
+    assert(postingsFingerprint(dir) ==
+      postingsFingerprint(fresh))
     // and serving works again
     assert(graft.query.IndexHandle.load(dir).stats.nonEmpty)
   }
@@ -813,8 +702,8 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/tmp_rewrite_chunk_0").exists())
     // content equals a from-scratch build of the new corpus, and serving loads
     IndexBuild.build(spark, corpus2, fresh, numChunks = 2)
-    assert(postingsFingerprint(dir, compacted = false) ==
-      postingsFingerprint(fresh, compacted = false))
+    assert(postingsFingerprint(dir) ==
+      postingsFingerprint(fresh))
     assert(graft.query.IndexHandle.load(dir).stats ==
       graft.query.IndexHandle.load(fresh).stats)
   }
@@ -844,8 +733,8 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(IndexBuild.pendingMutation(dir).isEmpty)
     // content equals a from-scratch build, and serving loads again
     IndexBuild.build(spark, corpus, fresh, numChunks = 2)
-    assert(postingsFingerprint(dir, compacted = false) ==
-      postingsFingerprint(fresh, compacted = false))
+    assert(postingsFingerprint(dir) ==
+      postingsFingerprint(fresh))
     assert(graft.query.IndexHandle.load(dir).stats.nonEmpty)
   }
 
@@ -877,8 +766,8 @@ class IndexBuildSpec extends AnyFunSuite {
     (0 to 1).foreach(k => assert(!new java.io.File(s"$dir/tmp_rewrite_chunk_$k").exists()))
     // BOTH chunks converged to a fresh post-delete build (incl. stats)
     IndexBuild.build(spark, corpus.where(keepPred), fresh, numChunks = 2)
-    assert(postingsFingerprint(dir, compacted = false) ==
-      postingsFingerprint(fresh, compacted = false))
+    assert(postingsFingerprint(dir) ==
+      postingsFingerprint(fresh))
     assert(graft.query.IndexHandle.load(dir).stats ==
       graft.query.IndexHandle.load(fresh).stats)
   }
@@ -953,7 +842,7 @@ class IndexBuildSpec extends AnyFunSuite {
     assert(IndexBuild.pendingMutation(dir).isEmpty)
     IndexBuild.build(spark, corpus.where(col("docId") >= 20), fresh,
       numChunks = 1, saltTargetPostings = 64)
-    assert(postingsFingerprint(dir, compacted = false) ==
-      postingsFingerprint(fresh, compacted = false))
+    assert(postingsFingerprint(dir) ==
+      postingsFingerprint(fresh))
   }
 }

@@ -9,11 +9,12 @@ import graft.index.{IndexBuild, TableIO}
   * mutations WITHOUT a restart — the reference reindexes every 6 h into a
   * live OpenSearch (scripts/discovery_cli.py:330-331, delete-by-query
   * backend/common/opensearch.py:304-339) and serves continuously. Gated
-  * here: mutation (deleteByQuery, with auto-compaction firing mid-test) →
-  * the node swaps to post-mutation results with FULL parity vs a fresh
-  * node, queries racing the swap never fail and always see exactly one of
-  * the two snapshots, and fleet shard nodes reload independently without
-  * tripping the coverage handshake.
+  * here: mutation (deleteByQuery) → the node swaps to post-mutation results
+  * with FULL parity vs a fresh node, a poll inside a mutation's journal
+  * window keeps the old snapshot and the next poll converges, queries
+  * racing the swap never fail and always see exactly one of the two
+  * snapshots, and fleet shard nodes reload independently without tripping
+  * the coverage handshake.
   */
 class ReloadSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -35,9 +36,11 @@ class ReloadSpec extends AnyFunSuite {
     IndexBuild.deleteByQuery(spark, dir, col("docId") === 3L)
     val v1 = IndexVersion.of(dir)
     assert(v1 != v0, "deleteByQuery must move the fingerprint")
-    // explicit compaction (no manifest append) must ALSO move it
-    IndexBuild.compact(spark, dir)
-    assert(IndexVersion.of(dir) != v1, "compaction must move the fingerprint")
+    // reindexDocs (IncrementalIndex's path) must ALSO move it
+    IndexBuild.reindexDocs(spark, dir,
+      Webtext.synthesize(spark, 600).toDF().where(col("docId") === 5L)
+        .withColumn("text", org.apache.spark.sql.functions.lit("reindexed text")))
+    assert(IndexVersion.of(dir) != v1, "reindexDocs must move the fingerprint")
     // finalizeStats (stats/termdict rewrite, NO manifest append — build()'s
     // final step) must ALSO move it: pre-fix, a reload triggered by the last
     // chunk commit raced the corpus-wide stats rewrite and pinned PRE-build
@@ -47,7 +50,7 @@ class ReloadSpec extends AnyFunSuite {
     assert(IndexVersion.of(dir) != v2, "finalizeStats must move the fingerprint")
   }
 
-  test("deleteByQuery (auto-compaction firing) swaps to post-mutation results with full parity") {
+  test("deleteByQuery swaps to post-mutation results with full parity") {
     val dir = "/tmp/gidx-reload-swap"
     freshIndex(dir)
     val rn = new ReloadingNode(dir,
@@ -59,14 +62,7 @@ class ReloadSpec extends AnyFunSuite {
     assert(before.nonEmpty)
     val victim = before.head._1
     assert(!rn.checkAndReload(), "no mutation -> no swap")
-    // force the compaction trigger so the reload crosses BOTH mutation
-    // classes at once (chunk rewrite + compacted read-cache swap)
-    val prevEvery = IndexBuild.AutoCompactEvery
-    IndexBuild.AutoCompactEvery = 1
-    try IndexBuild.deleteByQuery(spark, dir, col("docId") === victim)
-    finally IndexBuild.AutoCompactEvery = prevEvery
-    assert(TableIO.exists(s"$dir/segments_compact"),
-      "precondition: auto-compaction fired on this mutation")
+    IndexBuild.deleteByQuery(spark, dir, col("docId") === victim)
     assert(rn.checkAndReload(), "mutation must trigger a swap")
     assert(swaps == 1)
     val after = page(rn, q)
@@ -76,6 +72,29 @@ class ReloadSpec extends AnyFunSuite {
     val fresh = InMemoryIndex.load(spark, IndexHandle.load(dir))
     assert(after == page(fresh, q))
     assert(rn.search(q).totalHits == fresh.search(q).totalHits)
+  }
+
+  test("a poll inside a mutation's journal window keeps the old snapshot; the next converges") {
+    val dir = "/tmp/gidx-reload-journal"
+    freshIndex(dir)
+    val rn = new ReloadingNode(dir,
+      () => InMemoryIndex.load(spark, IndexHandle.load(dir)))
+    val q = QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "))
+    val before = page(rn, q)
+    val victim = before.head._1
+    IndexBuild.deleteByQuery(spark, dir, col("docId") === victim)
+    // the state a poll sees between a mutation's last fingerprinted write
+    // (stats.json) and its journal clear
+    val journal = s"$dir/mutation_pending.json"
+    TableIO.writeStringAtomic(journal, """{"chunks": [0], "salt": 64}""")
+    val e = intercept[RuntimeException](rn.checkAndReload())
+    assert(e.getMessage.contains("interrupted mutation"), e.getMessage)
+    assert(page(rn, q) == before, "a failed reload must keep the old snapshot")
+    TableIO.deleteRecursive(journal)
+    assert(rn.checkAndReload(), "the poll after the journal clears must swap")
+    val fresh = InMemoryIndex.load(spark, IndexHandle.load(dir))
+    assert(page(rn, q) == page(fresh, q))
+    assert(!page(rn, q).exists(_._1 == victim))
   }
 
   test("pinned binds multi-call operations to ONE snapshot across a swap") {
