@@ -235,8 +235,8 @@ object SparkEntry {
       engineTopK(s, dir, QuerySpec("en", "spark data",
         dateRange = Some((None, Some(2019)))))),
     "phrase_match" -> ((s, dir) => {
-      // full phrase match set via the DISTRIBUTED kernel path (per-segment
-      // executors, unbounded heap) — no driver funnel
+      // full phrase match set via the executor kernel plan (one task per
+      // chunk, unbounded heap) — no driver funnel
       Bm25Query.matchedDocsDf(s, index(s, dir),
         QuerySpec("en", "batch batch", phrase = true))
         .select(col("docId").as("doc_id"))
@@ -976,9 +976,9 @@ object SparkEntry {
     // ---- hybrid lexical+vector fusion (J3 full outer, A8 max-norm, W3) ----
     "hybrid_rank" -> ((s, dir) => {
       // lexical side: ALL AND-matches for (spark, data) over en docs as a
-      // DataFrame end-to-end (index-backed distributed scoring — postings are
-      // decoded in executors, normalization/fusion never touch the driver)
-      val lex = Bm25Query.scoreDf(s, index(s, dir), QuerySpec("en", "spark data"))
+      // DataFrame end-to-end (the executor kernel plan, one task per chunk —
+      // normalization/fusion never touch the driver)
+      val lex = Bm25Query.matchedDocsDf(s, index(s, dir), QuerySpec("en", "spark data"))
         .select(col("docId").as("doc_id"), col("score"))
       // vector side: cosine of every embedding to query vector vec_id=0
       val emb = embeddings(s, dir)

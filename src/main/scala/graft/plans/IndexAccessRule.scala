@@ -92,7 +92,7 @@ object IndexAccessRule extends Rule[LogicalPlan] with PredicateHelper {
     * codegen Expression: it runs once per matched (chunk, term) segment row
     * — a handful of rows per query — never per document.
     */
-  private val postingDocIds = udf((blob: Array[Byte]) =>
+  private val decodeDocIds = udf((blob: Array[Byte]) =>
     PostingListReader.docIds(blob).toSeq)
 
   /** The analyzer lambda as stored inside every ScalaUDF built from
@@ -161,7 +161,7 @@ object IndexAccessRule extends Rule[LogicalPlan] with PredicateHelper {
     val buckets = terms.map(graft.query.InMemoryIndex.bucketOf).distinct
     spark.read.parquet(s"$dir/segments")
       .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(explode(postingDocIds(col("blob"))).as("graft_posting_docid"))
+      .select(explode(decodeDocIds(col("blob"))).as("graft_posting_docid"))
       .queryExecution.analyzed
   }
 

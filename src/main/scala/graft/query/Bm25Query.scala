@@ -1,9 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
-import graft.index.{PostingListReader, SortedIds}
 
 /** Query request — mirrors the reference SearchRequest surface
   * (backend/api/search_api.py:180-213): query text, language, exact phrase
@@ -124,17 +123,16 @@ object Bm25Query {
 
   /** Below this Σdf the query reads its posting blobs on the driver and runs
     * the kernel there (no Spark job); above it the per-segment kernels run
-    * in executor tasks. ~5M postings ≈ tens of MB.
-    * Driver-side config knob (mutable for tests / tuning).
+    * in executor tasks. ~5M postings ≈ tens of MB. Mutable so tests can
+    * force the executor path.
     */
-  @volatile var MaxDriverPostings: Long =
-    sys.env.getOrElse("GRAFT_MAX_DRIVER_POSTINGS", "5000000").toLong
+  @volatile var MaxDriverPostings: Long = 5000000L
 
   /** Cap on [[IndexHandle.dfCache]] entries (~32 MB of boxed map at the cap;
     * cleared wholesale when exceeded — queries repeat head terms, so a crude
     * reset keeps the hit rate high without LRU bookkeeping).
     */
-  @volatile var DfCacheMax: Int = 1 << 20
+  val DfCacheMax: Int = 1 << 20
 
   /** Corpus-wide df for `terms`, served from the handle's driver-resident
     * term-df cache; only UNCACHED terms pay a probe: a (lang, term)-pruned
@@ -167,29 +165,36 @@ object Bm25Query {
   def queryTerms(q: QuerySpec): Array[(String, Int)] =
     QueryCore.dedupQueryTerms(Analyzer.analyze(q.query, q.lang))
 
+  /** What every scoring path derives from a query before reading postings:
+    * the context, the terms to read (query terms plus excludes), their
+    * global df and the per-term idf.
+    */
+  private case class Prepared(ctx: QueryCore.Ctx, allTerms: Array[String],
+      dfMap: Map[String, Long], info: Array[(String, Int, Double)])
+
+  /** The shared prelude of [[search]] and [[matchedDocsDf]]. None when
+    * nothing can match: the query analyzed to no terms, or an AND query has
+    * a term of df 0. Global dfs come from the handle's term-df cache; only
+    * first-seen terms pay a probe.
+    */
+  private def prepare(spark: SparkSession, idx: IndexHandle, q: QuerySpec): Option[Prepared] =
+    QueryCore.context(q, idx.numDocs(q.lang), idx.avgdl(q.lang)).flatMap { ctx =>
+      val allTerms = (ctx.terms.map(_._1) ++ ctx.excludeTerms).distinct
+      val dfMap = globalDfMap(spark, idx, q.lang, allTerms.toSeq)
+      // ctx.mode, not q.mode: context() forces "all" for phrase queries, so
+      // a phrase issued with mode="any" must take this exit too (the kernels
+      // would return nothing after wasted reads otherwise)
+      if (ctx.mode == "all" && ctx.terms.exists(t => dfMap.getOrElse(t._1, 0L) == 0L)) None
+      else Some(Prepared(ctx, allTerms, dfMap,
+        QueryCore.termInfo(ctx, t => dfMap.getOrElse(t, 0L))))
+    }
+
   def search(spark: SparkSession, idx: IndexHandle, q: QuerySpec): SearchResult = {
-    val n = idx.numDocs(q.lang)
-    val avgdl = idx.avgdl(q.lang)
-    val ctxOpt = QueryCore.context(q, n, avgdl)
-    if (ctxOpt.isEmpty)
+    val prep = prepare(spark, idx, q)
+    if (prep.isEmpty)
       return SearchResult(Nil, 0L, "eq", suggest(spark, idx, q.lang, q.query))
-    val ctx = ctxOpt.get
-    val terms = ctx.terms
-
-    val allTerms = (terms.map(_._1) ++ ctx.excludeTerms).distinct
+    val p @ Prepared(ctx, allTerms, dfMap, info) = prep.get
     val hasFilters = ctx.facetSel.nonEmpty || ctx.dateSel.nonEmpty
-
-    // global df per term (for idf + execution-path choice) — from the
-    // handle's term-df cache; only first-seen terms pay a probe
-    import spark.implicits._
-    val dfMap: Map[String, Long] = globalDfMap(spark, idx, q.lang, allTerms)
-    // ctx.mode, not q.mode: context() forces "all" for phrase queries, so a
-    // phrase issued with mode="any" must still take this early exit (the
-    // kernels would return nothing after 2-3 wasted Spark jobs otherwise) —
-    // same field matchedDocsDf gates on
-    if (ctx.mode == "all" && terms.exists(t => dfMap.getOrElse(t._1, 0L) == 0L))
-      return SearchResult(Nil, 0L, "eq", suggest(spark, idx, q.lang, q.query))
-    val info = QueryCore.termInfo(ctx, t => dfMap.getOrElse(t, 0L))
 
     // path choice: total candidate volume ≈ Σ df over the query's terms
     // PLUS Σ df over the filter's facet rows — the driver path collects BOTH
@@ -221,24 +226,7 @@ object Bm25Query {
         postList.groupBy(_._1).iterator.flatMap { case (chunk, posts) =>
           QueryCore.segmentKernel(ctx, info, posts, facetByChunk.getOrElse(chunk, Array.empty))
         }.toArray
-      } else {
-        val posCol = if (ctx.phrase) col("posBlob") else lit(null).cast("binary").as("posBlob")
-        val rows = spark.read.parquet(idx.segmentsPath)
-          .where(col("lang") === q.lang && col("term").isin(allTerms.toSeq: _*))
-          .select(col("chunk"), col("term"), col("df"), col("blob"), posCol)
-        val facetRows: DataFrame = facetReadDf(spark, idx, q.lang, ctx)
-        val postingRows = rows.as[QueryCore.PostRow]
-        val facetRowsDs =
-          if (facetRows == null) spark.emptyDataset[QueryCore.FacetRow]
-          else facetRows.as[QueryCore.FacetRow]
-        postingRows
-          .groupByKey(_._1)
-          .cogroup(facetRowsDs.groupByKey(_._1)) { (_: Int, posts, facets) =>
-            QueryCore.segmentKernel(ctx, info, posts.toArray,
-              QueryCore.decodeFacets(facets.toSeq))
-          }
-          .collect()
-      }
+      } else segmentResultsDs(spark, idx, q.lang, p).collect()
 
     val (page, total, relation) = QueryCore.merge(q, segResults)
 
@@ -257,7 +245,7 @@ object Bm25Query {
             .map { case (id, url, _, text) =>
               id -> (if (url == null) "" else url, if (text == null) "" else text)
             }.toMap
-        val qset = terms.map(_._1).toSet
+        val qset = ctx.terms.map(_._1).toSet
         page.toSeq.map { sd =>
           // a winner can be missing from the docstore when a mutation
           // overwrites the chunk between the kernel pass and this fetch —
@@ -272,90 +260,43 @@ object Bm25Query {
     SearchResult(hits, total, relation, sugg)
   }
 
-  /** Index-backed DISTRIBUTED scoring: every (chunk, term) posting row is
-    * decoded inside an executor task into (docId, per-term BM25 contribution);
-    * one groupBy(docId) shuffle sums them. Returns ALL matching docs as a
-    * DataFrame (docId, score) — the scale path for full-result consumers
-    * (hybrid fusion, analytics joins) where `search` returns only a page.
-    * Nothing but the per-term df map (|query terms| rows) ever reaches the
-    * driver. Supports mode/exclude/meta/year filters; phrase verification
-    * needs positions → use [[matchedDocsDf]].
+  /** THE executor plan, shared by [[search]] above [[MaxDriverPostings]]
+    * and [[matchedDocsDf]]: the query's segment rows (`posBlob` only for
+    * phrase queries) and its filter's facet rows, cogrouped by chunk, each
+    * chunk running [[QueryCore.segmentKernel]] in one executor task. Chunks
+    * partition the docs, so one chunk's result is final for its docs.
     */
-  def scoreDf(spark: SparkSession, idx: IndexHandle, q: QuerySpec): DataFrame = {
+  private def segmentResultsDs(spark: SparkSession, idx: IndexHandle, lang: String,
+      p: Prepared): Dataset[SegmentResult] = {
     import spark.implicits._
-    require(!q.phrase, "scoreDf has no positions; use matchedDocsDf for phrase")
-    val n = idx.numDocs(q.lang)
-    val avgdl = idx.avgdl(q.lang)
-    val terms = queryTerms(q).map(_._1)
-    if (terms.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-    val rows = spark.read.parquet(idx.segmentsPath)
-      .where(col("lang") === q.lang && col("term").isin(terms.toSeq: _*))
-      .select(col("term"), col("df"), col("blob"))
-    val dfMap = globalDfMap(spark, idx, q.lang, terms.toSeq)
-    val idfB = spark.sparkContext.broadcast(
-      terms.map(t => t -> Bm25.idf(n, dfMap.getOrElse(t, 0L))).toMap)
-    val perTerm = rows.select(col("term"), col("blob"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (term, blob) =>
-        val idfV = idfB.value(term)
-        val it = new PostingListReader(blob, null).iterator()
-        it.start()
-        new Iterator[(Long, Double)] {
-          def hasNext: Boolean = !it.exhausted
-          def next(): (Long, Double) = {
-            val r = (it.docId, Bm25.score(it.tf, it.dl, avgdl, idfV))
-            it.next()
-            r
-          }
-        }
+    val ctx = p.ctx
+    val info = p.info
+    val posCol = if (ctx.phrase) col("posBlob") else lit(null).cast("binary").as("posBlob")
+    spark.read.parquet(idx.segmentsPath)
+      .where(col("lang") === lang && col("term").isin(p.allTerms.toSeq: _*))
+      .select(col("chunk"), col("term"), col("df"), col("blob"), posCol)
+      .as[QueryCore.PostRow]
+      .groupByKey(_._1)
+      .cogroup(facetReadDs(spark, idx, lang, ctx).groupByKey(_._1)) { (_: Int, posts, facets) =>
+        QueryCore.segmentKernel(ctx, info, posts.toArray, QueryCore.decodeFacets(facets.toSeq))
       }
-      .toDF("docId", "s")
-    val agg = perTerm.groupBy("docId")
-      .agg(sum("s").as("score"), count(lit(1)).as("matched"))
-    val afterMode =
-      if (q.mode == "all") agg.where(col("matched") === terms.length)
-      else agg
-    val afterExclude = {
-      val exTerms = q.excludeWords.flatMap(w => Analyzer.terms(w, q.lang)).distinct
-      if (exTerms.isEmpty) afterMode
-      else afterMode.join(postingDocIds(spark, idx, q.lang, exTerms),
-        Seq("docId"), "left_anti")
-    }
-    // the SHARED filter derivation (year-ambiguity guard, yearRange
-    // expansion, date-bound mapping) — one definition with the paged path
-    val (facetSel, dateSel) = QueryCore.filterSelections(q)
-    val afterFacets =
-      if (facetSel.isEmpty) afterExclude
-      else afterExclude.join(facetDocIds(spark, idx, q.lang, facetSel), Seq("docId"))
-    val afterDate = dateSel match {
-      case None => afterFacets
-      case Some(sel) => afterFacets.join(dateDocIds(spark, idx, q.lang, sel), Seq("docId"))
-    }
-    afterDate.select(col("docId"), col("score"))
   }
 
-  /** DocIds passing the Q5 date OR-filter, fully distributed (chunk doc sets
-    * are disjoint, so the set algebra is global): (date ∈ range) ∪
-    * (no date ∩ series_start ≤ end ∩ series_end ≥ start).
+  /** ALL matches of a query (mode, phrase, excludes, meta/year and date
+    * filters) as a (docId, score) DataFrame — the full-result path for
+    * consumers such as hybrid fusion and phrase scans, where [[search]]
+    * returns one page. It is [[segmentResultsDs]] with an unbounded heap:
+    * each chunk's kernel keeps all of its matches, so one task holds up to a
+    * chunk's doc count of ScoredDocs (mode "any" included); nothing is
+    * shuffled per posting and nothing funnels through the driver.
     */
-  private def dateDocIds(spark: SparkSession, idx: IndexHandle, lang: String,
-      sel: (Option[String], Option[String])): DataFrame = {
+  def matchedDocsDf(spark: SparkSession, idx: IndexHandle, q: QuerySpec): DataFrame = {
     import spark.implicits._
-    val base = spark.read.parquet(idx.facetsPath).where(col("lang") === lang)
-    def ids(d: DataFrame): DataFrame = d
-      .select(col("df"), col("docIds")).as[(Long, Array[Byte])]
-      .flatMap { case (df, blob) => SortedIds.decode(blob, df.toInt) }
-      .toDF("docId")
-    // the same ONE rule definition as every other read layer; this path
-    // renders the kernel's label algebra as distributed set ops — DateIn
-    // unioned, every OTHER rule present intersected onto NoDate
-    val byLabel = QueryCore.dateRules(sel)
-      .map(rule => rule.label -> ids(base.where(dateRuleCond(rule)))).toMap
-    val inRange = byLabel(QueryCore.DateInKey)
-    val noDate = (byLabel - QueryCore.DateInKey - QueryCore.NoDateKey).values
-      .foldLeft(byLabel(QueryCore.NoDateKey))((acc, d) => acc.join(d, Seq("docId")))
-    inRange.union(noDate).distinct()
+    prepare(spark, idx, q.copy(pageSize = Int.MaxValue - 1, from = 0,
+      trackTotalHits = Long.MaxValue)) match {
+      case None => spark.emptyDataset[ScoredDoc].toDF()
+      case Some(p) => segmentResultsDs(spark, idx, q.lang, p).flatMap(_.top.iterator).toDF()
+    }
   }
 
   /** Σdf over the facet rows a query's filter selection reads — the volume
@@ -379,7 +320,7 @@ object Bm25Query {
     }
   }
 
-  /** Driver-read analog of [[facetReadDf]]: ONE pass over the pruned facet
+  /** Driver-read analog of [[facetReadDs]]: ONE pass over the pruned facet
     * files, then the same per-branch labeling the Spark union produced — a
     * facetSel match keeps its physical key, a date-rule match is relabeled
     * to the rule's synthetic key, and a row matching both branches is
@@ -411,12 +352,14 @@ object Bm25Query {
     * RELABELED to the [[QueryCore.DateKeys]] synthetic keys (value predicates
     * — range on `date`, equality on `has_date`, bound checks on the series
     * dates — are pushed into the parquet scan; the kernel then only unions /
-    * intersects pre-selected docId lists). Returns null when the query has no
-    * filters at all.
+    * intersects pre-selected docId lists). Empty when the query has no
+    * filters.
     */
-  private[query] def facetReadDf(spark: SparkSession, idx: IndexHandle,
-      lang: String, ctx: QueryCore.Ctx): DataFrame = {
-    if (ctx.facetSel.isEmpty && ctx.dateSel.isEmpty) return null
+  private def facetReadDs(spark: SparkSession, idx: IndexHandle,
+      lang: String, ctx: QueryCore.Ctx): Dataset[QueryCore.FacetRow] = {
+    import spark.implicits._
+    if (ctx.facetSel.isEmpty && ctx.dateSel.isEmpty)
+      return spark.emptyDataset[QueryCore.FacetRow]
     val base = spark.read.parquet(idx.facetsPath).where(col("lang") === lang)
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     if (ctx.facetSel.nonEmpty) {
@@ -430,7 +373,7 @@ object Bm25Query {
         base.where(dateRuleCond(rule))
           .select(col("chunk"), lit(rule.label).as("key"), col("df"), col("docIds")))
     }
-    parts.reduce(_ union _)
+    parts.reduce(_ union _).as[QueryCore.FacetRow]
   }
 
   /** One [[QueryCore.DateRule]] as a pushdown-able Column predicate — the
@@ -443,81 +386,6 @@ object Bm25Query {
     rule.lo.foreach(l => cond = cond && col("value") >= l)
     rule.hi.foreach(h => cond = cond && col("value") <= h)
     cond
-  }
-
-  /** DocIds carrying any of `terms`, decoded in executors. */
-  private def postingDocIds(spark: SparkSession, idx: IndexHandle, lang: String,
-      terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.parquet(idx.segmentsPath)
-      .where(col("lang") === lang && col("term").isin(terms: _*))
-      .select(col("blob")).as[Array[Byte]]
-      .flatMap(blob => PostingListReader.docIds(blob))
-      .distinct()
-      .toDF("docId")
-  }
-
-  /** DocIds passing ALL facet selections (values within a key OR'd, keys
-    * AND'd) — decoded per (chunk, key, value) row in executors, intersected
-    * with a count == nKeys aggregation (chunk doc sets are disjoint, and a
-    * docId appears at most once per key across its chunk's values).
-    */
-  private def facetDocIds(spark: SparkSession, idx: IndexHandle, lang: String,
-      facetSel: Seq[(String, Seq[String])]): DataFrame = {
-    import spark.implicits._
-    val nKeys = facetSel.map(_._1).distinct.size
-    val cond = facetSel.map { case (k, vs) =>
-      col("key") === k && col("value").isin(vs: _*)
-    }.reduce(_ || _)
-    spark.read.parquet(idx.facetsPath)
-      .where(col("lang") === lang && cond)
-      .select(col("key"), col("df"), col("docIds"))
-      .as[(String, Long, Array[Byte])]
-      .flatMap { case (key, df, blob) =>
-        SortedIds.decode(blob, df.toInt).iterator.map(id => (id, key))
-      }
-      .toDF("docId", "key")
-      .groupBy("docId")
-      .agg(countDistinct("key").as("nk"))
-      .where(col("nk") === nKeys)
-      .select("docId")
-  }
-
-  /** ALL kernel matches (AND/phrase/exclude/filters) as a Dataset — the
-    * per-segment kernels run in executor tasks with an unbounded heap, so the
-    * full match set never funnels through the driver. Used by full-result
-    * consumers of position-dependent queries (phrase scans).
-    */
-  def matchedDocsDf(spark: SparkSession, idx: IndexHandle, q: QuerySpec): DataFrame = {
-    import spark.implicits._
-    val qAll = q.copy(pageSize = Int.MaxValue - 1, from = 0,
-      trackTotalHits = Long.MaxValue)
-    val n = idx.numDocs(qAll.lang)
-    val avgdl = idx.avgdl(qAll.lang)
-    val ctxOpt = QueryCore.context(qAll, n, avgdl)
-    if (ctxOpt.isEmpty) return spark.emptyDataset[ScoredDoc].toDF()
-    val ctx = ctxOpt.get
-    val allTerms = (ctx.terms.map(_._1) ++ ctx.excludeTerms).distinct
-    val posCol = if (ctx.phrase) col("posBlob") else lit(null).cast("binary").as("posBlob")
-    val rows = spark.read.parquet(idx.segmentsPath)
-      .where(col("lang") === qAll.lang && col("term").isin(allTerms.toSeq: _*))
-      .select(col("chunk"), col("term"), col("df"), col("blob"), posCol)
-    val dfMap: Map[String, Long] = globalDfMap(spark, idx, qAll.lang, allTerms)
-    if (ctx.mode == "all" && ctx.terms.exists(t => dfMap.getOrElse(t._1, 0L) == 0L))
-      return spark.emptyDataset[ScoredDoc].toDF()
-    val info = QueryCore.termInfo(ctx, t => dfMap.getOrElse(t, 0L))
-    val facetRead = facetReadDf(spark, idx, qAll.lang, ctx)
-    val facetRowsDs =
-      if (facetRead == null) spark.emptyDataset[QueryCore.FacetRow]
-      else facetRead.as[QueryCore.FacetRow]
-    rows.as[QueryCore.PostRow]
-      .groupByKey(_._1)
-      .cogroup(facetRowsDs.groupByKey(_._1)) { (_: Int, posts, facets) =>
-        QueryCore.segmentKernel(ctx, info, posts.toArray,
-          QueryCore.decodeFacets(facets.toSeq))
-          .flatMap(_.top.iterator)
-      }
-      .toDF()
   }
 
   /** Whole-field highlighter: wrap every query-term occurrence in <em> tags

@@ -55,8 +55,9 @@ object QueryCore {
   }
 
   /** THE Q5 date-filter read semantics — the single source every layer
-    * derives from (resident [[InMemoryIndex.partialFor]], Spark
-    * [[Bm25Query.facetReadDf]] and [[Bm25Query.dateDocIds]]); the kernel's
+    * derives from (resident [[InMemoryIndex.partialFor]], the driver read
+    * [[Bm25Query.driverFacetRows]] and the Spark read
+    * [[Bm25Query.facetReadDs]]); the kernel's
     * consumption of the labels lives in [[segmentKernel]]. A hand-copied
     * predicate in any layer would silently desync serving from the Spark
     * paths on the next semantics change. Rules, given search range
@@ -151,13 +152,10 @@ object QueryCore {
       mode, q.phrase, q.from + q.pageSize, q.trackTotalHits, dateSel))
   }
 
-  /** The ONE definition of a query's filter selections, shared by the paged
-    * kernel path ([[context]]) and the analytics/fusion path
-    * ([[Bm25Query.scoreDf]]): the year-ambiguity guard, the yearRange →
-    * "year" facet-value expansion, and the dateRange → physical year-bound
-    * mapping. A change to any of these made here reaches every path —
-    * hand-copies would desync filter semantics between the paged and
-    * DataFrame engines.
+  /** The ONE definition of a query's filter selections, called by
+    * [[context]] and so by every kernel path (driver, executor, resident):
+    * the year-ambiguity guard, the yearRange → "year" facet-value
+    * expansion, and the dateRange → physical year-bound mapping.
     */
   def filterSelections(q: QuerySpec)
       : (Seq[(String, Seq[String])], Option[(Option[String], Option[String])]) = {

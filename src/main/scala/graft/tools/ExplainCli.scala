@@ -47,9 +47,10 @@ object ExplainCli {
     Bm25Query.suggestPlan(spark, idx, "hi", Seq("abc", "def"),
       size = 5, minScore = 0.6).explain("formatted")
 
-    println("=== index-backed distributed FULL scoring (scoreDf — hybrid_rank's " +
-      "lexical side; expect scan → flatMap decode → one hash aggregate, no collect) ===")
-    Bm25Query.scoreDf(spark, idx, QuerySpec("hi", "a b")).explain("formatted")
+    println("=== index-backed distributed FULL scoring (matchedDocsDf — hybrid_rank's " +
+      "lexical side; expect pruned segments scan → cogroup by chunk → per-chunk " +
+      "kernel, no aggregate, no join, no collect) ===")
+    Bm25Query.matchedDocsDf(spark, idx, QuerySpec("hi", "a b", mode = "any")).explain("formatted")
 
     println("=== cross-doc line dedup (expect explode → partial+final hash agg on " +
       "the 64-bit norm_hash → equi-join back → one doc_id agg; no collect, no " +

@@ -587,31 +587,53 @@ class RankParitySpec extends AnyFunSuite {
     assert(t2 == 1200L && r2 == "eq")
   }
 
-  test("scoreDf: index-backed distributed full scoring == naive oracle") {
-    def check(q: QuerySpec): Unit = {
-      val got = Bm25Query.scoreDf(spark, idx, q).collect()
+  /** [[Bm25Query.matchedDocsDf]]'s full (docId, score) set == the naive
+    * oracle's, scores within 1e-9; returns the operators of its executed
+    * plan (the AQE final plan, stages unwrapped).
+    */
+  private def assertFullParity(q: QuerySpec, expectNonEmpty: Boolean = true)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val df = Bm25Query.matchedDocsDf(spark, idx, q)
+    val got = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val exp =
+      if (Bm25Query.queryTerms(q).isEmpty) Map.empty[Long, Double]
+      else NaiveBm25.scoreAll(spark, docstore, q).select("docId", "score").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val exp = NaiveBm25.scoreAll(spark, docstore, q).select("docId", "score").collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got.keySet == exp.keySet, s"$q: got ${got.size} exp ${exp.size}")
-      got.foreach { case (id, s) =>
-        assert(math.abs(s - exp(id)) <= 1e-9 * math.max(1.0, math.abs(exp(id))), s"$q doc $id")
-      }
-      assert(got.nonEmpty, s"empty fixture for $q")
+    assert(got.keySet == exp.keySet, s"$q: got ${got.size} exp ${exp.size}")
+    got.foreach { case (id, s) =>
+      assert(math.abs(s - exp(id)) <= 1e-9 * math.max(1.0, math.abs(exp(id))), s"$q doc $id")
     }
-    check(QuerySpec("hi", hiPhrase))
-    check(QuerySpec("hi", hiPhrase, mode = "any"))
-    check(QuerySpec("hi", hiPhrase, excludeWords = Seq(Webtext.word("hi", 30))))
-    check(QuerySpec("hi", hiPhrase,
-      metaFilters = Map("category" -> Seq("Granth")), yearRange = Some((2020, 2020))))
-    check(QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2019)))))
+    if (expectNonEmpty) assert(got.nonEmpty, s"empty fixture for $q")
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case st: QueryStageExec => st +: ops(st.plan)
+      case other => other +: other.children.flatMap(ops)
+    }
+    ops(df.queryExecution.executedPlan)
   }
 
-  test("matchedDocsDf: distributed full phrase-match set == naive oracle") {
-    val q = QuerySpec("hi", hiPhrase, phrase = true)
-    val got = Bm25Query.matchedDocsDf(spark, idx, q).collect().map(_.getLong(0)).toSet
-    val exp = NaiveBm25.scoreAll(spark, docstore, q).select("docId").collect().map(_.getLong(0)).toSet
-    assert(got == exp && got.nonEmpty)
+  test("matchedDocsDf: six shapes == naive oracle; no join, no aggregate") {
+    import org.apache.spark.sql.execution.CoGroupExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    Seq(
+      QuerySpec("hi", hiPhrase),
+      QuerySpec("hi", hiPhrase, mode = "any"),
+      QuerySpec("hi", hiPhrase, excludeWords = Seq(Webtext.word("hi", 30))),
+      QuerySpec("hi", hiPhrase,
+        metaFilters = Map("category" -> Seq("Granth")), yearRange = Some((2020, 2020))),
+      QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2019)))),
+      QuerySpec("hi", hiPhrase, phrase = true)
+    ).foreach { q =>
+      val plan = assertFullParity(q)
+      // one per-chunk kernel plan: the cogroup is there, and no shuffle
+      // aggregates or joins postings per docId
+      assert(plan.exists(_.isInstanceOf[CoGroupExec]), s"$q: no cogroup in\n${plan.head}")
+      val bad = plan.filter(o => o.isInstanceOf[BaseJoinExec] || o.isInstanceOf[BaseAggregateExec])
+      assert(bad.isEmpty, s"$q: ${bad.map(_.nodeName)} in\n${plan.head}")
+    }
   }
 
   test("randomized parity sweep: 25 seeded query shapes — oracle == Spark == resident == fleet") {
@@ -621,7 +643,8 @@ class RankParitySpec extends AnyFunSuite {
     // checked FOUR ways: naive full-scan oracle, the distributed Spark path
     // (assertParity), the resident single node, and the doc-sharded
     // scatter-gather fleet — so a divergence in any serving topology on any
-    // shape class fails here, not in production.
+    // shape class fails here, not in production. matchedDocsDf's full match
+    // set is checked against the oracle's as well.
     val resident = InMemoryIndex.load(spark, idx)
     val fleet = new ShardedServe.Fleet(
       ShardedServe.chunkAssignment(numChunks = 2, nNodes = 2).map(cs =>
@@ -645,6 +668,8 @@ class RankParitySpec extends AnyFunSuite {
         excludeWords = ex, metaFilters = mf, yearRange = yr, dateRange = dr,
         trackTotalHits = cap, from = from, pageSize = 20)
       assertParity(q, expectNonEmpty = false)
+      // the full-result path (executor kernel plan, unbounded heap) too
+      assertFullParity(q, expectNonEmpty = false)
       val sparkRes = Bm25Query.search(spark, idx, q)
       Seq("resident" -> resident.search(q), "fleet" -> fleet.search(q)).foreach {
         case (label, served) =>
