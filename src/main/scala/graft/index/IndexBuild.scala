@@ -88,16 +88,40 @@ object IndexBuild extends Serializable {
   @volatile var TargetFileBytes: Long =
     sys.env.getOrElse("GRAFT_TARGET_FILE_BYTES", (64L * 1024 * 1024).toString).toLong
 
-  /** parquet.page.row.count.limit for the index tables. The default (20k
-    * rows/page) lets a whole file's key column fit ONE page, which makes the
-    * page-level column index useless: a point read's row range then spans
-    * the file and the reader decompresses every page of every projected
-    * column (measured: a 1-docId payload fetch decompressed the full 23 MB
-    * docstore file). At 1024 rows/page a point read decompresses ~one page
-    * per column; the extra page headers/index entries are noise next to the
-    * data.
+  /** parquet.page.row.count.limit for the segments, termdict and facets
+    * tables, and the ceiling of the docstore's byte-derived limit
+    * ([[docPageRows]]). The default (20k rows/page) lets a whole file's key
+    * column fit ONE page, which makes the page-level column index useless: a
+    * point read's row range then spans the file and the reader decompresses
+    * every page of every projected column (measured: a 1-docId payload
+    * fetch decompressed the full 23 MB docstore file).
+    *
+    * Segments and termdict keep 1024 rows: their rows are small next to a
+    * docstore row, and narrower pages made reads slower — with 64-row
+    * segments pages a `readSegmentRows` went from 6.5 to 7.7–8.0 ms (4000
+    * docs, 4-core host), the extra page headers and column-index entries
+    * costing more than the rows they spared.
     */
   val PageRowLimit = 1024
+
+  /** Raw text bytes per docstore page that [[docPageRows]] aims at. */
+  private val DocPageTextBytes = 128L * 1024
+
+  /** The docstore's parquet.page.row.count.limit, sized from the chunk's
+    * measured mean text bytes per doc so one page holds ~[[DocPageTextBytes]]
+    * of text, clamped to [1, [[PageRowLimit]]]. It is a ROW limit, not
+    * parquet.page.size: the docId column's pages set the row ranges the
+    * column index hands to the `text` column, so they must be as narrow as
+    * the text pages. At 1024 rows a 10-hit payload read decompressed the
+    * whole docstore of the 4000-doc benchmark index (4.6 MB); at the ~45
+    * rows derived there the `disk` workload's median payload read fell from
+    * 17.3 to 2.7 ms, for 4.60 → 4.69 MB of docstore (traced, seed 301,
+    * 4-core host).
+    */
+  private[graft] def docPageRows(nDocs: Long, textBytes: Long): Int =
+    if (nDocs <= 0 || textBytes <= 0) PageRowLimit
+    else math.max(1L, math.min(PageRowLimit.toLong,
+      DocPageTextBytes * nDocs / textBytes)).toInt
 
   /** Head-term detection samples 1 in N docs (deterministic docId hash).
     * Safe because salting is output-invariant (see the head df agg note in
@@ -493,6 +517,9 @@ object IndexBuild extends Serializable {
         val docFiles = filesFor(textBytes)
 
         // ---- docstore ----
+        // pages of ~128 KB of text, so a payload read decodes ~one page per
+        // hit (see docPageRows)
+        val docRows = docPageRows(nDocs, textBytes)
         phase(s"docstore+tokenize c$k") {
           tokenized
             .select($"docId", $"url", $"warc_ts", $"text", $"lang", $"meta", $"dl",
@@ -508,7 +535,11 @@ object IndexBuild extends Serializable {
             // tokenizer (see the hash repartition note there).
             .repartitionByRange(docFiles, $"docId")
             .sortWithinPartitions($"docId")
-            .write.option("parquet.page.row.count.limit", PageRowLimit.toString)
+            .write.option("parquet.page.row.count.limit", docRows.toString)
+            // parquet first checks a row group's page at row 100 (its
+            // default minimum), so below 100 rows the first page would
+            // overshoot the limit without this
+            .option("parquet.page.size.row.check.min", math.min(docRows, 100).toString)
             .mode(SaveMode.Overwrite).parquet(s"$outDir/docstore/chunk=$k")
         }
 
@@ -654,6 +685,14 @@ object IndexBuild extends Serializable {
             .coalesce(segFiles)
             .sortWithinPartitions($"lang", $"term") // parquet row-group stats → term pushdown
             .write.option("parquet.page.row.count.limit", PageRowLimit.toString)
+            // no dictionary pages on the posting blobs: no point read needs
+            // them, yet every segments read decoded the ~850 KB dictionary
+            // page of each (snappy + PlainBinaryDictionary, the largest share
+            // of a segments read when stack-sampled). Off, the `disk`
+            // workload's median segments read went 5.6 → 2.9 ms for +137 KB
+            // of segments (traced, seed 301, 4-core host)
+            .option("parquet.enable.dictionary#blob", "false")
+            .option("parquet.enable.dictionary#posBlob", "false")
             .mode(SaveMode.Overwrite).parquet(s"$outDir/segments/chunk=$k")
         }
         // the cached runs are dead once the segments are on disk — release

@@ -43,7 +43,13 @@ import org.apache.parquet.schema.MessageType
   * vectored/random read policy, and on the benchmark's local index (4-core
   * host) it cut disk-workload query throughput from 26.1 to 14.9 req/s (6
   * interleaved pairs), while `fs.open` kept it at parity (28.1 → 31.8
-  * req/s median, 10 pairs).
+  * req/s median, 10 pairs). Column chunks are read synchronously
+  * (`parquet.hadoop.vectored.io.enabled=false`): a vectored read hands every
+  * column range to an asynchronous file-channel pool and waits on it, which
+  * cost a point read 0.4–0.6 ms on the same host (median reads of the
+  * traced `disk` workload, seed 301: segments 2.9 → 2.6 ms, termdict
+  * 2.4 → 1.9 ms, payloads 2.5 → 1.8 ms). A point read fetches a few small
+  * ranges, so there is nothing for the pool to overlap.
   *
   * No caching anywhere: every call re-lists and re-reads the files, exactly
   * like a Spark scan (the serving layer's own caches — df cache, payload
@@ -148,6 +154,7 @@ object LocalParquet {
     // The plain (non-Hadoop) configuration skips all of it; the FileSystem
     // comes from the session's already-parsed Hadoop conf (TableIO.conf).
     val pconf = new org.apache.parquet.conf.PlainParquetConfiguration()
+    pconf.set("parquet.hadoop.vectored.io.enabled", "false") // see the header
     // projection derived ONCE per call from the first file's own schema
     // (exact repetition + logical types, so checkContains can never reject
     // it) — all files of a table dir share the write job's schema, and a
@@ -383,7 +390,9 @@ object LocalParquet {
 
   /** Docstore point-read: (docId, url, lang, text) for an id set. Row-group
     * stats prune to ~one row group per file (docId-sorted docstore), the
-    * same pruning the Spark isin scan relied on.
+    * same pruning the Spark isin scan relied on; the column index then
+    * prunes to the pages holding the ids, each sized to ~128 KB of text
+    * ([[IndexBuild.docPageRows]]).
     */
   def readDocPayloads(docstorePath: String, ids: Seq[Long])
       : Seq[(Long, String, String, String)] = {

@@ -116,8 +116,9 @@ object IndexHandle {
   * [[MaxDriverPostings]] reads its rows on the driver through
   * [[graft.index.LocalParquet]] (df lookups, postings, facets, payloads and
   * suggestions: no Spark job, on any FileSystem scheme); a larger one runs
-  * the segment kernels IN EXECUTOR TASKS over a cogroup of the posting and
-  * facet rows, and only O(#segments × (from+k)) ScoredDocs reach the driver.
+  * the segment kernels IN EXECUTOR TASKS over the posting rows grouped by
+  * chunk (cogrouped with the facet rows when the query filters), and only
+  * O(#segments × (from+k)) ScoredDocs reach the driver.
   */
 object Bm25Query {
 
@@ -203,7 +204,7 @@ object Bm25Query {
     // facet-dominated: gating on postings alone would pull corpus-scale
     // docId lists onto the driver. Small → read the blobs and run kernels
     // ON THE DRIVER (no Spark job, Lucene-like latency). Large → per-segment
-    // kernels in executor tasks via cogroup (nothing ever concentrates on
+    // kernels in executor tasks (nothing ever concentrates on
     // the driver). The facet volume is one pruned df-column probe (no blobs
     // read), cached per (lang, selection) on the handle like term dfs.
     val dfSum = dfMap.values.sum
@@ -262,9 +263,12 @@ object Bm25Query {
 
   /** THE executor plan, shared by [[search]] above [[MaxDriverPostings]]
     * and [[matchedDocsDf]]: the query's segment rows (`posBlob` only for
-    * phrase queries) and its filter's facet rows, cogrouped by chunk, each
-    * chunk running [[QueryCore.segmentKernel]] in one executor task. Chunks
-    * partition the docs, so one chunk's result is final for its docs.
+    * phrase queries) grouped by chunk, each chunk running
+    * [[QueryCore.segmentKernel]] in one executor task. A filtered query
+    * cogroups its filter's facet rows in by chunk; an unfiltered one groups
+    * the segment rows alone, one exchange (a cogroup with an empty facet side
+    * still planned an exchange and a sort of it). Chunks partition the docs,
+    * so one chunk's result is final for its docs.
     */
   private def segmentResultsDs(spark: SparkSession, idx: IndexHandle, lang: String,
       p: Prepared): Dataset[SegmentResult] = {
@@ -272,13 +276,18 @@ object Bm25Query {
     val ctx = p.ctx
     val info = p.info
     val posCol = if (ctx.phrase) col("posBlob") else lit(null).cast("binary").as("posBlob")
-    spark.read.parquet(idx.segmentsPath)
+    val posts = spark.read.parquet(idx.segmentsPath)
       .where(col("lang") === lang && col("term").isin(p.allTerms.toSeq: _*))
       .select(col("chunk"), col("term"), col("df"), col("blob"), posCol)
       .as[QueryCore.PostRow]
       .groupByKey(_._1)
-      .cogroup(facetReadDs(spark, idx, lang, ctx).groupByKey(_._1)) { (_: Int, posts, facets) =>
-        QueryCore.segmentKernel(ctx, info, posts.toArray, QueryCore.decodeFacets(facets.toSeq))
+    if (ctx.facetSel.isEmpty && ctx.dateSel.isEmpty)
+      posts.flatMapGroups { (_: Int, rows) =>
+        QueryCore.segmentKernel(ctx, info, rows.toArray, Array.empty)
+      }
+    else
+      posts.cogroup(facetReadDs(spark, idx, lang, ctx).groupByKey(_._1)) { (_: Int, rows, facets) =>
+        QueryCore.segmentKernel(ctx, info, rows.toArray, QueryCore.decodeFacets(facets.toSeq))
       }
   }
 
@@ -352,14 +361,12 @@ object Bm25Query {
     * RELABELED to the [[QueryCore.DateKeys]] synthetic keys (value predicates
     * — range on `date`, equality on `has_date`, bound checks on the series
     * dates — are pushed into the parquet scan; the kernel then only unions /
-    * intersects pre-selected docId lists). Empty when the query has no
-    * filters.
+    * intersects pre-selected docId lists). Only a query with filters reads
+    * them.
     */
   private def facetReadDs(spark: SparkSession, idx: IndexHandle,
       lang: String, ctx: QueryCore.Ctx): Dataset[QueryCore.FacetRow] = {
     import spark.implicits._
-    if (ctx.facetSel.isEmpty && ctx.dateSel.isEmpty)
-      return spark.emptyDataset[QueryCore.FacetRow]
     val base = spark.read.parquet(idx.facetsPath).where(col("lang") === lang)
     val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     if (ctx.facetSel.nonEmpty) {

@@ -48,7 +48,7 @@ object ExplainCli {
       size = 5, minScore = 0.6).explain("formatted")
 
     println("=== index-backed distributed FULL scoring (matchedDocsDf — hybrid_rank's " +
-      "lexical side; expect pruned segments scan → cogroup by chunk → per-chunk " +
+      "lexical side; expect pruned segments scan → one exchange, grouped by chunk → per-chunk " +
       "kernel, no aggregate, no join, no collect) ===")
     Bm25Query.matchedDocsDf(spark, idx, QuerySpec("hi", "a b", mode = "any")).explain("formatted")
 

@@ -28,6 +28,15 @@ class LocalParquetSpec extends AnyFunSuite {
   private def forms: Seq[String] = { idx; Seq(dir, s"file://$dir", GraftTestFs.uri(dir)) }
   private def table(form: String, path: String): String = form + path.stripPrefix(dir)
 
+  /** A fresh copy of the fixture index at `to`, for a test that changes it. */
+  private def copyIndex(to: java.io.File): Unit = {
+    if (to.exists()) scala.reflect.io.Directory(to).deleteRecursively()
+    def cp(f: java.io.File, t: java.io.File): Unit =
+      if (f.isDirectory) { t.mkdirs(); f.listFiles().foreach(k => cp(k, new java.io.File(t, k.getName))) }
+      else java.nio.file.Files.copy(f.toPath, t.toPath)
+    cp(new java.io.File(idx.dir), to)
+  }
+
   private def blobKey(b: Array[Byte]): String =
     if (b == null) "∅" else java.util.Arrays.hashCode(b).toString + ":" + b.length
 
@@ -217,12 +226,8 @@ class LocalParquetSpec extends AnyFunSuite {
   test("a missing table dir fails the read, naming the path; an empty chunk selection is no error") {
     val copy = "/tmp/graft-test-localpq-nodocstore"
     val c = new java.io.File(copy)
-    if (c.exists()) scala.reflect.io.Directory(c).deleteRecursively()
-    def cp(f: java.io.File, t: java.io.File): Unit =
-      if (f.isDirectory) { t.mkdirs(); f.listFiles().foreach(k => cp(k, new java.io.File(t, k.getName))) }
-      else java.nio.file.Files.copy(f.toPath, t.toPath)
     try {
-      cp(new java.io.File(idx.dir), c)
+      copyIndex(c)
       scala.reflect.io.Directory(new java.io.File(s"$copy/docstore")).deleteRecursively()
       val h = IndexHandle.load(copy)
       def failsNaming(body: => Any): Unit = {
@@ -233,6 +238,103 @@ class LocalParquetSpec extends AnyFunSuite {
       failsNaming(Bm25Query.search(spark, h, QuerySpec("hi", Webtext.GoldenPhrase("hi").mkString(" "))))
       failsNaming(InMemoryIndex.load(spark, h))
       assert(LocalParquet.readSegmentsFull(h.segmentsPath, None, Some(Set(99))).isEmpty)
+    } finally scala.reflect.io.Directory(c).deleteRecursively()
+  }
+
+  // ---- point-read layout budget: footers and page indexes only ----
+
+  /** Per row group of each data file under `table`: its chunk, row count
+    * and, per top-level column, (offset index, column index, chunk meta).
+    */
+  private def rowGroups(table: String): Seq[(Int, Long, Map[String, (
+      org.apache.parquet.internal.column.columnindex.OffsetIndex,
+      org.apache.parquet.internal.column.columnindex.ColumnIndex,
+      org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)])] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    LocalParquet.dataFiles(table).flatMap { case (st, chunk) =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+        (chunk.get, b.getRowCount, b.getColumns.asScala.map { c =>
+          c.getPath.toDotString -> ((r.readOffsetIndex(c), r.readColumnIndex(c), c))
+        }.toMap)
+      } finally r.close()
+    }
+  }
+
+  /** Row ranges [first, last] of each page of an offset index. */
+  private def pageRanges(oi: org.apache.parquet.internal.column.columnindex.OffsetIndex,
+      rows: Long): Seq[(Long, Long)] =
+    (0 until oi.getPageCount).map(i => (oi.getFirstRowIndex(i), oi.getLastRowIndex(i, rows)))
+
+  /** `text` pages a docId point read decodes, per chunk: the docId pages
+    * whose [min, max] holds a wanted id set the row ranges the column index
+    * hands to `text`, and every text page overlapping them is read.
+    */
+  private def textPagesRead(docstore: String, ids: Seq[Long]): Map[Int, Int] =
+    rowGroups(docstore).map { case (k, rows, cols) =>
+      val (idOi, idCi, _) = cols("docId")
+      def long(b: java.nio.ByteBuffer) = b.order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(0)
+      val (mins, maxs) = (idCi.getMinValues, idCi.getMaxValues)
+      val read = pageRanges(idOi, rows).zipWithIndex.collect {
+        case (range, i) if ids.exists(id => long(mins.get(i)) <= id && id <= long(maxs.get(i))) => range
+      }
+      k -> pageRanges(cols("text")._1, rows).count { case (a, b) =>
+        read.exists { case (lo, hi) => a <= hi && lo <= b }
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** The three point-read layout budgets, per chunk of the index at `d`. */
+  private def assertPointReadLayout(d: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val docstore = s"$d/docstore"
+    val groups = rowGroups(docstore)
+    groups.map(_._1).distinct.foreach { k =>
+      val (nDocs, textBytes) = spark.read.parquet(s"$docstore/chunk=$k")
+        .agg(count(lit(1)), sum(octet_length(col("text")))).as[(Long, Long)].head()
+      val limit = IndexBuild.docPageRows(nDocs, textBytes)
+      // the fixture's docs are large enough that pages are sized by bytes
+      assert(limit < IndexBuild.PageRowLimit, s"chunk $k: $nDocs docs, $textBytes B")
+      for ((gk, rows, cols) <- groups if gk == k; (name, (oi, _, _)) <- cols) {
+        val most = pageRanges(oi, rows).map { case (a, b) => b - a + 1 }.max
+        assert(most <= limit, s"chunk $k docstore.$name: a page of $most rows, limit $limit")
+      }
+    }
+    for ((k, _, cols) <- rowGroups(s"$d/segments"); name <- Seq("blob", "posBlob")) {
+      val meta = cols(name)._3
+      assert(!meta.hasDictionaryPage, s"chunk $k segments.$name has a dictionary page")
+      assert(!meta.getEncodings.asScala.exists(_.usesDictionary),
+        s"chunk $k segments.$name encodings ${meta.getEncodings}")
+    }
+    val all = spark.read.parquet(docstore).select("docId").as[Long].collect().sorted
+    Seq(1, 3, 10).foreach { n =>
+      val ids = (0 until n).map(i => all(i * all.length / n + all.length / (2 * n)))
+      assert(LocalParquet.readDocPayloads(docstore, ids).map(_._1).sorted == ids.sorted)
+      // per chunk: chunks interleave docIds (chunk = docId mod numChunks),
+      // so every chunk's docstore has a page whose [min, max] holds an id
+      val pages = textPagesRead(docstore, ids)
+      assert(pages.values.forall(_ <= n), s"$n ids read $pages text pages per chunk")
+    }
+  }
+
+  test("point-read layout: byte-sized docstore pages, no blob dictionaries, k ids read <= k text pages") {
+    assertPointReadLayout(idx.dir)
+    // a mutation rewrites its chunk in the same layout, its page rows
+    // derived from the rewritten chunk's own bytes (texts doubled here)
+    val copy = "/tmp/graft-test-localpq-layout"
+    val c = new java.io.File(copy)
+    try {
+      copyIndex(c)
+      val chunk1 = Webtext.synthesize(spark, 2000, partitions = 8).toDF()
+        .where(pmod(col("docId"), lit(2)) === 1)
+        .withColumn("text", concat(col("text"), lit(" "), col("text")))
+      val before = LocalParquet.dataFiles(s"$copy/docstore/chunk=1").map(_._1.getPath.getName)
+      IndexBuild.reindexDocs(spark, copy, chunk1)
+      val after = LocalParquet.dataFiles(s"$copy/docstore/chunk=1").map(_._1.getPath.getName)
+      assert(before.intersect(after).isEmpty, "chunk 1 was not rewritten")
+      assertPointReadLayout(copy)
     } finally scala.reflect.io.Directory(c).deleteRecursively()
   }
 }

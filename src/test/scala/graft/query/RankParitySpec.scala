@@ -617,20 +617,28 @@ class RankParitySpec extends AnyFunSuite {
   test("matchedDocsDf: six shapes == naive oracle; no join, no aggregate") {
     import org.apache.spark.sql.execution.CoGroupExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     Seq(
-      QuerySpec("hi", hiPhrase),
-      QuerySpec("hi", hiPhrase, mode = "any"),
-      QuerySpec("hi", hiPhrase, excludeWords = Seq(Webtext.word("hi", 30))),
+      QuerySpec("hi", hiPhrase) -> false,
+      QuerySpec("hi", hiPhrase, mode = "any") -> false,
+      QuerySpec("hi", hiPhrase, excludeWords = Seq(Webtext.word("hi", 30))) -> false,
       QuerySpec("hi", hiPhrase,
-        metaFilters = Map("category" -> Seq("Granth")), yearRange = Some((2020, 2020))),
-      QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2019)))),
-      QuerySpec("hi", hiPhrase, phrase = true)
-    ).foreach { q =>
+        metaFilters = Map("category" -> Seq("Granth")), yearRange = Some((2020, 2020))) -> true,
+      QuerySpec("hi", hiPhrase, dateRange = Some((Some(2019), Some(2019)))) -> true,
+      QuerySpec("hi", hiPhrase, phrase = true) -> false
+    ).foreach { case (q, filtered) =>
       val plan = assertFullParity(q)
-      // one per-chunk kernel plan: the cogroup is there, and no shuffle
-      // aggregates or joins postings per docId
-      assert(plan.exists(_.isInstanceOf[CoGroupExec]), s"$q: no cogroup in\n${plan.head}")
+      // one per-chunk kernel plan: a filtered query cogroups its facet rows
+      // in; an unfiltered one groups the segment rows alone, in exactly one
+      // exchange. No shuffle aggregates or joins postings per docId
+      val cogroup = plan.exists(_.isInstanceOf[CoGroupExec])
+      if (filtered) assert(cogroup, s"$q: no cogroup in\n${plan.head}")
+      else {
+        assert(!cogroup, s"$q: cogroup in\n${plan.head}")
+        val exchanges = plan.count(_.isInstanceOf[ShuffleExchangeExec])
+        assert(exchanges == 1, s"$q: $exchanges exchanges in\n${plan.head}")
+      }
       val bad = plan.filter(o => o.isInstanceOf[BaseJoinExec] || o.isInstanceOf[BaseAggregateExec])
       assert(bad.isEmpty, s"$q: ${bad.map(_.nodeName)} in\n${plan.head}")
     }
